@@ -1,14 +1,15 @@
 """Shared small-file IO discipline for index sidecars.
 
-Every persisted index tier (IVF flat, IVF-PQ, IVF-SQ, two-layer graph)
-keeps its root metadata in a small JSON sidecar next to the parquet
-tables — the Spark translation of the reference's bincode index root
-(src/ivf_index.rs:269-316). Sidecar REWRITES (insert/delete/compact
-bookkeeping) must be atomic: a crash mid-write would truncate the file
-and make the whole index unloadable (every loader json.load()s it
-first). The fix is the classic tmp + fsync + rename pointer swap —
-the same discipline maintenance.write_version uses for table manifests
-and the staged-swap rewrites use for data directories.
+Every persisted index tier (IVF flat, IVF-SQ, IVF-BQ, IVF-RaBitQ,
+IVF-PQ, IVF-OPQ, two-layer graph) keeps its root metadata in a small
+JSON sidecar next to the parquet tables — the Spark translation of the
+reference's bincode index root (src/ivf_index.rs:269-316). Every
+sidecar write — build, rebuild, and the insert/delete/compact
+bookkeeping rewrites — must be atomic: a crash mid-write would
+truncate the file and make the whole index unloadable (every loader
+json.load()s it first). The fix is the classic tmp + fsync + rename
+pointer swap — the same discipline maintenance.write_version uses for
+table manifests and the staged-swap rewrites use for data directories.
 """
 
 from __future__ import annotations

@@ -382,6 +382,22 @@ def bq_adc_search(
     raise ValueError(f"unknown method {method!r}")
 
 
+def _unpack_bits(codes, d: int) -> np.ndarray:
+    """A ``codes`` column of packed words → (n, d) float64 0/1 bits.
+    Each int64 word holds its 32 packed bits in the LOW half
+    (big-endian bytes 4-7), MSB-first within the word = dim order — so
+    drop the high-32 zero lanes per word before slicing the first d
+    dims."""
+    cmat = np.stack([np.asarray(c, dtype=np.int64) for c in codes])
+    n_rows, n_words = cmat.shape
+    bits64 = np.unpackbits(
+        _codes_to_bytes(cmat).astype(np.uint8), axis=1
+    ).reshape(n_rows, n_words, 64)[:, :, 32:]
+    return bits64.reshape(n_rows, n_words * WORD_BITS)[:, :d].astype(
+        np.float64
+    )
+
+
 def _bq_adc_arrow(codes_df, model, queries, k, query_id_col, query_col):
     spark = codes_df.sparkSession
     qrows = queries.select(query_id_col, query_col).collect()
@@ -389,7 +405,7 @@ def _bq_adc_arrow(codes_df, model, queries, k, query_id_col, query_col):
         return spark.createDataFrame(
             [], "query_id long, rank int, neighbor_id long, score double"
         )
-    d, n_words = model.d, model.n_words
+    d = model.d
     qids = np.array([r[0] for r in qrows], dtype=np.int64)
     qmat = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
     if qmat.shape[1] != d:
@@ -401,21 +417,7 @@ def _bq_adc_arrow(codes_df, model, queries, k, query_id_col, query_col):
         for pdf in batches:
             if pdf.empty:
                 continue
-            cmat = np.stack(
-                [np.asarray(c, dtype=np.int64) for c in pdf["codes"]]
-            )
-            # unpack to ±1: each int64 word holds its 32 packed bits in
-            # the LOW half (big-endian bytes 4-7), MSB-first within the
-            # word = dim order — so drop the high-32 zero lanes per
-            # word before slicing the first d dims
-            n_rows = cmat.shape[0]
-            bits64 = np.unpackbits(
-                _codes_to_bytes(cmat).astype(np.uint8), axis=1
-            ).reshape(n_rows, n_words, 64)[:, :, 32:]
-            cbits = bits64.reshape(n_rows, n_words * WORD_BITS)[:, :d].astype(
-                np.float64
-            )
-            signs = cbits * 2.0 - 1.0  # (n, d)
+            signs = _unpack_bits(pdf["codes"], d) * 2.0 - 1.0  # (n, d)
             ids = pdf["id"].to_numpy()
             scores = qmat_ @ signs.T  # (nq, n)
             # tie-safe local cut on negated scores: equal-score groups

@@ -22,6 +22,18 @@ At 100 TB: the only full-data passes are the k-means iterations
 (O(partitions·k·d) shuffle each, see operators.kmeans) and the final
 assigned write, which shuffles once on (shard_id, cluster_id) so each
 partition directory is written by one task.
+
+Every persisted IVF tier — flat here, IVF-SQ (operators.sq), IVF-BQ
+(operators.ivfbq), IVF-RaBitQ (operators.rabitq) and IVF-PQ
+(operators.pq, which IVF-OPQ composes over) — shares this layout. The
+layout decisions live here once: the coarse stage
+(:func:`check_build_input` + :func:`coarse_stage`), the sharded write
+(:func:`write_sharded`), the centroid table
+(:func:`write_centroids` / :func:`load_layout`), the meta sidecar
+(:func:`write_meta` / :func:`read_meta` / :func:`update_meta_count`),
+the add path (:func:`append_rows`) and the base handle
+(:class:`IvfHandle`). A tier module keeps only its quantizer: train,
+encode and the scoring kernel.
 """
 
 from __future__ import annotations
@@ -54,8 +66,10 @@ FORMAT_VERSION = 1
 
 
 @dataclass
-class IvfIndex:
-    """Handle to a persisted index: metadata + lazy table accessors."""
+class IvfHandle:
+    """The fields every persisted IVF handle carries (flat and every
+    compressed tier): metadata plus the driver-resident centroid
+    matrix that probe ranking and assignment run against."""
 
     path: str
     dimension: int
@@ -68,6 +82,52 @@ class IvfIndex:
     # relationally against the centroid table instead
     centroids: np.ndarray | None
     centroid_shards: np.ndarray | None  # (nlist,) int64 centroid→shard map
+
+    def codes_path(self) -> str:
+        return os.path.join(self.path, "codes")
+
+    def codes(self, spark: SparkSession) -> DataFrame:
+        """The compressed tiers' shard-partitioned codes table."""
+        return spark.read.parquet(self.codes_path())
+
+    def centroids_df(self, spark: SparkSession) -> DataFrame:
+        """``(centroid_id, cvec array<float>)`` built from the driver
+        matrix — the centroid frame the composable tier stages take."""
+        return spark.createDataFrame(
+            [
+                (int(i), [float(x) for x in self.centroids[i]])
+                for i in range(self.nlist)
+            ],
+            "centroid_id long, cvec array<float>",
+        )
+
+    def probe_hierarchy(self) -> tuple[np.ndarray, np.ndarray]:
+        """(meta_centroids, meta_labels) over the centroid matrix, for
+        hierarchical probe ranking at large nlist (K7 reused for
+        search). Built lazily from the persisted centroids with the
+        index's own seed — deterministic per index — and cached on the
+        handle so repeated search batches pay it once."""
+        if self.centroids is None:
+            raise ValueError(
+                "probe_hierarchy needs the centroid matrix; this handle "
+                "was loaded with lazy_centroids=True (relational probe "
+                "ranking does not use a hierarchy)"
+            )
+        if not hasattr(self, "_probe_hierarchy"):
+            from vector_indexer_spark.operators.kmeans import (  # noqa: PLC0415
+                build_centroid_hierarchy,
+            )
+
+            self._probe_hierarchy = build_centroid_hierarchy(
+                np.asarray(self.centroids, dtype=np.float64), self.seed
+            )
+        return self._probe_hierarchy
+
+
+@dataclass
+class IvfIndex(IvfHandle):
+    """Handle to a persisted flat index: metadata + lazy table accessors."""
+
     id_col: str = "id"  # column names in the persisted vector table
     vec_col: str = "values"
 
@@ -89,36 +149,15 @@ class IvfIndex:
     def centroids_df(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self.centroids_path)
 
-    def probe_hierarchy(self) -> tuple[np.ndarray, np.ndarray]:
-        """(meta_centroids, meta_labels) over the centroid matrix, for
-        hierarchical probe ranking at large nlist (K7 reused for
-        search). Built lazily from the persisted centroids with the
-        index's own seed — deterministic per index — and cached on the
-        handle so repeated search batches pay it once."""
-        if self.centroids is None:
-            raise ValueError(
-                "probe_hierarchy needs the centroid matrix; this handle "
-                "was loaded with lazy_centroids=True (relational probe "
-                "ranking does not use a hierarchy)"
-            )
-        if not hasattr(self, "_probe_hierarchy"):
-            from vector_indexer_spark.operators.kmeans import (  # noqa: PLC0415
-                build_centroid_hierarchy,
-            )
-
-            self._probe_hierarchy = build_centroid_hierarchy(
-                self.centroids, self.seed
-            )
-        return self._probe_hierarchy
-
 
 def dense_relabel_and_shards(
     counts: dict, raw_centroids: np.ndarray, seed: int
 ):
-    """P5 + super-centroid sharding, shared by the flat and PQ builders:
-    drop empty clusters, renumber densely, then k-means the surviving
-    centroids into ``num_shards`` super-clusters (derived seed,
-    reference src/ivf_index.rs:103-109, 122-146).
+    """P5 + super-centroid sharding, the step of :func:`coarse_stage`
+    every tier's build goes through: drop empty clusters, renumber
+    densely, then k-means the surviving centroids into ``num_shards``
+    super-clusters (derived seed, reference src/ivf_index.rs:103-109,
+    122-146).
 
     Returns ``(relabel, centroids, eff_nlist, n_shards, shard_of)``
     where ``relabel`` maps raw→dense cluster ids and ``shard_of[i]`` is
@@ -143,6 +182,244 @@ def dense_relabel_and_shards(
     return relabel, centroids, eff_nlist, int(n_sh), shard_of
 
 
+def check_build_input(
+    df: DataFrame, vec_col: str, dimension: int | None
+) -> tuple[int, int]:
+    """Build-input contract of every tier: non-empty (reference: an
+    empty build is an error, tests/api_tests.rs:265-271) and P1 — one
+    dimension for every record, checked before any training. Returns
+    ``(n, dimension)``; ``dimension`` defaults to the first row's."""
+    n = df.count()
+    if n == 0:
+        raise ValueError("cannot build an index from an empty DataFrame")
+    dimension = dimension or len(df.select(vec_col).first()[0])
+    bad = df.filter(F.size(vec_col) != dimension).count()
+    if bad:
+        raise ValueError(
+            f"{bad} records have dimension != {dimension} (dim validation, P1)"
+        )
+    return n, dimension
+
+
+def coarse_stage(
+    df: DataFrame,
+    path: str,
+    n: int,
+    dimension: int,
+    *,
+    vec_col: str,
+    nlist: int | None,
+    seed: int,
+    mode: str,
+    max_iters: int | None,
+) -> tuple[DataFrame, DataFrame, IvfHandle]:
+    """The coarse quantizer every tier builds on: train (K1/K2),
+    assign (J1; J2 shortlist above k=100 — the build seed drives the
+    hierarchy so training and final assignment agree), then P5 dense
+    renumber + super-centroid sharding (driver-side: the cluster set
+    is ≈4√n rows).
+
+    Returns ``(assigned, dense, handle)``: ``assigned`` is the cached
+    raw assignment — it is consumed twice (counts collect + the tier's
+    write), so the full-table assignment pass runs once; unpersist it
+    after the write. ``dense`` is every input column plus the dense
+    ``cluster_id`` and its ``shard_id``. ``handle`` carries the eight
+    base fields."""
+    spark = df.sparkSession
+    model = kmeans_fit(
+        df,
+        nlist or suggest_nlist(n),
+        vec_col=vec_col,
+        max_iters=max_iters or calculate_max_iterations(n),
+        seed=seed,
+        mode=mode,
+    )
+    assigned = assign_clusters(
+        df, model.centroids, vec_col=vec_col, out_col="__raw_cluster", seed=seed
+    ).cache()
+    counts = {
+        r["__raw_cluster"]: r["cnt"]
+        for r in assigned.groupBy("__raw_cluster").agg(F.count("*").alias("cnt")).collect()
+    }
+    relabel, centroids, eff_nlist, n_sh, shard_of = dense_relabel_and_shards(
+        counts, model.centroids, seed
+    )
+    mapping = spark.createDataFrame(
+        [(int(old), int(new), int(shard_of[new])) for old, new in relabel.items()],
+        "__raw_cluster long, cluster_id long, shard_id long",
+    )
+    dense = assigned.join(F.broadcast(mapping), "__raw_cluster").drop(
+        "__raw_cluster"
+    )
+    handle = IvfHandle(
+        path=path,
+        dimension=dimension,
+        nlist=eff_nlist,
+        n_shards=n_sh,
+        seed=seed,
+        n_vectors=n,
+        centroids=centroids,
+        centroid_shards=shard_of,
+    )
+    return assigned, dense, handle
+
+
+def attach_shards(df: DataFrame, index: IvfHandle) -> DataFrame:
+    """Append each row's ``shard_id`` from its ``cluster_id`` through
+    the index's centroid→shard map (an nlist-row broadcast)."""
+    shard_map = df.sparkSession.createDataFrame(
+        [(int(c), int(s)) for c, s in enumerate(index.centroid_shards)],
+        "cluster_id long, shard_id long",
+    )
+    return df.join(F.broadcast(shard_map), "cluster_id").select(
+        *df.columns, "shard_id"
+    )
+
+
+def write_sharded(df: DataFrame, path: str, mode: str) -> None:
+    """S7 — the one physical layout of every IVF row table (vectors or
+    codes; builds, adds, rewrites and the streaming sink): one shuffle
+    on the shard key, then partitioned write with rows sorted by
+    cluster_id inside each shard file. This mirrors the reference
+    layout exactly (one shard file containing cluster blocks + a
+    per-cluster byte-range index, src/shards.rs:68-177): Hive pruning
+    skips whole shards, and the cluster_id sort gives parquet
+    row-group min/max stats that skip non-probed clusters inside a
+    shard. A cluster_id-level directory layout would create nlist≈4√n
+    tiny dirs — file-listing overhead dominates long before 100 TB."""
+    (
+        df.repartition("shard_id")
+        .sortWithinPartitions("shard_id", "cluster_id")
+        .write.mode(mode)
+        .partitionBy("shard_id")
+        .parquet(path)
+    )
+
+
+def write_centroids(
+    spark: SparkSession,
+    path: str,
+    vec_col: str,
+    centroids: np.ndarray,
+    shard_of: np.ndarray,
+    rhos: np.ndarray | None = None,
+) -> None:
+    """S5 — the nlist-row ``centroids`` table, one file:
+    ``(centroid_id, <vec_col> array<float>, shard_id[, rho double])``.
+    The flat and PQ tiers name the vector column ``vector``, the SQ,
+    BQ and RaBitQ tiers ``cvec``; only IVF-BQ stores its per-cluster
+    ``rho`` scales here."""
+    rows = [
+        (int(i), [float(x) for x in centroids[i]], int(shard_of[i]))
+        for i in range(len(centroids))
+    ]
+    schema = f"centroid_id long, {vec_col} array<float>, shard_id long"
+    if rhos is not None:
+        rows = [(*r, float(rho)) for r, rho in zip(rows, rhos)]
+        schema += ", rho double"
+    spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(os.path.join(path, "centroids"))
+
+
+def write_meta(path: str, name: str, meta: dict) -> None:
+    """S5 — the JSON meta sidecar, always through
+    :func:`~vector_indexer_spark.ioutil.atomic_write_json`: a crash
+    mid-rebuild leaves the previous sidecar loadable."""
+    os.makedirs(path, exist_ok=True)
+    atomic_write_json(os.path.join(path, name), meta)
+
+
+def handle_meta(handle: IvfHandle, version: int, kind: str | None) -> dict:
+    """The base-handle keys of a meta sidecar, in their on-disk order
+    (tiers append their own keys; flat carries no ``kind``)."""
+    return {
+        "version": version,
+        **({} if kind is None else {"kind": kind}),
+        "dimension": handle.dimension,
+        "nlist": handle.nlist,
+        "n_shards": handle.n_shards,
+        "seed": handle.seed,
+        "n_vectors": handle.n_vectors,
+    }
+
+
+def read_meta(path: str, name: str, version: int, label: str) -> dict:
+    """S6 — read a meta sidecar with the version check."""
+    meta_path = os.path.join(path, name)
+    if not os.path.exists(meta_path):
+        raise FileNotFoundError(
+            f"no {label} index at {path!r} (missing {name})"
+        )  # api_tests.rs:252-262
+    with open(meta_path) as f:
+        meta = json.load(f)
+    if meta.get("version") != version:
+        raise ValueError(f"unsupported {label} version {meta.get('version')!r}")
+    return meta
+
+
+def load_layout(
+    spark: SparkSession,
+    path: str,
+    meta: dict,
+    vec_col: str,
+    with_centroids: bool = True,
+) -> tuple[dict, list]:
+    """S6 — the base-handle fields of a persisted index from its meta
+    and centroid table. Returns ``(fields, centroid_rows)``; the rows
+    let a tier read its own extra centroid columns (IVF-BQ's ``rho``).
+    ``with_centroids=False`` leaves the matrix unread (lazy handle)."""
+    fields = {
+        k: meta[k] for k in ("dimension", "nlist", "n_shards", "seed", "n_vectors")
+    }
+    fields.update(path=path, centroids=None, centroid_shards=None)
+    rows = []
+    if with_centroids:
+        rows = (
+            spark.read.parquet(os.path.join(path, "centroids"))
+            .orderBy("centroid_id")
+            .collect()
+        )
+        fields["centroids"] = np.array(
+            [r[vec_col] for r in rows], dtype=np.float64
+        )
+        fields["centroid_shards"] = np.array(
+            [r["shard_id"] for r in rows], dtype=np.int64
+        )
+    return fields, rows
+
+
+def update_meta_count(index: IvfHandle, name: str, update) -> int:
+    """Rewrite the sidecar's ``n_vectors`` as ``update(recorded)``
+    (atomically) and mirror it on the handle. Returns the previously
+    recorded count."""
+    meta_path = os.path.join(index.path, name)
+    with open(meta_path) as f:
+        meta = json.load(f)
+    recorded = int(meta["n_vectors"])
+    meta["n_vectors"] = update(recorded)
+    atomic_write_json(meta_path, meta)
+    index.n_vectors = meta["n_vectors"]
+    return recorded
+
+
+def collect_centroids(
+    centroids: DataFrame, id_col: str, vec_col: str
+) -> tuple[np.ndarray, np.ndarray]:
+    """Collect a (possibly id-restricted) centroid frame into a dense
+    id-indexed float64 matrix plus a ``present`` mask: absent ids stay
+    zero-filled rows that callers must bar from ranking and
+    encoding."""
+    rows = centroids.select(id_col, vec_col).collect()
+    nlist = 1 + max(r[0] for r in rows)
+    cents = np.zeros((nlist, len(rows[0][1])), dtype=np.float64)
+    present = np.zeros(nlist, dtype=bool)
+    for r in rows:
+        cents[r[0]] = np.asarray(r[1], dtype=np.float64)
+        present[r[0]] = True
+    return cents, present
+
+
 def build_index(
     df: DataFrame,
     path: str,
@@ -162,104 +439,21 @@ def build_index(
     vector table as payload (the reference carries external_id + ts,
     src/shards.rs:139-144).
     """
-    spark = df.sparkSession
-    n = df.count()
-    if n == 0:
-        # reference: empty build is an error (tests/api_tests.rs:265-271)
-        raise ValueError("cannot build an index from an empty DataFrame")
-
-    dimension = dimension or len(df.select(vec_col).first()[0])
-    # P1 — dimension validation, fail fast before any training
-    bad = df.filter(F.size(vec_col) != dimension).count()
-    if bad:
-        raise ValueError(
-            f"{bad} records have dimension != {dimension} (dim validation, P1)"
-        )
-
-    nlist = nlist or suggest_nlist(n)
-    max_iters = max_iters or calculate_max_iterations(n)
-
-    # 1. train (K1/K2) and assign (J1; J2 shortlist above k=100 — the
-    # build seed drives the hierarchy so training and final assignment
-    # agree). The assigned frame is consumed twice (counts collect +
-    # partitioned write) — cache it so the full-table assignment pass
-    # runs once.
-    model = kmeans_fit(
-        df, nlist, vec_col=vec_col, max_iters=max_iters, seed=seed, mode=mode
+    n, dimension = check_build_input(df, vec_col, dimension)
+    assigned, dense, base = coarse_stage(
+        df, path, n, dimension, vec_col=vec_col, nlist=nlist, seed=seed,
+        mode=mode, max_iters=max_iters,
     )
-    assigned = assign_clusters(
-        df, model.centroids, vec_col=vec_col, out_col="__raw_cluster", seed=seed
-    ).cache()
-
-    # 2.+3. P5 dense renumber + super-centroid sharding (driver-side:
-    # the cluster set is ≈4√n rows)
-    counts = {
-        r["__raw_cluster"]: r["cnt"]
-        for r in assigned.groupBy("__raw_cluster").agg(F.count("*").alias("cnt")).collect()
-    }
-    relabel, centroids, eff_nlist, n_sh, shard_of = dense_relabel_and_shards(
-        counts, model.centroids, seed
-    )
-
-    # 4. S7 — one shuffle on the shard key, then partitioned write with
-    # rows sorted by cluster_id inside each shard file. This mirrors
-    # the reference layout exactly (one shard file containing cluster
-    # blocks + a per-cluster byte-range index, src/shards.rs:68-177):
-    # Hive pruning skips whole shards, and the cluster_id sort gives
-    # parquet row-group min/max stats that skip non-probed clusters
-    # inside a shard. A cluster_id-level directory layout would create
-    # nlist≈4√n tiny dirs — file-listing overhead dominates long before
-    # 100 TB.
-    mapping = spark.createDataFrame(
-        [(int(old), int(new), int(shard_of[new])) for old, new in relabel.items()],
-        "__raw_cluster long, cluster_id long, shard_id long",
-    )
-    out = (
-        assigned.join(F.broadcast(mapping), "__raw_cluster")
-        .drop("__raw_cluster")
-        .repartition("shard_id")
-        .sortWithinPartitions("shard_id", "cluster_id")
-    )
-    out.write.mode("overwrite").partitionBy("shard_id").parquet(
-        os.path.join(path, "vectors")
-    )
+    write_sharded(dense, os.path.join(path, "vectors"), "overwrite")
     assigned.unpersist()
-
-    # 5. S5 — centroid table + JSON meta sidecar
-    cent_rows = [
-        (int(i), [float(x) for x in centroids[i]], int(shard_of[i]))
-        for i in range(eff_nlist)
-    ]
-    spark.createDataFrame(
-        cent_rows, "centroid_id long, vector array<float>, shard_id long"
-    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "centroids"))
-
-    meta = {
-        "version": FORMAT_VERSION,
-        "dimension": dimension,
-        "nlist": eff_nlist,
-        "n_shards": int(n_sh),
-        "seed": seed,
-        "n_vectors": n,
-        "id_col": id_col,
-        "vec_col": vec_col,
-    }
-    os.makedirs(path, exist_ok=True)
-    with open(os.path.join(path, "meta.json"), "w") as f:
-        json.dump(meta, f, indent=2)
-
-    return IvfIndex(
-        path=path,
-        dimension=dimension,
-        nlist=eff_nlist,
-        n_shards=int(n_sh),
-        seed=seed,
-        n_vectors=n,
-        centroids=centroids,
-        centroid_shards=shard_of,
-        id_col=id_col,
-        vec_col=vec_col,
+    write_centroids(
+        df.sparkSession, path, "vector", base.centroids, base.centroid_shards
     )
+    index = IvfIndex(**vars(base), id_col=id_col, vec_col=vec_col)
+    meta = handle_meta(index, FORMAT_VERSION, None)
+    meta.update(id_col=id_col, vec_col=vec_col)
+    write_meta(path, "meta.json", meta)
+    return index
 
 
 def load_index(
@@ -277,34 +471,12 @@ def load_index(
     genuinely need the matrix (streaming ingest assignment, PQ/SQ
     search, arrow kNN-style scoring) require an eager load.
     """
-    meta_path = os.path.join(path, "meta.json")
-    if not os.path.exists(meta_path):
-        raise FileNotFoundError(
-            f"no index at {path!r} (missing meta.json)"
-        )  # api_tests.rs:252-262
-    with open(meta_path) as f:
-        meta = json.load(f)
-    if meta.get("version") != FORMAT_VERSION:
-        raise ValueError(f"unsupported index version {meta.get('version')!r}")
-    if lazy_centroids:
-        centroids = shards = None
-    else:
-        cent = (
-            spark.read.parquet(os.path.join(path, "centroids"))
-            .orderBy("centroid_id")
-            .collect()
-        )
-        centroids = np.array([r["vector"] for r in cent], dtype=np.float64)
-        shards = np.array([r["shard_id"] for r in cent], dtype=np.int64)
+    meta = read_meta(path, "meta.json", FORMAT_VERSION, "IVF")
+    fields, _ = load_layout(
+        spark, path, meta, "vector", with_centroids=not lazy_centroids
+    )
     return IvfIndex(
-        path=path,
-        dimension=meta["dimension"],
-        nlist=meta["nlist"],
-        n_shards=meta["n_shards"],
-        seed=meta["seed"],
-        n_vectors=meta["n_vectors"],
-        centroids=centroids,
-        centroid_shards=shards,
+        **fields,
         id_col=meta.get("id_col", "id"),
         vec_col=meta.get("vec_col", "values"),
     )
@@ -363,13 +535,7 @@ def _staged_rewrite(
             # os.rename(src, backup) below (non-empty dir target)
             shutil.rmtree(backup)
     n_before = spark.read.parquet(src).count()
-    (
-        df.repartition("shard_id")
-        .sortWithinPartitions("shard_id", "cluster_id")
-        .write.mode("overwrite")
-        .partitionBy("shard_id")
-        .parquet(staging)
-    )
+    write_sharded(df, staging, "overwrite")
     n_after = spark.read.parquet(staging).count()
     try:
         validate(n_before, n_after)
@@ -476,9 +642,9 @@ def validate_add_batch(
     dimension: int,
     existing_ids: DataFrame | None,
 ) -> int:
-    """Shared add-batch contract for every index tier (flat / IVF-PQ /
-    IVF-SQ): non-empty, P1 dimension check, unique ids within the
-    batch, and (when ``existing_ids`` is given) no collision with ids
+    """Shared add-batch contract for every index tier that takes adds
+    (flat, IVF-SQ and IVF-PQ, through :func:`append_rows`): non-empty,
+    P1 dimension check, unique ids within the batch, and (when ``existing_ids`` is given) no collision with ids
     already in the index — that last check is a column-pruned scan of
     the live table; at warehouse scale pass ``None`` and enforce
     uniqueness upstream. Returns the batch row count."""
@@ -502,6 +668,51 @@ def validate_add_batch(
         ).count()
         if n_dup:
             raise ValueError(f"{n_dup} ids already present in the index")
+    return n_new
+
+
+def append_rows(
+    spark: SparkSession,
+    index: IvfHandle,
+    batch: DataFrame,
+    table: str,
+    meta_name: str,
+    *,
+    id_col: str,
+    vec_col: str,
+    check_duplicate_ids: bool,
+    encode,
+) -> int:
+    """The add path every tier shares: :func:`validate_add_batch` →
+    assign to the FROZEN centroids (:func:`assign_clusters`, J1 exact
+    / J2 hierarchical above the same threshold as build, same seed —
+    an added row lands in exactly the cluster a from-scratch build
+    with these centroids would put it in, so search pruning stays
+    correct by construction) → the tier's ``encode`` (identity for
+    flat) → shard routing → sharded append to ``table`` → meta count
+    bump. One shuffle of the NEW batch only; the live table is never
+    read (beyond the optional duplicate-id scan) or rewritten. Returns
+    the number of rows added."""
+    n_new = validate_add_batch(
+        batch,
+        id_col=id_col,
+        vec_col=vec_col,
+        dimension=index.dimension,
+        existing_ids=(
+            spark.read.parquet(table).select(id_col)
+            if check_duplicate_ids
+            else None
+        ),
+    )
+    assigned = assign_clusters(
+        batch,
+        index.centroids,
+        vec_col=vec_col,
+        out_col="cluster_id",
+        seed=index.seed,
+    )
+    write_sharded(attach_shards(encode(assigned), index), table, "append")
+    update_meta_count(index, meta_name, lambda n: n + n_new)
     return n_new
 
 
@@ -554,36 +765,17 @@ def add_vectors(
     missing = set(live_cols) - set(df.columns)
     if missing:
         raise ValueError(f"batch is missing index columns: {sorted(missing)}")
-    n_new = validate_add_batch(
-        df,
+    n_new = append_rows(
+        spark,
+        index,
+        df.select(*live_cols),
+        index.vectors_path,
+        "meta.json",
         id_col=id_col,
         vec_col=vec_col,
-        dimension=index.dimension,
-        existing_ids=(
-            spark.read.parquet(index.vectors_path).select(id_col)
-            if check_duplicate_ids
-            else None
-        ),
+        check_duplicate_ids=check_duplicate_ids,
+        encode=lambda assigned: assigned,
     )
-
-    from vector_indexer_spark.streaming.ingest import (  # noqa: PLC0415
-        assign_and_shard,  # circular: ingest imports IvfIndex from here
-    )
-
-    (
-        assign_and_shard(df.select(*live_cols), index)
-        .repartition("shard_id")
-        .sortWithinPartitions("shard_id", "cluster_id")
-        .write.mode("append")
-        .partitionBy("shard_id")
-        .parquet(index.vectors_path)
-    )
-
-    with open(index.meta_path) as f:
-        meta = json.load(f)
-    meta["n_vectors"] = int(meta["n_vectors"]) + n_new
-    atomic_write_json(index.meta_path, meta)
-    index.n_vectors = meta["n_vectors"]
     return {
         "n_added": n_new,
         "n_vectors": index.n_vectors,
@@ -602,13 +794,8 @@ def refresh_meta_count(spark: SparkSession, index: IvfIndex) -> dict:
     ``{n_vectors, drift}`` where drift = actual − previously recorded.
     """
     actual = spark.read.parquet(index.vectors_path).count()
-    with open(index.meta_path) as f:
-        meta = json.load(f)
-    drift = actual - int(meta["n_vectors"])
-    meta["n_vectors"] = actual
-    atomic_write_json(index.meta_path, meta)
-    index.n_vectors = actual
-    return {"n_vectors": actual, "drift": drift}
+    recorded = update_meta_count(index, "meta.json", lambda _: actual)
+    return {"n_vectors": actual, "drift": actual - recorded}
 
 
 def merge_indexes(

@@ -39,6 +39,7 @@ tier extends it like SQ/PQ do, same result contract (ties by id).
 
 from __future__ import annotations
 
+from dataclasses import dataclass
 from typing import Iterator
 
 import numpy as np
@@ -49,8 +50,25 @@ from pyspark.sql import functions as F
 from vector_indexer_spark.functions.kernels import topk_per_row
 from vector_indexer_spark.operators.bq import (
     WORD_BITS,
-    _codes_to_bytes,
+    _unpack_bits,
     hamming_expr,
+)
+from vector_indexer_spark.operators.index_build import (
+    IvfHandle,
+    attach_shards,
+    check_build_input,
+    coarse_stage,
+    handle_meta,
+    load_layout,
+    read_meta,
+    write_centroids,
+    write_meta,
+    write_sharded,
+)
+from vector_indexer_spark.operators.search import (
+    rank_winners,
+    search_frames,
+    search_persisted,
 )
 
 __all__ = [
@@ -247,8 +265,15 @@ def ivfbq_search(
     if method == "arrow":
         if scoring != "adc":
             raise ValueError("arrow path implements adc scoring only")
-        return _ivfbq_adc_arrow(
-            codes_df, centroids, queries, scales, k, n_probe,
+
+        def score(pruned, plan, cents):
+            rhov = np.zeros(len(cents), dtype=np.float64)
+            for r in scales.select("cluster_id", "rho").collect():
+                rhov[r[0]] = float(r[1])
+            return _ivfbq_adc_score(pruned, plan, cents, rhov, k)
+
+        return search_frames(
+            codes_df, centroids, queries, n_probe, "adist2", score,
             query_id_col, query_col, centroid_id_col, centroid_vec_col,
         )
     if method != "native":
@@ -321,92 +346,31 @@ def ivfbq_search(
     )
 
 
-def _ivfbq_adc_arrow(
-    codes_df, centroids, queries, scales, k, n_probe,
-    query_id_col, query_col, centroid_id_col, centroid_vec_col,
-):
-    spark = codes_df.sparkSession
-    qrows = queries.select(query_id_col, query_col).collect()
-    if not qrows:
-        return spark.createDataFrame(
-            [], "query_id long, rank int, neighbor_id long, adist2 double"
-        )
-    qids = np.asarray([r[0] for r in qrows], dtype=np.int64)
-    qmat = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
-    d = qmat.shape[1]
-    n_words = (d + WORD_BITS - 1) // WORD_BITS
-    crows = centroids.select(centroid_id_col, centroid_vec_col).collect()
-    nlist = 1 + max(r[0] for r in crows)
-    cents = np.zeros((nlist, d), dtype=np.float64)
-    present = np.zeros(nlist, dtype=bool)
-    for r in crows:
-        cents[r[0]] = np.asarray(r[1], dtype=np.float64)
-        present[r[0]] = True
-    rhov = np.zeros(nlist, dtype=np.float64)
-    for r in scales.select("cluster_id", "rho").collect():
-        rhov[r[0]] = float(r[1])
-    # driver probe ranking — the centroid matrix is driver-resident by
-    # contract (same as rank_probes / the IVF-SQ arrow path)
-    d2c = (
-        np.einsum("ij,ij->i", qmat, qmat)[:, None]
-        - 2.0 * (qmat @ cents.T)
-        + np.einsum("ij,ij->i", cents, cents)[None, :]
-    )
-    # a RESTRICTED centroid table (search_ivfbq_index masks to the
-    # scanned clusters) leaves zero-filled rows for absent ids — bar
-    # them from probe ranking or a phantom zero-vector could outrank a
-    # real centroid
-    d2c[:, ~present] = np.inf
-    n_pick = min(n_probe, int(present.sum()))
-    order = np.argsort(d2c, axis=1, kind="stable")[:, :n_pick]
-    pmask = np.zeros((len(qids), nlist), dtype=bool)
-    np.put_along_axis(pmask, order, True, axis=1)
-    # J4 pruning, twice: a literal IN predicate on the probed-cluster
-    # UNION prunes the scan (partition/row-group pushdown on a
-    # persisted codes table), and the same union mask drops stragglers
-    # inside each Arrow batch BEFORE the unpack+GEMM — without this the
-    # kernel decoded and scored every row of every partition (measured
-    # 16.7 s → pruned cost at 1M, synth workload probing ~6% of rows)
-    probed_union = np.flatnonzero(pmask.any(axis=0))
-    codes_df = codes_df.where(
-        F.col("cluster_id").isin([int(c) for c in probed_union])
-    )
-    union_mask = pmask.any(axis=0)
-    # per-cluster probing-query index: each cluster's code block is
-    # scored against ONLY the queries that probe it (a masked
-    # all-queries GEMM scored every query against every partition row
-    # and discarded the misses — measured 4.29 s vs 1.30 s for the
-    # per-cluster shape at 1M×128, 256 localized queries / 16 probes)
-    qprobe = {
-        int(c): np.flatnonzero(pmask[:, c]) for c in probed_union
+def _ivfbq_adc_score(codes_df, plan, cents, rhov, k):
+    """Arrow residual 1-bit ADC over a pruned codes scan: each Arrow
+    batch decodes to a ±1 matrix, and each cluster's code block is
+    scored against ONLY the queries that probe it (a masked
+    all-queries GEMM scored every query against every partition row
+    and discarded the misses — measured 4.29 s vs 1.30 s for the
+    per-cluster shape at 1M×128, 256 localized queries / 16 probes),
+    local top-k map-side, winners-only window rank. The ``|q−c|²``
+    term is the plan's own probe distance."""
+    d = plan.qmat.shape[1]
+    # per-cluster |q−c|² of its probing queries, aligned with qprobe
+    qd2 = {
+        c: plan.probe_d2[qidx, np.argmax(plan.probe_ids[qidx] == c, axis=1)]
+        for c, qidx in plan.qprobe.items()
     }
-    bc = spark.sparkContext.broadcast(
-        (qids, qmat, cents, qprobe, d2c, rhov, union_mask)
+    bc = codes_df.sparkSession.sparkContext.broadcast(
+        (plan.qids, plan.qmat, cents, plan.qprobe, qd2, rhov)
     )
 
     def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids_, qmat_, cents_, qprobe_, d2c_, rhov_, umask_ = bc.value
+        qids_, qmat_, cents_, qprobe_, qd2_, rhov_ = bc.value
         for pdf in batches:
             if pdf.empty:
                 continue
-            keep_rows = umask_[pdf["cluster_id"].to_numpy()]
-            if not keep_rows.any():
-                continue
-            if not keep_rows.all():
-                pdf = pdf.iloc[np.flatnonzero(keep_rows)]
-            cmat = np.stack(
-                [np.asarray(c, dtype=np.int64) for c in pdf["codes"]]
-            )
-            n_rows = cmat.shape[0]
-            bits64 = np.unpackbits(
-                _codes_to_bytes(cmat).astype(np.uint8), axis=1
-            ).reshape(n_rows, n_words, 64)[:, :, 32:]
-            signs = (
-                bits64.reshape(n_rows, n_words * WORD_BITS)[:, :d]
-                .astype(np.float64)
-                * 2.0
-                - 1.0
-            )
+            signs = _unpack_bits(pdf["codes"], d) * 2.0 - 1.0
             cl = pdf["cluster_id"].to_numpy()
             ids = pdf["id"].to_numpy()
             # raw = (q − c)·signs_row; adist2 = |q−c|² − 2ρ·raw + d·ρ²
@@ -418,7 +382,7 @@ def _ivfbq_adc_arrow(
                 raw = (qmat_[qidx] - cents_[c][None, :]) @ signs[rows].T
                 rho = rhov_[c]
                 adist2 = (
-                    d2c_[qidx, c][:, None]
+                    qd2_[int(c)][:, None]
                     - 2.0 * rho * raw
                     + d * rho * rho
                 )
@@ -439,12 +403,7 @@ def _ivfbq_adc_arrow(
     local = codes_df.select("id", "cluster_id", "codes").mapInPandas(
         local_topk, "query_id long, neighbor_id long, adist2 double"
     )
-    w = Window.partitionBy("query_id").orderBy("adist2", "neighbor_id")
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "adist2")
-    )
+    return rank_winners(local, k, "adist2")
 
 
 def ivfbq_search_refined(
@@ -505,38 +464,13 @@ def ivfbq_search_refined(
 # IVF-PQ indexes, at d/8 bytes per vector.
 # ---------------------------------------------------------------------------
 
-import json as _json
-import os as _os
-from dataclasses import dataclass as _dataclass
-
-from vector_indexer_spark.ioutil import atomic_write_json
-
 IVFBQ_FORMAT_VERSION = 1
+_META = "ivfbq_meta.json"
 
 
-@_dataclass
-class IvfBqIndex:
-    path: str
-    dimension: int
-    nlist: int
-    n_shards: int
-    seed: int
-    n_vectors: int
-    centroids: object  # (nlist, d) float64 ndarray
-    centroid_shards: object  # (nlist,) int64 ndarray
+@dataclass
+class IvfBqIndex(IvfHandle):
     rhos: object  # (nlist,) float64 ndarray — per-cluster ADC scales
-
-    def codes(self, spark) -> DataFrame:
-        return spark.read.parquet(_os.path.join(self.path, "codes"))
-
-    def centroids_df(self, spark) -> DataFrame:
-        return spark.createDataFrame(
-            [
-                (int(i), [float(x) for x in self.centroids[i]])
-                for i in range(self.nlist)
-            ],
-            "centroid_id long, cvec array<float>",
-        )
 
     def scales_df(self, spark) -> DataFrame:
         return spark.createDataFrame(
@@ -562,150 +496,46 @@ def build_ivfbq_index(
     cluster-sorted codes write. ~d/8 bytes per vector on disk; the
     query-time scan Hive-prunes to probed shards exactly like the
     other tiers."""
-    from vector_indexer_spark.config import (  # noqa: PLC0415
-        calculate_max_iterations,
-        suggest_nlist,
+    n, dimension = check_build_input(df, vec_col, None)
+    assigned, dense, base = coarse_stage(
+        df, path, n, dimension, vec_col=vec_col, nlist=nlist, seed=seed,
+        mode=mode, max_iters=max_iters,
     )
-    from vector_indexer_spark.operators.index_build import (  # noqa: PLC0415
-        dense_relabel_and_shards,
+    # signs and scales are taken against the float32 centroids the
+    # table stores, so the handle holds exactly what a reload would read
+    base.centroids = base.centroids.astype(np.float32).astype(np.float64)
+    dense = dense.select(
+        F.col(id_col).alias("id"), F.col(vec_col).alias("__vec"), "cluster_id"
     )
-    from vector_indexer_spark.operators.kmeans import (  # noqa: PLC0415
-        assign_clusters,
-        kmeans_fit,
-    )
-
-    spark = df.sparkSession
-    n = df.count()
-    if n == 0:
-        raise ValueError("cannot build an index from an empty DataFrame")
-    dimension = len(df.select(vec_col).first()[0])
-    bad = df.filter(F.size(vec_col) != dimension).count()
-    if bad:
-        raise ValueError(f"{bad} records have dimension != {dimension}")
-
-    nlist = nlist or suggest_nlist(n)
-    max_iters = max_iters or calculate_max_iterations(n)
-    model = kmeans_fit(
-        df, nlist, vec_col=vec_col, max_iters=max_iters, seed=seed, mode=mode
-    )
-    assigned = assign_clusters(
-        df, model.centroids, vec_col=vec_col, out_col="__raw_cluster",
-        seed=seed,
-    ).cache()
-    counts = {
-        r["__raw_cluster"]: r["cnt"]
-        for r in assigned.groupBy("__raw_cluster")
-        .agg(F.count("*").alias("cnt"))
-        .collect()
+    cents_df = base.centroids_df(df.sparkSession)
+    rho_rows = {
+        r.cluster_id: float(r.rho)
+        for r in ivfbq_train_scales(dense, cents_df, vec_col="__vec").collect()
     }
-    relabel, centroids, eff_nlist, n_sh, shard_of = dense_relabel_and_shards(
-        counts, model.centroids, seed
-    )
-    mapping = spark.createDataFrame(
-        [
-            (int(old), int(new), int(shard_of[new]))
-            for old, new in relabel.items()
-        ],
-        "__raw_cluster long, cluster_id long, shard_id long",
-    )
-    dense = assigned.join(F.broadcast(mapping), "__raw_cluster").select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("__vec"),
-        "cluster_id",
-        "shard_id",
-    )
-    cents_df = spark.createDataFrame(
-        [
-            (int(i), [float(x) for x in centroids[i]])
-            for i in range(eff_nlist)
-        ],
-        "centroid_id long, cvec array<float>",
-    )
-    scales = ivfbq_train_scales(dense, cents_df, vec_col="__vec")
-    rho_rows = {r.cluster_id: float(r.rho) for r in scales.collect()}
     rhos = np.array(
-        [rho_rows.get(i, 0.0) for i in range(eff_nlist)], dtype=np.float64
+        [rho_rows.get(i, 0.0) for i in range(base.nlist)], dtype=np.float64
     )
-    codes = ivfbq_encode(
-        dense, cents_df, id_col="id", vec_col="__vec"
-    ).join(
-        F.broadcast(mapping.select("cluster_id", "shard_id").distinct()),
-        "cluster_id",
-    )
-    (
-        codes.repartition("shard_id")
-        .sortWithinPartitions("shard_id", "cluster_id")
-        .write.mode("overwrite")
-        .partitionBy("shard_id")
-        .parquet(_os.path.join(path, "codes"))
+    write_sharded(
+        attach_shards(
+            ivfbq_encode(dense, cents_df, id_col="id", vec_col="__vec"), base
+        ),
+        base.codes_path(),
+        "overwrite",
     )
     assigned.unpersist()
-    spark.createDataFrame(
-        [
-            (
-                int(i),
-                [float(x) for x in centroids[i]],
-                int(shard_of[i]),
-                float(rhos[i]),
-            )
-            for i in range(eff_nlist)
-        ],
-        "centroid_id long, cvec array<float>, shard_id long, rho double",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        _os.path.join(path, "centroids")
+    write_centroids(
+        df.sparkSession, path, "cvec", base.centroids, base.centroid_shards,
+        rhos,
     )
-    atomic_write_json(
-        _os.path.join(path, "ivfbq_meta.json"),
-        {
-            "version": IVFBQ_FORMAT_VERSION,
-            "kind": "ivfbq",
-            "dimension": dimension,
-            "nlist": eff_nlist,
-            "n_shards": n_sh,
-            "seed": seed,
-            "n_vectors": n,
-        },
-    )
-    return IvfBqIndex(
-        path=path,
-        dimension=dimension,
-        nlist=eff_nlist,
-        n_shards=n_sh,
-        seed=seed,
-        n_vectors=n,
-        centroids=centroids,
-        centroid_shards=shard_of,
-        rhos=rhos,
-    )
+    write_meta(path, _META, handle_meta(base, IVFBQ_FORMAT_VERSION, "ivfbq"))
+    return IvfBqIndex(**vars(base), rhos=rhos)
 
 
 def load_ivfbq_index(spark, path: str) -> IvfBqIndex:
-    meta_path = _os.path.join(path, "ivfbq_meta.json")
-    if not _os.path.exists(meta_path):
-        raise FileNotFoundError(f"no IVF-BQ index at {path}")
-    with open(meta_path) as fh:
-        meta = _json.load(fh)
-    if meta.get("version") != IVFBQ_FORMAT_VERSION:
-        raise ValueError(
-            f"unsupported IVF-BQ version {meta.get('version')!r}"
-        )
-    rows = (
-        spark.read.parquet(_os.path.join(path, "centroids"))
-        .orderBy("centroid_id")
-        .collect()
-    )
+    meta = read_meta(path, _META, IVFBQ_FORMAT_VERSION, "IVF-BQ")
+    fields, rows = load_layout(spark, path, meta, "cvec")
     return IvfBqIndex(
-        path=path,
-        dimension=meta["dimension"],
-        nlist=meta["nlist"],
-        n_shards=meta["n_shards"],
-        seed=meta["seed"],
-        n_vectors=meta["n_vectors"],
-        centroids=np.asarray([r.cvec for r in rows], dtype=np.float64),
-        centroid_shards=np.asarray(
-            [r.shard_id for r in rows], dtype=np.int64
-        ),
-        rhos=np.asarray([r.rho for r in rows], dtype=np.float64),
+        **fields, rhos=np.asarray([r.rho for r in rows], dtype=np.float64)
     )
 
 
@@ -722,67 +552,47 @@ def search_ivfbq_index(
     query_col: str = "query",
     codes: DataFrame | None = None,
 ) -> DataFrame:
-    """Pruned search against the persisted index: probe ranking on the
-    driver-resident centroid matrix → literal shard/cluster predicates
+    """Pruned search against the persisted index: one driver probe plan
+    on the resident centroid matrix → literal shard/cluster predicates
     (Hive partition pruning + row-group stats on the cluster-sorted
-    layout) → :func:`ivfbq_search` over only the scanned clusters.
+    layout) → the tier scorer over only the scanned clusters.
 
     ``method`` defaults by ``scoring``: the arrow GEMM kernel for adc,
     the codegen path for hamming (the arrow path implements adc only).
-    The inner search is restricted to the clusters the pruned scan
-    actually read, so at ``nlist >= _HIER_PROBE_NLIST`` (where the
-    outer probe set is the approximate hierarchical one) pruning and
-    scoring always agree — no cluster is scored that was not scanned,
-    and none is scanned but silently unscorable."""
-    if k <= 0 or n_probe <= 0:
-        raise ValueError("k and n_probe must be positive")  # P3
+    The arrow kernel scores each query against exactly its own probe
+    list, so at ``nlist >= _HIER_PROBE_NLIST`` (where that list is the
+    approximate hierarchical one) pruning and scoring always agree.
+    The native path hands :func:`ivfbq_search` the centroid table
+    restricted to the scanned clusters, so it too never scores a
+    cluster that was not scanned."""
     if method is None:
         method = "arrow" if scoring == "adc" else "native"
-    from vector_indexer_spark.operators.search import (  # noqa: PLC0415
-        _HIER_PROBE_NLIST,
-        probe_hierarchy_for,
-        rank_probes,
-    )
 
-    probes = rank_probes(
-        queries,
-        index.centroids,
-        index.centroid_shards,
-        min(n_probe, index.nlist),
-        query_id_col=query_id_col,
-        query_col=query_col,
-        hierarchy=(
-            probe_hierarchy_for(index)
-            if index.nlist >= _HIER_PROBE_NLIST
-            else None
-        ),
-    )
-    pc = probes.select("cluster_id", "shard_id").distinct().collect()
-    shard_ids = sorted({r.shard_id for r in pc})
-    cluster_ids = sorted({r.cluster_id for r in pc})
-    base = codes if codes is not None else index.codes(spark)
-    pruned = base.where(
-        F.col("shard_id").isin(shard_ids)
-        & F.col("cluster_id").isin(cluster_ids)
-    )
-    # Restrict the inner probe ranking to the scanned clusters: when
-    # the outer probe set came from the approximate hierarchy, an
-    # unrestricted inner ranking could pick a cluster the scan never
-    # read (silently missing candidates). With exact outer probes the
-    # restriction is a no-op: each query's true top-n_probe clusters
-    # are all inside the scanned union and outrank everything else.
-    cents = index.centroids_df(spark).where(
-        F.col("centroid_id").isin(cluster_ids)
-    )
-    return ivfbq_search(
-        pruned,
-        cents,
-        queries,
-        k=k,
-        n_probe=min(n_probe, index.nlist),
-        scales=index.scales_df(spark) if scoring == "adc" else None,
-        scoring=scoring,
-        method=method,
-        query_id_col=query_id_col,
-        query_col=query_col,
+    def score(pruned, plan, cents):
+        if method == "arrow" and scoring == "adc":
+            return _ivfbq_adc_score(pruned, plan, cents, index.rhos, k)
+        # the codegen twin (which also rejects bad scoring/method
+        # arguments) ranks probes itself: restrict its centroid table
+        # to the scanned clusters, or at hierarchical nlist it could
+        # pick a cluster the scan never read (silently missing
+        # candidates). With exact probes the restriction is a no-op.
+        return ivfbq_search(
+            pruned,
+            index.centroids_df(spark).where(
+                F.col("centroid_id").isin(plan.cluster_ids.tolist())
+            ),
+            queries,
+            k=k,
+            n_probe=n_probe,
+            scales=index.scales_df(spark) if scoring == "adc" else None,
+            scoring=scoring,
+            method=method,
+            query_id_col=query_id_col,
+            query_col=query_col,
+        )
+
+    return search_persisted(
+        spark, index, queries, k, n_probe, codes,
+        "hamming" if scoring == "hamming" else "adist2", score,
+        query_id_col, query_col,
     )

@@ -44,13 +44,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vector_indexer_spark.functions.kernels import stack_arrays
+from vector_indexer_spark.ioutil import atomic_write_json
+from vector_indexer_spark.operators.index_build import read_meta, write_meta
 from vector_indexer_spark.operators.kmeans import KMEANS_INIT_SAMPLE_CAP
 from vector_indexer_spark.operators.pca import pca_train
 from vector_indexer_spark.operators.pq import (
     PQModel,
+    _ivfpq_score,
     pq_encode,
     pq_search,
     pq_train,
+)
+from vector_indexer_spark.operators.search import (
+    collect_queries,
+    empty_result,
+    probe_plan,
+    prune,
 )
 
 OPQ_FORMAT_VERSION = 1
@@ -114,15 +123,14 @@ class OPQModel:
             os.path.join(path, "rotation")
         )
         self.pq.save(spark, os.path.join(path, "pq"))
-        with open(os.path.join(path, "opq_meta.json"), "w") as f:
-            json.dump(
-                {
-                    "version": OPQ_FORMAT_VERSION,
-                    "d": self.dimension,
-                    "mean": [float(x) for x in self.mean],
-                },
-                f,
-            )
+        atomic_write_json(
+            os.path.join(path, "opq_meta.json"),
+            {
+                "version": OPQ_FORMAT_VERSION,
+                "d": self.dimension,
+                "mean": [float(x) for x in self.mean],
+            },
+        )
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "OPQModel":
@@ -361,30 +369,22 @@ def build_ivfopq_index(
     ).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(path, "rotation")
     )
-    with open(os.path.join(path, "ivfopq_meta.json"), "w") as f:
-        json.dump(
-            {
-                "version": OPQ_FORMAT_VERSION,
-                "d": d,
-                "mean": [float(x) for x in mean],
-            },
-            f,
-        )
+    write_meta(
+        path,
+        "ivfopq_meta.json",
+        {
+            "version": OPQ_FORMAT_VERSION,
+            "d": d,
+            "mean": [float(x) for x in mean],
+        },
+    )
     return IvfOpqIndex(mean=mean, rotation=rotation, ivfpq=ivfpq)
 
 
 def load_ivfopq_index(spark: SparkSession, path: str) -> IvfOpqIndex:
     from vector_indexer_spark.operators.pq import load_ivfpq_index  # noqa: PLC0415
 
-    meta_path = os.path.join(path, "ivfopq_meta.json")
-    if not os.path.exists(meta_path):
-        raise FileNotFoundError(f"no IVF-OPQ index at {path}")
-    with open(meta_path) as f:
-        meta = json.load(f)
-    if meta.get("version") != OPQ_FORMAT_VERSION:
-        raise ValueError(
-            f"unsupported IVF-OPQ version {meta.get('version')!r}"
-        )
+    meta = read_meta(path, "ivfopq_meta.json", OPQ_FORMAT_VERSION, "IVF-OPQ")
     rows = (
         spark.read.parquet(os.path.join(path, "rotation"))
         .orderBy("row_id")
@@ -409,33 +409,27 @@ def search_ivfopq(
 ) -> DataFrame:
     """Rotate the query batch driver-side (bounded), then run the
     standard pruned residual-ADC search — distances in rotated space
-    equal original-space distances exactly (orthogonal rotation)."""
-    from vector_indexer_spark.operators.pq import search_ivfpq  # noqa: PLC0415
-
-    qrows = queries.select(query_id_col, query_col).collect()
-    if not qrows:
-        return spark.createDataFrame(
-            [], "query_id long, rank int, neighbor_id long, adc_dist2 double"
-        )
-    qmat = stack_arrays([r[1] for r in qrows])
-    if qmat.shape[1] != index.dimension:
-        raise ValueError(
-            f"query dimension {qmat.shape[1]} != index dim {index.dimension}"
-        )
-    rq = index.rotate(qmat)
-    rq_df = spark.createDataFrame(
-        [
-            (int(r[0]), [float(x) for x in rq[i]])
-            for i, r in enumerate(qrows)
-        ],
-        f"{query_id_col} long, {query_col} array<double>",
+    equal original-space distances exactly (orthogonal rotation). The
+    batch is collected once: the rotated matrix goes straight into the
+    IVF-PQ probe plan and scorer."""
+    if k <= 0 or n_probe <= 0:
+        raise ValueError("k and n_probe must be positive")
+    batch = collect_queries(queries, index.dimension, query_id_col, query_col)
+    if batch is None:
+        return empty_result(spark, "adc_dist2")
+    pq = index.ivfpq
+    plan = probe_plan(
+        batch[0],
+        index.rotate(batch[1]),
+        pq.centroids,
+        n_probe,
+        shards=pq.centroid_shards,
+        hierarchy=pq.probe_hierarchy,
     )
-    return search_ivfpq(
-        spark,
-        index.ivfpq,
-        rq_df,
-        k=k,
-        n_probe=n_probe,
-        query_id_col=query_id_col,
-        query_col=query_col,
+    return _ivfpq_score(
+        prune(pq.codes(spark), plan.shard_ids, plan.cluster_ids),
+        plan,
+        pq.centroids,
+        pq.pq.codebooks,
+        k,
     )

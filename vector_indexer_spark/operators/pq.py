@@ -52,10 +52,29 @@ from pyspark.sql import functions as F
 
 from vector_indexer_spark.ioutil import atomic_write_json
 from vector_indexer_spark.functions.kernels import stack_arrays, topk_per_row
+from vector_indexer_spark.operators.index_build import (
+    IvfHandle,
+    append_rows,
+    attach_shards,
+    check_build_input,
+    coarse_stage,
+    handle_meta,
+    load_layout,
+    read_meta,
+    write_centroids,
+    write_meta,
+    write_sharded,
+)
 from vector_indexer_spark.operators.kmeans import (
     KMEANS_INIT_SAMPLE_CAP,
     _collect_sample,
     kmeans_numpy,
+)
+from vector_indexer_spark.operators.search import (
+    collect_queries,
+    empty_result,
+    rank_winners,
+    search_persisted,
 )
 
 PQ_FORMAT_VERSION = 1
@@ -104,8 +123,7 @@ class PQModel:
             "dsub": self.dsub,
         }
         os.makedirs(path, exist_ok=True)
-        with open(os.path.join(path, "pq_meta.json"), "w") as f:
-            json.dump(meta, f)
+        atomic_write_json(os.path.join(path, "pq_meta.json"), meta)
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "PQModel":
@@ -184,6 +202,23 @@ def _encode_batch(x: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
         )
         codes[:, j] = np.argmin(d2, axis=1)
     return codes
+
+
+def _luts(qmat: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
+    """ADC lookup tables ``LUT[q, j, c] = ||q_j − cb_j[c]||²`` — one
+    expanded-form block per subspace, (nq, ksub) scratch each."""
+    m, ksub, dsub = codebooks.shape
+    lut = np.empty((qmat.shape[0], m, ksub), dtype=np.float64)
+    for j in range(m):
+        qj = qmat[:, j * dsub : (j + 1) * dsub]
+        cbj = codebooks[j]
+        lut[:, j, :] = (
+            np.einsum("ij,ij->i", qj, qj)[:, None]
+            - 2.0 * (qj @ cbj.T)
+            + np.einsum("ij,ij->i", cbj, cbj)[None, :]
+        )
+    np.maximum(lut, 0.0, out=lut)
+    return lut
 
 
 def pq_encode(
@@ -360,32 +395,11 @@ def pq_search(
     if k <= 0:
         raise ValueError("k must be positive")
     spark = codes_df.sparkSession
-    qrows = queries.select(query_id_col, query_col).collect()
-    if not qrows:
-        return spark.createDataFrame(
-            [], "query_id long, rank int, neighbor_id long, adc_dist2 double"
-        )
-    qids = np.asarray([r[0] for r in qrows], dtype=np.int64)
-    qmat = stack_arrays([r[1] for r in qrows])
-    if qmat.shape[1] != model.dimension:
-        raise ValueError(
-            f"query dimension {qmat.shape[1]} != PQ dimension {model.dimension}"
-        )
-    m, ksub, dsub = model.codebooks.shape
-    # LUT[q, j, c] = ||q_j − cb_j[c]||² — one expanded-form block per
-    # subspace, (nq, ksub) scratch each
-    nq = qmat.shape[0]
-    lut = np.empty((nq, m, ksub), dtype=np.float64)
-    for j in range(m):
-        qj = qmat[:, j * dsub : (j + 1) * dsub]
-        cbj = model.codebooks[j]
-        lut[:, j, :] = (
-            np.einsum("ij,ij->i", qj, qj)[:, None]
-            - 2.0 * (qj @ cbj.T)
-            + np.einsum("ij,ij->i", cbj, cbj)[None, :]
-        )
-    np.maximum(lut, 0.0, out=lut)
-    blut = spark.sparkContext.broadcast((qids, lut))
+    batch = collect_queries(queries, model.dimension, query_id_col, query_col)
+    if batch is None:
+        return empty_result(spark, "adc_dist2")
+    qids, qmat = batch
+    blut = spark.sparkContext.broadcast((qids, _luts(qmat, model.codebooks)))
 
     def _adc_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         qids_, lut_ = blut.value
@@ -416,12 +430,7 @@ def pq_search(
     local = codes_df.select(id_col, codes_col).mapInPandas(
         _adc_topk, "query_id long, neighbor_id long, adc_dist2 double"
     )
-    w = Window.partitionBy("query_id").orderBy("adc_dist2", "neighbor_id")
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "adc_dist2")
-    )
+    return rank_winners(local, k, "adc_dist2")
 
 
 # ---------------------------------------------------------------------------
@@ -430,31 +439,49 @@ def pq_search(
 
 
 @dataclass
-class IvfPqIndex:
+class IvfPqIndex(IvfHandle):
     """Persisted IVF-PQ index: centroid table + per-vector codes
     partitioned by shard (NO raw vectors — the corpus on disk is m
     bytes-ish per vector plus ids). Classic residual encoding (Jégou
     et al. 2011 §IV; Faiss ``IndexIVFPQ``): each vector is stored as
     its coarse cluster plus PQ codes of the residual ``x − c``."""
 
-    path: str
-    dimension: int
-    nlist: int
-    n_shards: int
-    seed: int
-    n_vectors: int
-    centroids: np.ndarray  # (nlist, d) float64, dense ids
-    centroid_shards: np.ndarray  # (nlist,) int64
     pq: PQModel
-
-    def codes_path(self) -> str:
-        return os.path.join(self.path, "codes")
-
-    def codes(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.codes_path())
 
 
 IVFPQ_FORMAT_VERSION = 1
+_META = "ivfpq_meta.json"
+
+
+def _encode_residuals(
+    assigned: DataFrame, centroids: np.ndarray, codebooks: np.ndarray
+) -> DataFrame:
+    """``(id, __vec, cluster_id)`` → ``(id, codes, cluster_id)``: the
+    residual ``x − c`` of each row against its own coarse centroid,
+    PQ-encoded per Arrow batch against broadcast codebooks — the
+    encoder of both the build and :func:`add_vectors_ivfpq`."""
+    bstate = assigned.sparkSession.sparkContext.broadcast(
+        (centroids, codebooks)
+    )
+
+    def _encode_res(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        cents_, cb_ = bstate.value
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            x = stack_arrays(pdf["__vec"])
+            cl = pdf["cluster_id"].to_numpy()
+            yield pd.DataFrame(
+                {
+                    "id": pdf["id"].to_numpy(),
+                    "codes": list(_encode_batch(x - cents_[cl], cb_)),
+                    "cluster_id": cl,
+                }
+            )
+
+    return assigned.select("id", "__vec", "cluster_id").mapInPandas(
+        _encode_res, "id long, codes array<int>, cluster_id long"
+    )
 
 
 def build_ivfpq_index(
@@ -487,46 +514,16 @@ def build_ivfpq_index(
        pruning + row-group stats exactly like the flat index, but the
        table is ~m bytes per vector instead of 4d.
     """
-    from vector_indexer_spark.config import calculate_max_iterations, suggest_nlist
-    from vector_indexer_spark.operators.index_build import (
-        dense_relabel_and_shards,
-    )
-    from vector_indexer_spark.operators.kmeans import (
-        _collect_sample,
-        assign_clusters,
-        kmeans_fit,
-    )
     from vector_indexer_spark.functions.kernels import assign_nearest
 
-    spark = df.sparkSession
-    n = df.count()
-    if n == 0:
-        raise ValueError("cannot build an index from an empty DataFrame")
-    dimension = len(df.select(vec_col).first()[0])
-    bad = df.filter(F.size(vec_col) != dimension).count()
-    if bad:
-        raise ValueError(f"{bad} records have dimension != {dimension}")
+    n, dimension = check_build_input(df, vec_col, None)
     if dimension % m != 0:
         raise ValueError(f"dimension {dimension} not divisible by m={m}")
-
-    nlist = nlist or suggest_nlist(n)
-    max_iters = max_iters or calculate_max_iterations(n)
-
-    model = kmeans_fit(
-        df, nlist, vec_col=vec_col, max_iters=max_iters, seed=seed, mode=mode
+    assigned, dense, base = coarse_stage(
+        df, path, n, dimension, vec_col=vec_col, nlist=nlist, seed=seed,
+        mode=mode, max_iters=max_iters,
     )
-    assigned = assign_clusters(
-        df, model.centroids, vec_col=vec_col, out_col="__raw_cluster", seed=seed
-    ).cache()
-    counts = {
-        r["__raw_cluster"]: r["cnt"]
-        for r in assigned.groupBy("__raw_cluster")
-        .agg(F.count("*").alias("cnt"))
-        .collect()
-    }
-    relabel, centroids, eff_nlist, n_sh, shard_of = dense_relabel_and_shards(
-        counts, model.centroids, seed
-    )
+    centroids = base.centroids
 
     # 3. PQ on residual sample (seed offset keeps the PQ sample draw
     # independent of the coarse-training draw)
@@ -543,113 +540,30 @@ def build_ivfpq_index(
         )
     pqm = PQModel(codebooks=cb)
 
-    # 4. relabel + residual-encode + partitioned write
-    mapping = spark.createDataFrame(
-        [(int(old), int(new), int(shard_of[new])) for old, new in relabel.items()],
-        "__raw_cluster long, cluster_id long, shard_id long",
+    # 4. residual-encode + partitioned write
+    dense = dense.select(
+        F.col(id_col).alias("id"), F.col(vec_col).alias("__vec"), "cluster_id"
     )
-    bstate = spark.sparkContext.broadcast((centroids, cb))
-
-    def _encode_res(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cents_, cb_ = bstate.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            x = stack_arrays(pdf["__vec"])
-            cl = pdf["cluster_id"].to_numpy()
-            codes = _encode_batch(x - cents_[cl], cb_)
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"].to_numpy(),
-                    "codes": list(codes),
-                    "cluster_id": cl,
-                    "shard_id": pdf["shard_id"].to_numpy(),
-                }
-            )
-
-    out = (
-        assigned.join(F.broadcast(mapping), "__raw_cluster")
-        .select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("__vec"),
-            "cluster_id",
-            "shard_id",
-        )
-        .mapInPandas(
-            _encode_res,
-            "id long, codes array<int>, cluster_id long, shard_id long",
-        )
-        .repartition("shard_id")
-        .sortWithinPartitions("shard_id", "cluster_id")
-    )
-    out.write.mode("overwrite").partitionBy("shard_id").parquet(
-        os.path.join(path, "codes")
+    write_sharded(
+        attach_shards(_encode_residuals(dense, centroids, cb), base),
+        base.codes_path(),
+        "overwrite",
     )
     assigned.unpersist()
-
-    cent_rows = [
-        (int(i), [float(x) for x in centroids[i]], int(shard_of[i]))
-        for i in range(eff_nlist)
-    ]
-    spark.createDataFrame(
-        cent_rows, "centroid_id long, vector array<float>, shard_id long"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(path, "centroids")
+    write_centroids(
+        df.sparkSession, path, "vector", centroids, base.centroid_shards
     )
-    pqm.save(spark, path)
-    meta = {
-        "version": IVFPQ_FORMAT_VERSION,
-        "kind": "ivfpq",
-        "dimension": dimension,
-        "nlist": eff_nlist,
-        "n_shards": n_sh,
-        "seed": seed,
-        "n_vectors": n,
-        "m": m,
-        "ksub": ksub,
-    }
-    os.makedirs(path, exist_ok=True)
-    with open(os.path.join(path, "ivfpq_meta.json"), "w") as f:
-        json.dump(meta, f, indent=2)
-    return IvfPqIndex(
-        path=path,
-        dimension=dimension,
-        nlist=eff_nlist,
-        n_shards=n_sh,
-        seed=seed,
-        n_vectors=n,
-        centroids=centroids,
-        centroid_shards=shard_of,
-        pq=pqm,
-    )
+    pqm.save(df.sparkSession, path)
+    meta = handle_meta(base, IVFPQ_FORMAT_VERSION, "ivfpq")
+    meta.update(m=m, ksub=ksub)
+    write_meta(path, _META, meta)
+    return IvfPqIndex(**vars(base), pq=pqm)
 
 
 def load_ivfpq_index(spark: SparkSession, path: str) -> IvfPqIndex:
-    meta_path = os.path.join(path, "ivfpq_meta.json")
-    if not os.path.exists(meta_path):
-        raise FileNotFoundError(f"no IVF-PQ index at {path}")
-    with open(meta_path) as f:
-        meta = json.load(f)
-    if meta.get("version") != IVFPQ_FORMAT_VERSION:
-        raise ValueError(f"unsupported IVF-PQ version {meta.get('version')!r}")
-    rows = (
-        spark.read.parquet(os.path.join(path, "centroids"))
-        .orderBy("centroid_id")
-        .collect()
-    )
-    centroids = np.asarray([r.vector for r in rows], dtype=np.float64)
-    shard_of = np.asarray([r.shard_id for r in rows], dtype=np.int64)
-    return IvfPqIndex(
-        path=path,
-        dimension=meta["dimension"],
-        nlist=meta["nlist"],
-        n_shards=meta["n_shards"],
-        seed=meta["seed"],
-        n_vectors=meta["n_vectors"],
-        centroids=centroids,
-        centroid_shards=shard_of,
-        pq=PQModel.load(spark, path),
-    )
+    meta = read_meta(path, _META, IVFPQ_FORMAT_VERSION, "IVF-PQ")
+    fields, _ = load_layout(spark, path, meta, "vector")
+    return IvfPqIndex(**fields, pq=PQModel.load(spark, path))
 
 
 def search_ivfpq(
@@ -673,58 +587,25 @@ def search_ivfpq(
     state is per-batch local — never a broadcast of nq × nlist tables).
     Returns ``(query_id, rank, neighbor_id, adc_dist2)``.
     """
-    if k <= 0 or n_probe <= 0:
-        raise ValueError("k and n_probe must be positive")
-    qrows = queries.select(query_id_col, query_col).collect()
-    if not qrows:
-        return spark.createDataFrame(
-            [], "query_id long, rank int, neighbor_id long, adc_dist2 double"
-        )
-    bad = sum(1 for r in qrows if len(r[1]) != index.dimension)
-    if bad:
-        raise ValueError(f"{bad} queries have dimension != {index.dimension}")
-    qids = np.asarray([r[0] for r in qrows], dtype=np.int64)
-    qmat = stack_arrays([r[1] for r in qrows])
-
-    from vector_indexer_spark.functions.kernels import (
-        pairwise_dist2,
-        topk_per_row as _topk,
-        topk_per_row_hierarchical,
-    )
-    from vector_indexer_spark.operators.search import (
-        _HIER_PROBE_NLIST,
-        probe_hierarchy_for,
+    return search_persisted(
+        spark, index, queries, k, n_probe, codes, "adc_dist2",
+        lambda pruned, plan, cents: _ivfpq_score(
+            pruned, plan, cents, index.pq.codebooks, k
+        ),
+        query_id_col, query_col,
     )
 
-    if index.nlist >= _HIER_PROBE_NLIST:
-        meta_c, meta_l = probe_hierarchy_for(index)
-        _, probe_ids = topk_per_row_hierarchical(
-            qmat, index.centroids, meta_c, meta_l, min(n_probe, index.nlist)
-        )
-    else:
-        d2c = pairwise_dist2(qmat, index.centroids)
-        _, probe_ids = _topk(d2c, min(n_probe, index.nlist))
-    cluster_ids = np.unique(probe_ids)
-    shard_ids = np.unique(index.centroid_shards[cluster_ids])
-    pos = {int(c): i for i, c in enumerate(cluster_ids)}
-    probe_mask = np.zeros((len(qids), len(cluster_ids)), dtype=bool)
-    for qi in range(len(qids)):
-        probe_mask[qi, [pos[int(c)] for c in probe_ids[qi]]] = True
 
-    base = codes if codes is not None else index.codes(spark)
-    pruned = base.where(
-        F.col("shard_id").isin([int(s) for s in shard_ids])
-        & F.col("cluster_id").isin([int(c) for c in cluster_ids])
-    ).select("id", "codes", "cluster_id")
-
-    bstate = spark.sparkContext.broadcast(
-        (qids, qmat, index.centroids, index.pq.codebooks, cluster_ids,
-         probe_mask)
+def _ivfpq_score(codes_df, plan, cents, codebooks, k):
+    """Per-cluster residual ADC over a pruned codes scan (the
+    :func:`search_ivfpq` kernel, shared with IVF-OPQ)."""
+    bstate = codes_df.sparkSession.sparkContext.broadcast(
+        (plan.qids, plan.qmat, cents, codebooks, plan.qprobe)
     )
 
     def _adc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids_, qmat_, cents_, cb_, cids_, mask_ = bstate.value
-        m_, ksub_, dsub_ = cb_.shape
+        qids_, qmat_, cents_, cb_, qprobe_ = bstate.value
+        m_ = cb_.shape[0]
         nq = qmat_.shape[0]
         for pdf in batches:
             if pdf.empty:
@@ -739,26 +620,16 @@ def search_ivfpq(
             # per scanned cluster: residual LUTs for the probing
             # queries only, then the LUT-gather distance fill
             for c in np.unique(cl):
-                qsel = np.flatnonzero(mask_[:, np.searchsorted(cids_, c)])
-                if qsel.size == 0:
+                qsel = qprobe_.get(int(c))
+                if qsel is None or qsel.size == 0:
                     continue
                 rsel = np.flatnonzero(cl == c)
-                qr = qmat_[qsel] - cents_[c]
-                lut = np.empty((qsel.size, m_, ksub_), dtype=np.float64)
-                for j in range(m_):
-                    qj = qr[:, j * dsub_ : (j + 1) * dsub_]
-                    cbj = cb_[j]
-                    lut[:, j, :] = (
-                        np.einsum("ij,ij->i", qj, qj)[:, None]
-                        - 2.0 * (qj @ cbj.T)
-                        + np.einsum("ij,ij->i", cbj, cbj)[None, :]
-                    )
-                np.maximum(lut, 0.0, out=lut)
+                lut = _luts(qmat_[qsel] - cents_[c], cb_)
                 sub = lut[:, 0, codes_np[rsel, 0]]
                 for j in range(1, m_):
                     sub = sub + lut[:, j, codes_np[rsel, j]]
                 d2[np.ix_(qsel, rsel)] = sub
-            dists, ids = _topk(d2, k, ids=vids)
+            dists, ids = topk_per_row(d2, k, ids=vids)
             keep = np.isfinite(dists)
             if not keep.any():
                 continue
@@ -772,15 +643,10 @@ def search_ivfpq(
                 }
             )
 
-    local = pruned.mapInPandas(
+    local = codes_df.select("id", "codes", "cluster_id").mapInPandas(
         _adc, "query_id long, neighbor_id long, adc_dist2 double"
     )
-    w = Window.partitionBy("query_id").orderBy("adc_dist2", "neighbor_id")
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "adc_dist2")
-    )
+    return rank_winners(local, k, "adc_dist2")
 
 
 def add_vectors_ivfpq(
@@ -800,77 +666,24 @@ def add_vectors_ivfpq(
     from the training sample (re-``build_ivfpq_index`` when it does).
 
     One shuffle of the new batch only; the live codes table is never
-    read (beyond the optional duplicate-id scan) or rewritten.
-    :func:`~vector_indexer_spark.operators.index_build.compact_index`
-    does not apply here (different table name) — re-append rarely and
-    large, or compact by rewriting ``codes`` the same staged way.
+    read (beyond the optional duplicate-id scan) or rewritten. Each
+    add appends ~n_shards small code files;
+    :func:`~vector_indexer_spark.operators.index_build.compact_table`
+    over ``index.codes_path()`` restores the as-built layout through
+    the same staged swap as the flat index's compaction.
     Returns ``{n_added, n_vectors}``.
     """
-    from vector_indexer_spark.operators.index_build import (  # noqa: PLC0415
-        validate_add_batch,
-    )
-    from vector_indexer_spark.operators.kmeans import (  # noqa: PLC0415
-        assign_clusters,
-    )
-
-    n_new = validate_add_batch(
-        df,
-        id_col=id_col,
-        vec_col=vec_col,
-        dimension=index.dimension,
-        existing_ids=(
-            index.codes(spark).select("id") if check_duplicate_ids else None
+    n_new = append_rows(
+        spark,
+        index,
+        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("__vec")),
+        index.codes_path(),
+        _META,
+        id_col="id",
+        vec_col="__vec",
+        check_duplicate_ids=check_duplicate_ids,
+        encode=lambda assigned: _encode_residuals(
+            assigned, index.centroids, index.pq.codebooks
         ),
     )
-    assigned = assign_clusters(
-        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("__vec")),
-        index.centroids,
-        vec_col="__vec",
-        out_col="cluster_id",
-        seed=index.seed,
-    )
-    shard_map = spark.createDataFrame(
-        [(int(c), int(s)) for c, s in enumerate(index.centroid_shards)],
-        "cluster_id long, shard_id long",
-    )
-    bstate = spark.sparkContext.broadcast(
-        (index.centroids, index.pq.codebooks)
-    )
-
-    def _encode_res(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cents_, cb_ = bstate.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            x = stack_arrays(pdf["__vec"])
-            cl = pdf["cluster_id"].to_numpy()
-            codes = _encode_batch(x - cents_[cl], cb_)
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"].to_numpy(),
-                    "codes": list(codes),
-                    "cluster_id": cl,
-                    "shard_id": pdf["shard_id"].to_numpy(),
-                }
-            )
-
-    (
-        assigned.join(F.broadcast(shard_map), "cluster_id")
-        .select("id", "__vec", "cluster_id", "shard_id")
-        .mapInPandas(
-            _encode_res,
-            "id long, codes array<int>, cluster_id long, shard_id long",
-        )
-        .repartition("shard_id")
-        .sortWithinPartitions("shard_id", "cluster_id")
-        .write.mode("append")
-        .partitionBy("shard_id")
-        .parquet(index.codes_path())
-    )
-    meta_path = os.path.join(index.path, "ivfpq_meta.json")
-    with open(meta_path) as f:
-        meta = json.load(f)
-    meta["n_vectors"] = int(meta["n_vectors"]) + n_new
-    atomic_write_json(meta_path, meta)
-    index.n_vectors = meta["n_vectors"]
     return {"n_added": n_new, "n_vectors": index.n_vectors}

@@ -50,7 +50,27 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from vector_indexer_spark.functions.kernels import topk_per_row
-from vector_indexer_spark.operators.bq import WORD_BITS, _codes_to_bytes
+from vector_indexer_spark.operators.bq import WORD_BITS, _unpack_bits
+from vector_indexer_spark.operators.index_build import (
+    IvfHandle,
+    attach_shards,
+    check_build_input,
+    coarse_stage,
+    collect_centroids,
+    handle_meta,
+    load_layout,
+    read_meta,
+    write_centroids,
+    write_meta,
+    write_sharded,
+)
+from vector_indexer_spark.operators.search import (
+    collect_queries,
+    empty_result,
+    rank_winners,
+    search_frames,
+    search_persisted,
+)
 
 RABITQ_FORMAT_VERSION = 1
 
@@ -414,16 +434,11 @@ def rabitq_search(
 
 def _rabitq_search_arrow(codes_df, model, queries, k, query_id_col, query_col):
     spark = codes_df.sparkSession
-    qrows = queries.select(query_id_col, query_col).collect()
-    if not qrows:
-        return spark.createDataFrame(
-            [], "query_id long, rank int, neighbor_id long, est_dist2 double"
-        )
-    d, n_words = model.d, model.n_words
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qmat = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
-    if qmat.shape[1] != d:
-        raise ValueError(f"query dimension {qmat.shape[1]} != index {d}")
+    d = model.d
+    batch = collect_queries(queries, d, query_id_col, query_col)
+    if batch is None:
+        return empty_result(spark, "est_dist2")
+    qids, qmat = batch
     p = model.rotation_matrix()
     c = np.asarray(model.centroid, dtype=np.float64)
     rq = (qmat - c[None, :]) @ p.T  # (nq, d)
@@ -438,16 +453,7 @@ def _rabitq_search_arrow(codes_df, model, queries, k, query_id_col, query_col):
         for pdf in batches:
             if pdf.empty:
                 continue
-            cmat = np.stack(
-                [np.asarray(cd, dtype=np.int64) for cd in pdf["codes"]]
-            )
-            n_rows = cmat.shape[0]
-            bits64 = np.unpackbits(
-                _codes_to_bytes(cmat).astype(np.uint8), axis=1
-            ).reshape(n_rows, n_words, 64)[:, :, 32:]
-            cbits = bits64.reshape(n_rows, n_words * WORD_BITS)[:, :d].astype(
-                np.float64
-            )
+            cbits = _unpack_bits(pdf["codes"], d)
             norm = pdf["norm"].to_numpy()
             dot_o = pdf["dot_o"].to_numpy()
             ids = pdf["id"].to_numpy()
@@ -481,12 +487,7 @@ def _rabitq_search_arrow(codes_df, model, queries, k, query_id_col, query_col):
     local = codes_df.select("id", "codes", "norm", "dot_o").mapInPandas(
         local_topk, "query_id long, neighbor_id long, est_dist2 double"
     )
-    w = Window.partitionBy("query_id").orderBy("est_dist2", "neighbor_id")
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "est_dist2")
-    )
+    return rank_winners(local, k, "est_dist2")
 
 
 # --------------------------------------------------------------------------
@@ -601,18 +602,14 @@ def _ivf_rabitq_encode_arrow(
     spark = assigned.sparkSession
     p = np.asarray(rotation, dtype=np.float64)
     n_words = (d + WORD_BITS - 1) // WORD_BITS
-    crows = centroids.select(centroid_id_col, centroid_vec_col).collect()
-    nlist = 1 + max(r[0] for r in crows)
-    cents = np.zeros((nlist, d), dtype=np.float64)
     # `present` mask: the dense id-indexed matrix leaves zero-filled
     # rows for any cluster_id missing from the centroids frame — a row
     # assigned there would be silently encoded against an all-zeros
     # centroid, where the native path's inner join drops it. Mirror the
-    # native drop (same mask idiom as _ivf_rabitq_arrow).
-    present = np.zeros(nlist, dtype=bool)
-    for r in crows:
-        cents[r[0]] = np.asarray(r[1], dtype=np.float64)
-        present[r[0]] = True
+    # native drop.
+    cents, present = collect_centroids(
+        centroids, centroid_id_col, centroid_vec_col
+    )
     bp = spark.sparkContext.broadcast((p, cents, present))
 
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -688,8 +685,11 @@ def ivf_rabitq_search(
         raise ValueError("k and n_probe must be positive")  # P3
     d = len(rotation)
     if method == "arrow":
-        return _ivf_rabitq_arrow(
-            codes_df, centroids, queries, rotation, k, n_probe,
+        return search_frames(
+            codes_df, centroids, queries, n_probe, "est_dist2",
+            lambda pruned, plan, cents: _ivf_rabitq_score(
+                pruned, plan, cents, rotation, k
+            ),
             query_id_col, query_col, centroid_id_col, centroid_vec_col,
         )
     if method != "native":
@@ -761,57 +761,28 @@ def ivf_rabitq_search(
     )
 
 
-def _ivf_rabitq_arrow(
-    codes_df, centroids, queries, rotation, k, n_probe,
-    query_id_col, query_col, centroid_id_col, centroid_vec_col,
-):
-    spark = codes_df.sparkSession
-    qrows = queries.select(query_id_col, query_col).collect()
-    if not qrows:
-        return spark.createDataFrame(
-            [], "query_id long, rank int, neighbor_id long, est_dist2 double"
-        )
+def _ivf_rabitq_score(codes_df, plan, cents, rotation, k):
+    """Arrow RaBitQ estimator over a pruned codes scan: per probed
+    cluster, the rotated unit residuals of its probing queries vs THIS
+    centroid are prepared on the driver — (nq × n_probe × d) total,
+    bounded — then each cluster's unpacked bits are GEMMed against
+    that block inside ``mapInPandas``; winners-only window rank."""
     d = len(rotation)
+    if plan.qmat.shape[1] != d:
+        raise ValueError(
+            f"query dimension {plan.qmat.shape[1]} != rotation {d}"
+        )
     p = np.asarray(rotation, dtype=np.float64)
-    n_words = (d + WORD_BITS - 1) // WORD_BITS
-    qids = np.asarray([r[0] for r in qrows], dtype=np.int64)
-    qmat = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
-    if qmat.shape[1] != d:
-        raise ValueError(f"query dimension {qmat.shape[1]} != rotation {d}")
-    crows = centroids.select(centroid_id_col, centroid_vec_col).collect()
-    nlist = 1 + max(r[0] for r in crows)
-    cents = np.zeros((nlist, d), dtype=np.float64)
-    present = np.zeros(nlist, dtype=bool)
-    for r in crows:
-        cents[r[0]] = np.asarray(r[1], dtype=np.float64)
-        present[r[0]] = True
-    # driver probe ranking (centroid matrix is driver-resident by the
-    # same contract as rank_probes / the IVF-SQ/IVF-BQ arrow paths)
-    d2c = (
-        np.einsum("ij,ij->i", qmat, qmat)[:, None]
-        - 2.0 * (qmat @ cents.T)
-        + np.einsum("ij,ij->i", cents, cents)[None, :]
-    )
-    d2c[:, ~present] = np.inf
-    n_pick = min(n_probe, int(present.sum()))
-    order = np.argsort(d2c, axis=1, kind="stable")[:, :n_pick]
-    # per-cluster prep: which queries probe it, and their rotated unit
-    # residuals vs THIS centroid — (nq × n_probe × d) total, bounded
     prep: dict = {}
-    for c in np.unique(order):
-        qidx = np.flatnonzero((order == c).any(axis=1))
-        rq = (qmat[qidx] - cents[c][None, :]) @ p.T
+    for c, qidx in plan.qprobe.items():
+        rq = (plan.qmat[qidx] - cents[c][None, :]) @ p.T
         qn = np.sqrt(np.einsum("ij,ij->i", rq, rq))
         u = np.divide(
             rq, qn[:, None], out=np.zeros_like(rq), where=qn[:, None] > 0
         )
-        prep[int(c)] = (qidx, u, qn, u.sum(axis=1))
-    probed_union = sorted(prep)
-    codes_df = codes_df.where(
-        F.col("cluster_id").isin([int(c) for c in probed_union])
-    )
+        prep[c] = (qidx, u, qn, u.sum(axis=1))
     scale = 1.0 / math.sqrt(d)
-    bc = spark.sparkContext.broadcast((qids, prep))
+    bc = codes_df.sparkSession.sparkContext.broadcast((plan.qids, prep))
 
     def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         qids_, prep_ = bc.value
@@ -819,16 +790,7 @@ def _ivf_rabitq_arrow(
             if pdf.empty:
                 continue
             cl = pdf["cluster_id"].to_numpy()
-            cmat = np.stack(
-                [np.asarray(c, dtype=np.int64) for c in pdf["codes"]]
-            )
-            n_rows = cmat.shape[0]
-            bits64 = np.unpackbits(
-                _codes_to_bytes(cmat).astype(np.uint8), axis=1
-            ).reshape(n_rows, n_words, 64)[:, :, 32:]
-            cbits = bits64.reshape(n_rows, n_words * WORD_BITS)[
-                :, :d
-            ].astype(np.float64)
+            cbits = _unpack_bits(pdf["codes"], d)
             norm = pdf["norm"].to_numpy()
             dot_o = pdf["dot_o"].to_numpy()
             ids = pdf["id"].to_numpy()
@@ -870,12 +832,7 @@ def _ivf_rabitq_arrow(
     ).mapInPandas(
         local_topk, "query_id long, neighbor_id long, est_dist2 double"
     )
-    w = Window.partitionBy("query_id").orderBy("est_dist2", "neighbor_id")
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "est_dist2")
-    )
+    return rank_winners(local, k, "est_dist2")
 
 
 def ivf_rabitq_search_refined(
@@ -933,13 +890,8 @@ def ivf_rabitq_search_refined(
 # fields instead of d² floats.
 # ---------------------------------------------------------------------------
 
-import json as _json
-import os as _os
-from dataclasses import dataclass as _dataclass
-
-from vector_indexer_spark.ioutil import atomic_write_json
-
 IVF_RABITQ_FORMAT_VERSION = 1
+_META = "ivf_rabitq_meta.json"
 
 
 def _build_rotation(kind: str, d: int, seed: int) -> np.ndarray:
@@ -950,31 +902,11 @@ def _build_rotation(kind: str, d: int, seed: int) -> np.ndarray:
     raise ValueError(f"unknown rotation kind {kind!r}")
 
 
-@_dataclass
-class IvfRaBitQIndex:
-    path: str
-    dimension: int
-    nlist: int
-    n_shards: int
-    seed: int
+@dataclass
+class IvfRaBitQIndex(IvfHandle):
     rotation_kind: str
     rotation_seed: int
-    n_vectors: int
-    centroids: object  # (nlist, d) float64 ndarray
-    centroid_shards: object  # (nlist,) int64 ndarray
     rotation: tuple  # d rows × d doubles, rebuilt from (kind, seed, d)
-
-    def codes(self, spark) -> DataFrame:
-        return spark.read.parquet(_os.path.join(self.path, "codes"))
-
-    def centroids_df(self, spark) -> DataFrame:
-        return spark.createDataFrame(
-            [
-                (int(i), [float(x) for x in self.centroids[i]])
-                for i in range(self.nlist)
-            ],
-            "centroid_id long, cvec array<float>",
-        )
 
 
 def build_ivf_rabitq_index(
@@ -1002,26 +934,7 @@ def build_ivf_rabitq_index(
     (kind, seed, d), and a load on a different BLAS could in principle
     rebuild a different-sign matrix; the hadamard kind is
     build-independent)."""
-    from vector_indexer_spark.config import (  # noqa: PLC0415
-        calculate_max_iterations,
-        suggest_nlist,
-    )
-    from vector_indexer_spark.operators.index_build import (  # noqa: PLC0415
-        dense_relabel_and_shards,
-    )
-    from vector_indexer_spark.operators.kmeans import (  # noqa: PLC0415
-        assign_clusters,
-        kmeans_fit,
-    )
-
-    spark = df.sparkSession
-    n = df.count()
-    if n == 0:
-        raise ValueError("cannot build an index from an empty DataFrame")
-    dimension = len(df.select(vec_col).first()[0])
-    bad = df.filter(F.size(vec_col) != dimension).count()
-    if bad:
-        raise ValueError(f"{bad} records have dimension != {dimension}")
+    n, dimension = check_build_input(df, vec_col, None)
     if rotation is None:
         rotation = (
             "hadamard" if (dimension & (dimension - 1)) == 0 else "qr"
@@ -1029,127 +942,49 @@ def build_ivf_rabitq_index(
     rot_mat = _build_rotation(rotation, dimension, rotation_seed)
     rot = tuple(tuple(float(v) for v in row) for row in rot_mat)
 
-    nlist = nlist or suggest_nlist(n)
-    max_iters = max_iters or calculate_max_iterations(n)
-    model = kmeans_fit(
-        df, nlist, vec_col=vec_col, max_iters=max_iters, seed=seed, mode=mode
+    assigned, dense, base = coarse_stage(
+        df, path, n, dimension, vec_col=vec_col, nlist=nlist, seed=seed,
+        mode=mode, max_iters=max_iters,
     )
-    assigned = assign_clusters(
-        df, model.centroids, vec_col=vec_col, out_col="__raw_cluster",
-        seed=seed,
-    ).cache()
-    counts = {
-        r["__raw_cluster"]: r["cnt"]
-        for r in assigned.groupBy("__raw_cluster")
-        .agg(F.count("*").alias("cnt"))
-        .collect()
-    }
-    relabel, centroids, eff_nlist, n_sh, shard_of = dense_relabel_and_shards(
-        counts, model.centroids, seed
-    )
-    mapping = spark.createDataFrame(
-        [
-            (int(old), int(new), int(shard_of[new]))
-            for old, new in relabel.items()
-        ],
-        "__raw_cluster long, cluster_id long, shard_id long",
-    )
-    dense = assigned.join(F.broadcast(mapping), "__raw_cluster").select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("__vec"),
-        "cluster_id",
-        "shard_id",
-    )
-    cents_df = spark.createDataFrame(
-        [
-            (int(i), [float(x) for x in centroids[i]])
-            for i in range(eff_nlist)
-        ],
-        "centroid_id long, cvec array<float>",
+    # residuals are taken against the float32 centroids the table
+    # stores, so the handle holds exactly what a reload would read
+    base.centroids = base.centroids.astype(np.float32).astype(np.float64)
+    dense = dense.select(
+        F.col(id_col).alias("id"), F.col(vec_col).alias("__vec"), "cluster_id"
     )
     codes = ivf_rabitq_encode(
-        dense, cents_df, rot, id_col="id", vec_col="__vec", method="arrow"
-    ).join(
-        F.broadcast(mapping.select("cluster_id", "shard_id").distinct()),
-        "cluster_id",
+        dense, base.centroids_df(df.sparkSession), rot, id_col="id",
+        vec_col="__vec", method="arrow",
     )
-    (
-        codes.repartition("shard_id")
-        .sortWithinPartitions("shard_id", "cluster_id")
-        .write.mode("overwrite")
-        .partitionBy("shard_id")
-        .parquet(_os.path.join(path, "codes"))
-    )
+    write_sharded(attach_shards(codes, base), base.codes_path(), "overwrite")
     assigned.unpersist()
-    spark.createDataFrame(
-        [
-            (int(i), [float(x) for x in centroids[i]], int(shard_of[i]))
-            for i in range(eff_nlist)
-        ],
-        "centroid_id long, cvec array<float>, shard_id long",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        _os.path.join(path, "centroids")
+    write_centroids(
+        df.sparkSession, path, "cvec", base.centroids, base.centroid_shards
     )
-    atomic_write_json(
-        _os.path.join(path, "ivf_rabitq_meta.json"),
-        {
-            "version": IVF_RABITQ_FORMAT_VERSION,
-            "kind": "ivf_rabitq",
-            "dimension": dimension,
-            "nlist": eff_nlist,
-            "n_shards": n_sh,
-            "seed": seed,
-            "rotation_kind": rotation,
-            "rotation_seed": rotation_seed,
-            "n_vectors": n,
-        },
+    meta = handle_meta(base, IVF_RABITQ_FORMAT_VERSION, "ivf_rabitq")
+    n_vectors = meta.pop("n_vectors")  # keeps the sidecar's key order
+    meta.update(
+        rotation_kind=rotation, rotation_seed=rotation_seed, n_vectors=n_vectors
     )
+    write_meta(path, _META, meta)
     return IvfRaBitQIndex(
-        path=path,
-        dimension=dimension,
-        nlist=eff_nlist,
-        n_shards=n_sh,
-        seed=seed,
+        **vars(base),
         rotation_kind=rotation,
         rotation_seed=rotation_seed,
-        n_vectors=n,
-        centroids=centroids,
-        centroid_shards=shard_of,
         rotation=rot,
     )
 
 
 def load_ivf_rabitq_index(spark, path: str) -> IvfRaBitQIndex:
-    meta_path = _os.path.join(path, "ivf_rabitq_meta.json")
-    if not _os.path.exists(meta_path):
-        raise FileNotFoundError(f"no IVF-RaBitQ index at {path}")
-    with open(meta_path) as fh:
-        meta = _json.load(fh)
-    if meta.get("version") != IVF_RABITQ_FORMAT_VERSION:
-        raise ValueError(
-            f"unsupported IVF-RaBitQ version {meta.get('version')!r}"
-        )
-    rows = (
-        spark.read.parquet(_os.path.join(path, "centroids"))
-        .orderBy("centroid_id")
-        .collect()
-    )
+    meta = read_meta(path, _META, IVF_RABITQ_FORMAT_VERSION, "IVF-RaBitQ")
+    fields, _ = load_layout(spark, path, meta, "cvec")
     rot_mat = _build_rotation(
         meta["rotation_kind"], meta["dimension"], meta["rotation_seed"]
     )
     return IvfRaBitQIndex(
-        path=path,
-        dimension=meta["dimension"],
-        nlist=meta["nlist"],
-        n_shards=meta["n_shards"],
-        seed=meta["seed"],
+        **fields,
         rotation_kind=meta["rotation_kind"],
         rotation_seed=meta["rotation_seed"],
-        n_vectors=meta["n_vectors"],
-        centroids=np.asarray([r.cvec for r in rows], dtype=np.float64),
-        centroid_shards=np.asarray(
-            [r.shard_id for r in rows], dtype=np.int64
-        ),
         rotation=tuple(tuple(float(v) for v in row) for row in rot_mat),
     )
 
@@ -1166,56 +1001,36 @@ def search_ivf_rabitq_index(
     query_col: str = "query",
     codes: DataFrame | None = None,
 ) -> DataFrame:
-    """Pruned search against the persisted index: probe ranking on the
-    driver-resident centroid matrix → literal shard/cluster predicates
+    """Pruned search against the persisted index: one driver probe plan
+    on the resident centroid matrix → literal shard/cluster predicates
     (Hive partition pruning + row-group stats on the cluster-sorted
-    layout) → :func:`ivf_rabitq_search` over only the scanned
-    clusters. The inner search is restricted to the clusters the
-    pruned scan actually read, so at ``nlist >= _HIER_PROBE_NLIST``
-    (approximate hierarchical outer probes) pruning and scoring always
-    agree — no cluster is scored that was not scanned."""
-    if k <= 0 or n_probe <= 0:
-        raise ValueError("k and n_probe must be positive")  # P3
-    from vector_indexer_spark.operators.search import (  # noqa: PLC0415
-        _HIER_PROBE_NLIST,
-        probe_hierarchy_for,
-        rank_probes,
-    )
+    layout) → the estimator over only the scanned clusters. The arrow
+    kernel scores each query against exactly its own probe list; the
+    native path hands :func:`ivf_rabitq_search` the centroid table
+    restricted to the scanned clusters — so at ``nlist >=
+    _HIER_PROBE_NLIST`` (approximate hierarchical probes) pruning and
+    scoring always agree: no cluster is scored that was not
+    scanned."""
+    def score(pruned, plan, cents):
+        if method == "arrow":
+            return _ivf_rabitq_score(pruned, plan, cents, index.rotation, k)
+        return ivf_rabitq_search(
+            pruned,
+            index.centroids_df(spark).where(
+                F.col("centroid_id").isin(plan.cluster_ids.tolist())
+            ),
+            queries,
+            index.rotation,
+            k=k,
+            n_probe=n_probe,
+            query_id_col=query_id_col,
+            query_col=query_col,
+            method=method,
+        )
 
-    probes = rank_probes(
-        queries,
-        index.centroids,
-        index.centroid_shards,
-        min(n_probe, index.nlist),
-        query_id_col=query_id_col,
-        query_col=query_col,
-        hierarchy=(
-            probe_hierarchy_for(index)
-            if index.nlist >= _HIER_PROBE_NLIST
-            else None
-        ),
-    )
-    pc = probes.select("cluster_id", "shard_id").distinct().collect()
-    shard_ids = sorted({r.shard_id for r in pc})
-    cluster_ids = sorted({r.cluster_id for r in pc})
-    base = codes if codes is not None else index.codes(spark)
-    pruned = base.where(
-        F.col("shard_id").isin(shard_ids)
-        & F.col("cluster_id").isin(cluster_ids)
-    )
-    cents = index.centroids_df(spark).where(
-        F.col("centroid_id").isin(cluster_ids)
-    )
-    return ivf_rabitq_search(
-        pruned,
-        cents,
-        queries,
-        index.rotation,
-        k=k,
-        n_probe=min(n_probe, index.nlist),
-        query_id_col=query_id_col,
-        query_col=query_col,
-        method=method,
+    return search_persisted(
+        spark, index, queries, k, n_probe, codes, "est_dist2", score,
+        query_id_col, query_col,
     )
 
 

@@ -34,11 +34,18 @@ Spark-first re-expression, one job for a whole *batch* of queries:
 ``method="native"`` runs the same logical plan as pure DataFrame ops
 (broadcast joins + fold expression + window) — bit-reproducible and
 SQL-oracle-checkable; the arrow path is the throughput path.
+
+The arrow path's driver probe plan (:func:`probe_plan`) and pruning
+(:func:`prune`) are the one search skeleton of every persisted tier:
+the compressed tiers (IVF-SQ/BQ/RaBitQ/PQ) reach them through
+:func:`search_persisted`, their composable stages through
+:func:`search_frames`, and each supplies only its scoring kernel.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -53,7 +60,11 @@ from vector_indexer_spark.functions.kernels import (
     topk_per_row,
     topk_per_row_hierarchical,
 )
-from vector_indexer_spark.operators.index_build import IvfIndex
+from vector_indexer_spark.operators.index_build import (
+    IvfHandle,
+    IvfIndex,
+    collect_centroids,
+)
 
 # Above this many estimated local-top-k rows, the final merge falls
 # back to a distributed window rank instead of a driver merge.
@@ -168,25 +179,6 @@ def rank_probes(
     )
 
 
-def probe_hierarchy_for(index) -> tuple[np.ndarray, np.ndarray]:
-    """(meta_centroids, meta_labels) for ANY index handle carrying
-    ``centroids`` + ``seed`` — the flat IvfIndex has its own cached
-    :meth:`IvfIndex.probe_hierarchy`; the PQ/SQ index handles share
-    this helper (cached on the handle) so their probe ranking gets the
-    same large-nlist pruning."""
-    if hasattr(index, "probe_hierarchy"):
-        return index.probe_hierarchy()
-    if not hasattr(index, "_probe_hierarchy"):
-        from vector_indexer_spark.operators.kmeans import (  # noqa: PLC0415
-            build_centroid_hierarchy,
-        )
-
-        index._probe_hierarchy = build_centroid_hierarchy(
-            np.asarray(index.centroids, dtype=np.float64), index.seed
-        )
-    return index._probe_hierarchy
-
-
 def rank_probes_relational(
     spark: SparkSession,
     index: IvfIndex,
@@ -238,6 +230,199 @@ def rank_probes_relational(
         "shard_id",
         F.col("dist2").alias("centroid_dist2"),
     )
+
+
+class ProbePlan(NamedTuple):
+    """The driver probe plan of one query batch (J3/W1) — the single
+    probe ranking every arrow search path consumes: flat, and the
+    persisted and composable IVF-SQ / IVF-BQ / IVF-RaBitQ / IVF-PQ
+    scorers."""
+
+    qids: np.ndarray  # (nq,) int64 query ids
+    qmat: np.ndarray  # (nq, d) float64 query matrix
+    probe_ids: np.ndarray  # (nq, n_probe) cluster ids, (dist, id) ascending
+    probe_d2: np.ndarray  # (nq, n_probe) their squared centroid distances
+    cluster_ids: np.ndarray  # sorted union of probed clusters
+    shard_ids: np.ndarray | None  # sorted shards holding them (None: unknown)
+    qprobe: dict  # cluster id -> indices of the queries probing it
+
+
+def collect_queries(
+    queries: DataFrame, dimension: int, query_id_col: str, query_col: str
+) -> tuple[np.ndarray, np.ndarray] | None:
+    """The one driver collect of a query batch (driver-sized by
+    contract — the reference's whole input is a NumPy matrix), with
+    P2 validation on the collected rows (no extra Spark job). Returns
+    ``(qids, qmat)``, or None for an empty batch."""
+    qrows = queries.select(query_id_col, query_col).collect()
+    if not qrows:
+        return None
+    bad = sum(1 for r in qrows if len(r[1]) != dimension)
+    if bad:
+        raise ValueError(f"{bad} queries have dimension != {dimension}")
+    return (
+        np.array([r[0] for r in qrows], dtype=np.int64),
+        stack_arrays([r[1] for r in qrows]),
+    )
+
+
+def probe_plan(
+    qids: np.ndarray,
+    qmat: np.ndarray,
+    centroids: np.ndarray,
+    n_probe: int,
+    *,
+    ids: np.ndarray | None = None,
+    shards: np.ndarray | None = None,
+    hierarchy: Callable[[], tuple[np.ndarray, np.ndarray]] | None = None,
+) -> ProbePlan:
+    """J3/W1 on the driver: top-``n_probe`` centroids per query — flat
+    (nq, nlist) distances below ``_HIER_PROBE_NLIST`` (read at call
+    time), two-stage meta shortlist above it when the caller supplies
+    the ``hierarchy`` (an index handle's ``probe_hierarchy``). Ranking
+    runs in bounded query chunks, so a bulk batch never materializes
+    (nq, nlist).
+
+    ``ids`` names the cluster id of each centroid row (default: the
+    row ordinal — the dense ids of a persisted index); ``shards`` maps
+    a cluster id to its shard. The per-cluster probing-query index is
+    inverted from one sort of the flattened (cluster, query) pairs —
+    O(nq·n_probe log ·)."""
+    meta = hierarchy() if (
+        hierarchy is not None and len(centroids) >= _HIER_PROBE_NLIST
+    ) else None
+    dists, probes = [], []
+    for lo in range(0, len(qids), _BULK_PROBE_CHUNK):
+        chunk = qmat[lo : lo + _BULK_PROBE_CHUNK]
+        if meta is not None:
+            d, i = topk_per_row_hierarchical(
+                chunk, centroids, meta[0], meta[1], n_probe
+            )
+        else:
+            d, i = topk_per_row(pairwise_dist2(chunk, centroids), n_probe)
+        dists.append(d)
+        probes.append(i)
+    probe_d2 = np.concatenate(dists, axis=0)
+    probe_ids = np.concatenate(probes, axis=0)
+    if ids is not None:
+        probe_ids = ids[probe_ids]
+    cluster_ids = np.unique(probe_ids)  # sorted
+    flat_c = probe_ids.reshape(-1)
+    flat_q = np.repeat(np.arange(len(qids), dtype=np.int64), probe_ids.shape[1])
+    order = np.argsort(flat_c, kind="stable")
+    sc, sq = flat_c[order], flat_q[order]
+    bounds = np.append(np.searchsorted(sc, cluster_ids), len(sc))
+    return ProbePlan(
+        qids=qids,
+        qmat=qmat,
+        probe_ids=probe_ids,
+        probe_d2=probe_d2,
+        cluster_ids=cluster_ids,
+        shard_ids=None if shards is None else np.unique(shards[cluster_ids]),
+        qprobe={
+            int(c): sq[bounds[i] : bounds[i + 1]]
+            for i, c in enumerate(cluster_ids)
+        },
+    )
+
+
+def prune(table: DataFrame, shard_ids, cluster_ids) -> DataFrame:
+    """J4/P6/S8 — literal ``shard_id IN (...) AND cluster_id IN (...)``
+    predicates: Hive partition pruning reads only the probed shard
+    directories, and the cluster-sorted layout's row-group stats skip
+    non-probed clusters inside them. cluster ids are globally unique,
+    so the cluster predicate alone is exact; ``shard_ids=None`` (a
+    frame with no shard layout) keeps only it."""
+    cond = F.col("cluster_id").isin([int(c) for c in cluster_ids])
+    if shard_ids is not None:
+        cond = F.col("shard_id").isin([int(s) for s in shard_ids]) & cond
+    return table.where(cond)
+
+
+def rank_winners(local: DataFrame, k: int, dist_col: str) -> DataFrame:
+    """W2 — global ``(dist, id)`` window rank over the map-side local
+    top-k winners."""
+    w = Window.partitionBy("query_id").orderBy(dist_col, "neighbor_id")
+    return (
+        local.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "rank", "neighbor_id", dist_col)
+    )
+
+
+def empty_result(spark: SparkSession, dist_col: str) -> DataFrame:
+    """The result of an empty query batch (hamming counts are long,
+    every distance is double)."""
+    dtype = "long" if dist_col == "hamming" else "double"
+    return spark.createDataFrame(
+        [], f"query_id long, rank int, neighbor_id long, {dist_col} {dtype}"
+    )
+
+
+def search_persisted(
+    spark: SparkSession,
+    index: IvfHandle,
+    queries: DataFrame,
+    k: int,
+    n_probe: int,
+    codes: DataFrame | None,
+    dist_col: str,
+    score: Callable[[DataFrame, ProbePlan, np.ndarray], DataFrame],
+    query_id_col: str,
+    query_col: str,
+) -> DataFrame:
+    """The persisted compressed-tier search: one query collect → one
+    driver probe plan against the index's centroid matrix → literal
+    IN pruning of the codes table (``codes`` overrides the scan) →
+    ``score(pruned, plan, centroids)``, the tier's kernel. Every
+    query's candidates come from exactly its own probe list, flat or
+    hierarchical — the scan and the scorer cannot disagree."""
+    if k <= 0 or n_probe <= 0:
+        raise ValueError("k and n_probe must be positive")  # P3
+    batch = collect_queries(queries, index.dimension, query_id_col, query_col)
+    if batch is None:
+        return empty_result(spark, dist_col)
+    plan = probe_plan(
+        *batch,
+        index.centroids,
+        n_probe,
+        shards=index.centroid_shards,
+        hierarchy=index.probe_hierarchy,
+    )
+    table = codes if codes is not None else index.codes(spark)
+    return score(
+        prune(table, plan.shard_ids, plan.cluster_ids), plan, index.centroids
+    )
+
+
+def search_frames(
+    codes_df: DataFrame,
+    centroids: DataFrame,
+    queries: DataFrame,
+    n_probe: int,
+    dist_col: str,
+    score: Callable[[DataFrame, ProbePlan, np.ndarray], DataFrame],
+    query_id_col: str,
+    query_col: str,
+    centroid_id_col: str,
+    centroid_vec_col: str,
+) -> DataFrame:
+    """Composable-stage twin of :func:`search_persisted`: the same
+    plan, ranked flat against a (possibly id-restricted) centroid
+    DataFrame, then the same cluster IN pruning and tier scorer."""
+    cents, present = collect_centroids(
+        centroids, centroid_id_col, centroid_vec_col
+    )
+    batch = collect_queries(queries, cents.shape[1], query_id_col, query_col)
+    if batch is None:
+        return empty_result(codes_df.sparkSession, dist_col)
+    ids = np.flatnonzero(present)
+    plan = probe_plan(*batch, cents[ids], n_probe, ids=ids)
+    # the literal IN predicate drops non-probed rows before the kernel
+    # decodes them — without it the kernel decoded and scored every
+    # row of every partition (measured 16.7 s → pruned cost at 1M,
+    # synth workload probing ~6% of rows)
+    return score(prune(codes_df, None, plan.cluster_ids), plan, cents)
 
 
 def _warn_missing_shards(index: IvfIndex) -> None:
@@ -354,10 +539,7 @@ def _pruned_scan(
     id_col/vec_col), so downstream scoring never sees build-time names.
     """
     base = vectors if vectors is not None else index.vectors(spark)
-    pruned = base.where(
-        F.col("shard_id").isin([int(s) for s in shard_ids])
-        & F.col("cluster_id").isin([int(c) for c in cluster_ids])
-    )
+    pruned = prune(base, shard_ids, cluster_ids)
     if filter_expr is not None:
         pruned = pruned.filter(filter_expr)
     return pruned.select(
@@ -421,7 +603,7 @@ def _search_arrow(
     spark, index, queries, k, n_probe, query_id_col, query_col, vectors,
     filter_expr=None,
 ):
-    """Two-action pipeline: collect queries → driver probe ranking →
+    """Two-action pipeline: collect queries → driver probe plan →
     one pruned scan+score+rank job."""
     if index.centroids is None:
         # lazily-loaded handle (load_index(lazy_centroids=True)): no
@@ -431,48 +613,33 @@ def _search_arrow(
             spark, index, queries, k, n_probe, query_id_col, query_col,
             vectors, filter_expr,
         )
-    qrows = queries.select(query_id_col, query_col).collect()
-    if not qrows:
-        return spark.createDataFrame(
-            [], "query_id long, rank int, neighbor_id long, dist2 double"
-        )
-    # P2 — validate on the collected batch (no extra Spark job)
-    bad = sum(1 for r in qrows if len(r[1]) != index.dimension)
-    if bad:
-        raise ValueError(f"{bad} queries have dimension != {index.dimension}")
-    if len(qrows) > _ARROW_MAX_QUERY_BATCH:
-        # bulk batch: the masked all-queries GEMM would waste
-        # ~(1 − n_probe/nlist) of its flops. While the query matrix
-        # still fits the broadcast budget, use the per-cluster GEMM
-        # kernel (each cluster's rows scored against ONLY its probing
-        # queries — the same shape as the IVF-BQ/SQ r9 rewrites,
-        # measured ~10× faster than the relational join at 20k–100k
-        # queries); beyond the budget the query side is a corpus and
-        # the fully-relational plan is the only honest shape.
-        qmat_bytes = len(qrows) * index.dimension * 8
-        if qmat_bytes <= _ARROW_BULK_QUERY_BYTES:
-            return _search_arrow_bulk(
-                spark, index, qrows, k, n_probe, vectors, filter_expr
-            )
+    batch = collect_queries(queries, index.dimension, query_id_col, query_col)
+    if batch is None:
+        return empty_result(spark, "dist2")
+    qids, qmat = batch
+    # bulk batch: the masked all-queries GEMM would waste
+    # ~(1 − n_probe/nlist) of its flops. While the query matrix still
+    # fits the broadcast budget, use the per-cluster GEMM kernel (each
+    # cluster's rows scored against ONLY its probing queries — the
+    # same shape as the IVF-BQ/SQ r9 rewrites, measured ~10× faster
+    # than the relational join at 20k–100k queries); beyond the budget
+    # the query side is a corpus and the fully-relational plan is the
+    # only honest shape.
+    bulk = len(qids) > _ARROW_MAX_QUERY_BATCH
+    if bulk and qmat.nbytes > _ARROW_BULK_QUERY_BYTES:
         return _search_native(
             spark, index, queries, k, n_probe, query_id_col, query_col,
             vectors, filter_expr,
         )
-
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qmat = stack_arrays([r[1] for r in qrows])
-    # J3/W1 on the driver: top-n_probe per query — flat (nq, nlist)
-    # distances below _HIER_PROBE_NLIST, two-stage meta shortlist above
-    if index.nlist >= _HIER_PROBE_NLIST:
-        meta_c, meta_l = index.probe_hierarchy()
-        _, probe_ids = topk_per_row_hierarchical(
-            qmat, index.centroids, meta_c, meta_l, n_probe
-        )
-    else:
-        d2 = pairwise_dist2(qmat, index.centroids)
-        _, probe_ids = topk_per_row(d2, n_probe)
-    cluster_ids = np.unique(probe_ids)  # sorted
-    if len(qids) * len(cluster_ids) > _ARROW_DENSE_MASK_LIMIT:
+    plan = probe_plan(
+        qids,
+        qmat,
+        index.centroids,
+        n_probe,
+        shards=index.centroid_shards,
+        hierarchy=index.probe_hierarchy,
+    )
+    if not bulk and len(qids) * len(plan.cluster_ids) > _ARROW_DENSE_MASK_LIMIT:
         # the dense bool mask alone would exceed the broadcast budget —
         # run the batch through the fully-distributed relational path
         # (same semantics, no driver-sized state)
@@ -480,66 +647,32 @@ def _search_arrow(
             spark, index, queries, k, n_probe, query_id_col, query_col,
             vectors, filter_expr,
         )
-    shard_ids = np.unique(index.centroid_shards[cluster_ids])
+    pruned = _pruned_scan(
+        spark, index, vectors, plan.shard_ids, plan.cluster_ids, filter_expr
+    )
+    if bulk:
+        return _search_arrow_bulk(spark, pruned, plan, k)
     # (nq, n_probed_clusters) membership mask over the compacted
     # cluster list — the executor-side scoring mask
-    pos = {int(c): i for i, c in enumerate(cluster_ids)}
-    probe_mask = np.zeros((len(qids), len(cluster_ids)), dtype=bool)
-    for qi in range(len(qids)):
-        probe_mask[qi, [pos[int(c)] for c in probe_ids[qi]]] = True
-    pruned = _pruned_scan(
-        spark, index, vectors, shard_ids, cluster_ids, filter_expr
-    )
+    probe_mask = np.zeros((len(qids), len(plan.cluster_ids)), dtype=bool)
+    probe_mask[
+        np.arange(len(qids))[:, None],
+        np.searchsorted(plan.cluster_ids, plan.probe_ids),
+    ] = True
     return _score_arrow_scan(
-        spark, pruned, qids, qmat, cluster_ids, probe_mask, k
+        spark, pruned, qids, qmat, plan.cluster_ids, probe_mask, k
     )
 
 
-def _search_arrow_bulk(spark, index, qrows, k, n_probe, vectors, filter_expr):
+def _search_arrow_bulk(spark, pruned, plan, k):
     """Bulk-batch arrow search: per-cluster GEMM of each cluster's rows
     against ONLY the queries probing it (work ∝ probed rows × probing
     queries — the IVF-BQ/SQ r9 kernel shape), for query batches too
     large for the masked all-queries GEMM but small enough to
-    broadcast. Probe ranking runs on the driver in bounded query
+    broadcast. The probe plan ranked on the driver in bounded query
     chunks; the global rank is a window (a bulk batch is past the
     driver-merge regime by definition)."""
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qmat = stack_arrays([r[1] for r in qrows])
-    nq = len(qids)
-    # chunked driver probe ranking — never materialize (nq, nlist)
-    hier = index.nlist >= _HIER_PROBE_NLIST
-    meta = index.probe_hierarchy() if hier else None
-    probe_chunks = []
-    for lo in range(0, nq, _BULK_PROBE_CHUNK):
-        chunk = qmat[lo : lo + _BULK_PROBE_CHUNK]
-        if hier:
-            _, pids = topk_per_row_hierarchical(
-                chunk, index.centroids, meta[0], meta[1], n_probe
-            )
-        else:
-            _, pids = topk_per_row(
-                pairwise_dist2(chunk, index.centroids), n_probe
-            )
-        probe_chunks.append(pids)
-    probe_ids = np.concatenate(probe_chunks, axis=0)  # (nq, n_probe)
-    cluster_ids = np.unique(probe_ids)
-    shard_ids = np.unique(index.centroid_shards[cluster_ids])
-    # invert to per-cluster probing-query index lists via one sort of
-    # the flattened (cluster, query) pairs — O(nq·n_probe log ·)
-    flat_c = probe_ids.reshape(-1)
-    flat_q = np.repeat(np.arange(nq, dtype=np.int64), probe_ids.shape[1])
-    order = np.argsort(flat_c, kind="stable")
-    sc, sq = flat_c[order], flat_q[order]
-    bounds = np.searchsorted(sc, cluster_ids)
-    bounds = np.append(bounds, len(sc))
-    qprobe = {
-        int(c): sq[bounds[i] : bounds[i + 1]]
-        for i, c in enumerate(cluster_ids)
-    }
-    pruned = _pruned_scan(
-        spark, index, vectors, shard_ids, cluster_ids, filter_expr
-    )
-    bc = spark.sparkContext.broadcast((qids, qmat, qprobe))
+    bc = spark.sparkContext.broadcast((plan.qids, plan.qmat, plan.qprobe))
 
     def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         qids_, qmat_, qprobe_ = bc.value
@@ -568,12 +701,7 @@ def _search_arrow_bulk(spark, index, qrows, k, n_probe, vectors, filter_expr):
     local = pruned.select("id", "values", "cluster_id").mapInPandas(
         _score, "query_id long, neighbor_id long, dist2 double"
     )
-    w = Window.partitionBy("query_id").orderBy("dist2", "neighbor_id")
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "dist2")
-    )
+    return rank_winners(local, k, "dist2")
 
 
 def _score_native(vectors, probes, queries, k, query_id_col, query_col):
@@ -656,9 +784,7 @@ def _score_arrow_scan(spark, vectors, qids, qmat, cluster_ids, probe_mask, k):
     if est_rows <= _DRIVER_MERGE_LIMIT:
         pdf = local.toPandas()
         if pdf.empty:
-            return spark.createDataFrame(
-                [], "query_id long, rank int, neighbor_id long, dist2 double"
-            )
+            return empty_result(spark, "dist2")
         order = np.lexsort(
             (pdf["neighbor_id"].to_numpy(), pdf["dist2"].to_numpy(),
              pdf["query_id"].to_numpy())
@@ -670,12 +796,7 @@ def _score_arrow_scan(spark, vectors, qids, qmat, cluster_ids, probe_mask, k):
         return spark.createDataFrame(
             out, "query_id long, rank int, neighbor_id long, dist2 double"
         )
-    w = Window.partitionBy("query_id").orderBy("dist2", "neighbor_id")
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "dist2")
-    )
+    return rank_winners(local, k, "dist2")
 
 
 def range_search(

@@ -38,15 +38,40 @@ from __future__ import annotations
 
 import json
 import os
+from collections.abc import Iterator
 from dataclasses import dataclass
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from vector_indexer_spark.functions.kernels import chunked_topk, topk_per_row
 from vector_indexer_spark.ioutil import atomic_write_json
+from vector_indexer_spark.operators.index_build import (
+    IvfHandle,
+    append_rows,
+    attach_shards,
+    check_build_input,
+    coarse_stage,
+    handle_meta,
+    load_layout,
+    read_meta,
+    write_centroids,
+    write_meta,
+    write_sharded,
+)
+from vector_indexer_spark.operators.search import (
+    collect_queries,
+    empty_result,
+    rank_winners,
+    search_frames,
+    search_persisted,
+)
 
 SQ_FORMAT_VERSION = 1
 SQ_LEVELS = 255  # 8-bit codes: 0..255
+_META = "ivfsq_meta.json"
 
 
 @dataclass(frozen=True)
@@ -73,15 +98,14 @@ class SQModel:
 
     def save(self, path: str) -> None:
         os.makedirs(path, exist_ok=True)
-        with open(os.path.join(path, "sq_model.json"), "w") as fh:
-            json.dump(
-                {
-                    "version": SQ_FORMAT_VERSION,
-                    "dmin": list(self.dmin),
-                    "dmax": list(self.dmax),
-                },
-                fh,
-            )
+        atomic_write_json(
+            os.path.join(path, "sq_model.json"),
+            {
+                "version": SQ_FORMAT_VERSION,
+                "dmin": list(self.dmin),
+                "dmax": list(self.dmax),
+            },
+        )
 
     @classmethod
     def load(cls, path: str) -> "SQModel":
@@ -252,29 +276,11 @@ def _sq_search_native(codes_df, model, queries, k, query_id_col, query_col):
 
 
 def _sq_search_arrow(codes_df, model, queries, k, query_id_col, query_col):
-    from collections.abc import Iterator  # noqa: PLC0415
-
-    import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
-
-    from vector_indexer_spark.functions.kernels import (  # noqa: PLC0415
-        chunked_topk,
-        stack_arrays,
-    )
-
     spark = codes_df.sparkSession
-    qrows = queries.select(query_id_col, query_col).collect()
-    if not qrows:
-        return spark.createDataFrame(
-            [], "query_id long, rank int, neighbor_id long, adist2 double"
-        )
-    qids = [r[0] for r in qrows]
-    qmat = stack_arrays([r[1] for r in qrows])
-    if qmat.shape[1] != model.dimension:
-        raise ValueError(
-            f"query dimension {qmat.shape[1]} != SQ dimension "
-            f"{model.dimension}"
-        )
+    batch = collect_queries(queries, model.dimension, query_id_col, query_col)
+    if batch is None:
+        return empty_result(spark, "adist2")
+    qids, qmat = batch
     dmin = np.asarray(model.dmin, dtype=np.float64)
     scale = np.asarray(model.scale, dtype=np.float64)
     bstate = spark.sparkContext.broadcast((qids, qmat, dmin, scale))
@@ -302,12 +308,7 @@ def _sq_search_arrow(codes_df, model, queries, k, query_id_col, query_col):
     local = codes_df.select("id", "codes").mapInPandas(
         local_topk, "query_id long, neighbor_id long, adist2 double"
     )
-    w = Window.partitionBy("query_id").orderBy("adist2", "neighbor_id")
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "adist2")
-    )
+    return rank_winners(local, k, "adist2")
 
 
 # ---------------------------------------------------------------------------
@@ -447,8 +448,11 @@ def ivfsq_search(
     if k <= 0 or n_probe <= 0:
         raise ValueError("k and n_probe must be positive")  # P3
     if method == "arrow":
-        return _ivfsq_search_arrow(
-            codes_df, centroids, model, queries, k, n_probe,
+        return search_frames(
+            codes_df, centroids, queries, n_probe, "adist2",
+            lambda pruned, plan, cents: _ivfsq_score(
+                pruned, plan, cents, model, k
+            ),
             query_id_col, query_col, centroid_id_col, centroid_vec_col,
         )
     if method != "native":
@@ -513,28 +517,8 @@ IVFSQ_FORMAT_VERSION = 1
 
 
 @dataclass
-class IvfSqIndex:
-    path: str
-    dimension: int
-    nlist: int
-    n_shards: int
-    seed: int
-    n_vectors: int
-    centroids: object  # (nlist, d) float64 ndarray
-    centroid_shards: object  # (nlist,) int64 ndarray
+class IvfSqIndex(IvfHandle):
     sq: SQModel  # residual quantizer
-
-    def codes(self, spark) -> DataFrame:
-        return spark.read.parquet(os.path.join(self.path, "codes"))
-
-    def centroids_df(self, spark) -> DataFrame:
-        return spark.createDataFrame(
-            [
-                (int(i), [float(x) for x in self.centroids[i]])
-                for i in range(self.nlist)
-            ],
-            "centroid_id long, cvec array<float>",
-        )
 
 
 def build_ivfsq_index(
@@ -557,137 +541,38 @@ def build_ivfsq_index(
     query-time scan Hive-prunes to probed shards exactly like the flat
     index.
     """
-    from vector_indexer_spark.config import (  # noqa: PLC0415
-        calculate_max_iterations,
-        suggest_nlist,
+    n, dimension = check_build_input(df, vec_col, None)
+    assigned, dense, base = coarse_stage(
+        df, path, n, dimension, vec_col=vec_col, nlist=nlist, seed=seed,
+        mode=mode, max_iters=max_iters,
     )
-    from vector_indexer_spark.operators.index_build import (  # noqa: PLC0415
-        dense_relabel_and_shards,
+    # residuals are taken against the float32 centroids the table
+    # stores, so the handle holds exactly what a reload would read
+    base.centroids = base.centroids.astype(np.float32).astype(np.float64)
+    dense = dense.select(
+        F.col(id_col).alias("id"), F.col(vec_col).alias("__vec"), "cluster_id"
     )
-    from vector_indexer_spark.operators.kmeans import (  # noqa: PLC0415
-        assign_clusters,
-        kmeans_fit,
-    )
-
-    spark = df.sparkSession
-    n = df.count()
-    if n == 0:
-        raise ValueError("cannot build an index from an empty DataFrame")
-    dimension = len(df.select(vec_col).first()[0])
-    bad = df.filter(F.size(vec_col) != dimension).count()
-    if bad:
-        raise ValueError(f"{bad} records have dimension != {dimension}")
-
-    nlist = nlist or suggest_nlist(n)
-    max_iters = max_iters or calculate_max_iterations(n)
-    model = kmeans_fit(
-        df, nlist, vec_col=vec_col, max_iters=max_iters, seed=seed, mode=mode
-    )
-    assigned = assign_clusters(
-        df, model.centroids, vec_col=vec_col, out_col="__raw_cluster",
-        seed=seed,
-    ).cache()
-    counts = {
-        r["__raw_cluster"]: r["cnt"]
-        for r in assigned.groupBy("__raw_cluster")
-        .agg(F.count("*").alias("cnt"))
-        .collect()
-    }
-    relabel, centroids, eff_nlist, n_sh, shard_of = dense_relabel_and_shards(
-        counts, model.centroids, seed
-    )
-    mapping = spark.createDataFrame(
-        [
-            (int(old), int(new), int(shard_of[new]))
-            for old, new in relabel.items()
-        ],
-        "__raw_cluster long, cluster_id long, shard_id long",
-    )
-    dense = assigned.join(F.broadcast(mapping), "__raw_cluster").select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("__vec"),
-        "cluster_id",
-        "shard_id",
-    )
-    cents_df = spark.createDataFrame(
-        [
-            (int(i), [float(x) for x in centroids[i]], int(shard_of[i]))
-            for i in range(eff_nlist)
-        ],
-        "centroid_id long, cvec array<float>, shard_id long",
-    )
+    cents_df = base.centroids_df(df.sparkSession)
     kw = dict(id_col="id", vec_col="__vec")
     sqm = ivfsq_train(dense, cents_df, **kw)
-    codes = ivfsq_encode(dense, cents_df, sqm, **kw).join(
-        F.broadcast(mapping.select("cluster_id", "shard_id").distinct()),
-        "cluster_id",
-    )
-    (
-        codes.repartition("shard_id")
-        .sortWithinPartitions("shard_id", "cluster_id")
-        .write.mode("overwrite")
-        .partitionBy("shard_id")
-        .parquet(os.path.join(path, "codes"))
+    write_sharded(
+        attach_shards(ivfsq_encode(dense, cents_df, sqm, **kw), base),
+        base.codes_path(),
+        "overwrite",
     )
     assigned.unpersist()
-    cents_df.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(path, "centroids")
+    write_centroids(
+        df.sparkSession, path, "cvec", base.centroids, base.centroid_shards
     )
     sqm.save(path)
-    meta = {
-        "version": IVFSQ_FORMAT_VERSION,
-        "kind": "ivfsq",
-        "dimension": dimension,
-        "nlist": eff_nlist,
-        "n_shards": n_sh,
-        "seed": seed,
-        "n_vectors": n,
-    }
-    with open(os.path.join(path, "ivfsq_meta.json"), "w") as fh:
-        json.dump(meta, fh, indent=2)
-    return IvfSqIndex(
-        path=path,
-        dimension=dimension,
-        nlist=eff_nlist,
-        n_shards=n_sh,
-        seed=seed,
-        n_vectors=n,
-        centroids=centroids,
-        centroid_shards=shard_of,
-        sq=sqm,
-    )
+    write_meta(path, _META, handle_meta(base, IVFSQ_FORMAT_VERSION, "ivfsq"))
+    return IvfSqIndex(**vars(base), sq=sqm)
 
 
 def load_ivfsq_index(spark, path: str) -> IvfSqIndex:
-    import numpy as np  # noqa: PLC0415
-
-    meta_path = os.path.join(path, "ivfsq_meta.json")
-    if not os.path.exists(meta_path):
-        raise FileNotFoundError(f"no IVF-SQ index at {path}")
-    with open(meta_path) as fh:
-        meta = json.load(fh)
-    if meta.get("version") != IVFSQ_FORMAT_VERSION:
-        raise ValueError(
-            f"unsupported IVF-SQ version {meta.get('version')!r}"
-        )
-    rows = (
-        spark.read.parquet(os.path.join(path, "centroids"))
-        .orderBy("centroid_id")
-        .collect()
-    )
-    return IvfSqIndex(
-        path=path,
-        dimension=meta["dimension"],
-        nlist=meta["nlist"],
-        n_shards=meta["n_shards"],
-        seed=meta["seed"],
-        n_vectors=meta["n_vectors"],
-        centroids=np.asarray([r.cvec for r in rows], dtype=np.float64),
-        centroid_shards=np.asarray(
-            [r.shard_id for r in rows], dtype=np.int64
-        ),
-        sq=SQModel.load(path),
-    )
+    meta = read_meta(path, _META, IVFSQ_FORMAT_VERSION, "IVF-SQ")
+    fields, _ = load_layout(spark, path, meta, "cvec")
+    return IvfSqIndex(**fields, sq=SQModel.load(path))
 
 
 def search_ivfsq_index(
@@ -701,122 +586,46 @@ def search_ivfsq_index(
     query_col: str = "query",
     codes: DataFrame | None = None,
 ) -> DataFrame:
-    """Pruned search against the persisted index: probe ranking on the
-    driver-resident centroid matrix → literal shard/cluster predicates
+    """Pruned search against the persisted index: one driver probe plan
+    on the resident centroid matrix → literal shard/cluster predicates
     (Hive partition pruning + row-group stats on the cluster-sorted
-    layout) → the JVM decode-and-score of :func:`ivfsq_search` over
-    only the scanned clusters."""
-    if k <= 0 or n_probe <= 0:
-        raise ValueError("k and n_probe must be positive")  # P3
-    from vector_indexer_spark.operators.search import (  # noqa: PLC0415
-        _HIER_PROBE_NLIST,
-        probe_hierarchy_for,
-        rank_probes,
-    )
-
-    probes = rank_probes(
-        queries,
-        index.centroids,
-        index.centroid_shards,
-        min(n_probe, index.nlist),
-        query_id_col=query_id_col,
-        query_col=query_col,
-        hierarchy=(
-            probe_hierarchy_for(index)
-            if index.nlist >= _HIER_PROBE_NLIST
-            else None
+    layout) → the decode-and-score kernel of :func:`ivfsq_search` over
+    exactly each query's own probed clusters."""
+    return search_persisted(
+        spark, index, queries, k, n_probe, codes, "adist2",
+        lambda pruned, plan, cents: _ivfsq_score(
+            pruned, plan, cents, index.sq, k
         ),
-    )
-    pc = probes.select("cluster_id", "shard_id").distinct().collect()
-    shard_ids = sorted({r.shard_id for r in pc})
-    cluster_ids = sorted({r.cluster_id for r in pc})
-    base = codes if codes is not None else index.codes(spark)
-    pruned = base.where(
-        F.col("shard_id").isin(shard_ids)
-        & F.col("cluster_id").isin(cluster_ids)
-    )
-    return ivfsq_search(
-        pruned,
-        index.centroids_df(spark),
-        index.sq,
-        queries,
-        k,
-        min(n_probe, index.nlist),
-        query_id_col=query_id_col,
-        query_col=query_col,
+        query_id_col, query_col,
     )
 
 
-def _ivfsq_search_arrow(
-    codes_df, centroids, model, queries, k, n_probe,
-    query_id_col, query_col, centroid_id_col, centroid_vec_col,
-):
-    from collections.abc import Iterator  # noqa: PLC0415
-
-    import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
-
-    from vector_indexer_spark.functions.kernels import (  # noqa: PLC0415
-        stack_arrays,
-        topk_per_row,
-    )
-
-    spark = codes_df.sparkSession
-    qrows = queries.select(query_id_col, query_col).collect()
-    if not qrows:
-        return spark.createDataFrame(
-            [], "query_id long, rank int, neighbor_id long, adist2 double"
+def _ivfsq_score(codes_df, plan, cents, model, k):
+    """Arrow decode-and-score over a pruned codes scan: each cluster's
+    block is reconstructed (``c + dmin + code·scale``) and scored
+    against ONLY the queries that probe it (the masked all-queries
+    GEMM scored every query against every kept row and discarded the
+    misses — at 256 localized queries / 16 of 4000 probes that is
+    ~99% wasted flops; same fix as the IVF-BQ arrow kernel), local
+    top-k map-side, winners-only window rank."""
+    if plan.qmat.shape[1] != model.dimension:
+        raise ValueError(
+            f"query dimension {plan.qmat.shape[1]} != SQ dimension "
+            f"{model.dimension}"
         )
-    qids = np.asarray([r[0] for r in qrows], dtype=np.int64)
-    qmat = stack_arrays([r[1] for r in qrows]).astype(np.float64)
-    crows = centroids.select(centroid_id_col, centroid_vec_col).collect()
-    nlist = 1 + max(r[0] for r in crows)
-    cents = np.zeros((nlist, qmat.shape[1]), dtype=np.float64)
-    for r in crows:
-        cents[r[0]] = np.asarray(r[1], dtype=np.float64)
-    # probe matrix: P[q, c] = query q probes cluster c (driver ranking —
-    # centroid matrix is driver-resident by contract, same as the flat
-    # index's rank_probes)
-    d2c = (
-        np.einsum("ij,ij->i", qmat, qmat)[:, None]
-        - 2.0 * (qmat @ cents.T)
-        + np.einsum("ij,ij->i", cents, cents)[None, :]
-    )
-    np_eff = min(n_probe, nlist)
-    order = np.argsort(d2c, axis=1, kind="stable")[:, :np_eff]
-    pmask = np.zeros((len(qids), nlist), dtype=bool)
-    np.put_along_axis(pmask, order, True, axis=1)
     dmin = np.asarray(model.dmin, dtype=np.float64)
     scale = np.asarray(model.scale, dtype=np.float64)
-    # per-cluster probing-query index: each cluster's block is scored
-    # against ONLY the queries that probe it (the masked all-queries
-    # GEMM scored every query against every kept row and discarded the
-    # misses — at 256 localized queries / 16 of 4000 probes that is
-    # ~99% wasted flops; same fix as the IVF-BQ arrow kernel)
-    qprobe = {
-        int(c): np.flatnonzero(pmask[:, c])
-        for c in np.flatnonzero(pmask.any(axis=0))
-    }
-    # ship only the (nlist,) probed-cluster vector, not the full
-    # (n_queries × nlist) pmask — qprobe carries the per-cluster query
-    # index; the kernel needs pmask for nothing else
-    probed = pmask.any(axis=0)
-    bstate = spark.sparkContext.broadcast(
-        (qids, qmat, probed, qprobe, cents, dmin, scale)
+    bstate = codes_df.sparkSession.sparkContext.broadcast(
+        (plan.qids, plan.qmat, plan.qprobe, cents, dmin, scale)
     )
 
     def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids_, qmat_, probed_, qprobe_, cents_, dmin_, scale_ = bstate.value
+        qids_, qmat_, qprobe_, cents_, dmin_, scale_ = bstate.value
         qsq = np.einsum("ij,ij->i", qmat_, qmat_)
         for pdf in batches:
             if pdf.empty:
                 continue
             cl = pdf["cluster_id"].to_numpy()
-            keep = probed_[cl]  # probed by ANY query
-            if not keep.any():
-                continue
-            pdf = pdf.loc[keep]
-            cl = cl[keep]
             codes = np.asarray(
                 [np.asarray(c, dtype=np.float64) for c in pdf["codes"]]
             )
@@ -849,12 +658,7 @@ def _ivfsq_search_arrow(
     local = codes_df.select("id", "cluster_id", "codes").mapInPandas(
         local_topk, "query_id long, neighbor_id long, adist2 double"
     )
-    w = Window.partitionBy("query_id").orderBy("adist2", "neighbor_id")
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "adist2")
-    )
+    return rank_winners(local, k, "adist2")
 
 
 def add_vectors_ivfsq(
@@ -875,50 +679,18 @@ def add_vectors_ivfsq(
     files, bump the meta count. One shuffle of the new batch only.
     Returns ``{n_added, n_vectors}``.
     """
-    from vector_indexer_spark.operators.index_build import (  # noqa: PLC0415
-        validate_add_batch,
-    )
-    from vector_indexer_spark.operators.kmeans import (  # noqa: PLC0415
-        assign_clusters,
-    )
-
-    n_new = validate_add_batch(
-        df,
-        id_col=id_col,
-        vec_col=vec_col,
-        dimension=index.dimension,
-        existing_ids=(
-            index.codes(spark).select("id") if check_duplicate_ids else None
+    cents_df = index.centroids_df(spark)
+    n_new = append_rows(
+        spark,
+        index,
+        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("__vec")),
+        index.codes_path(),
+        _META,
+        id_col="id",
+        vec_col="__vec",
+        check_duplicate_ids=check_duplicate_ids,
+        encode=lambda assigned: ivfsq_encode(
+            assigned, cents_df, index.sq, id_col="id", vec_col="__vec"
         ),
     )
-    assigned = assign_clusters(
-        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("__vec")),
-        index.centroids,
-        vec_col="__vec",
-        out_col="cluster_id",
-        seed=index.seed,
-    )
-    shard_map = spark.createDataFrame(
-        [(int(c), int(s)) for c, s in enumerate(index.centroid_shards)],
-        "cluster_id long, shard_id long",
-    )
-    codes = ivfsq_encode(
-        assigned, index.centroids_df(spark), index.sq,
-        id_col="id", vec_col="__vec",
-    )
-    (
-        codes.join(F.broadcast(shard_map), "cluster_id")
-        .select("id", "cluster_id", "codes", "shard_id")
-        .repartition("shard_id")
-        .sortWithinPartitions("shard_id", "cluster_id")
-        .write.mode("append")
-        .partitionBy("shard_id")
-        .parquet(os.path.join(index.path, "codes"))
-    )
-    meta_path = os.path.join(index.path, "ivfsq_meta.json")
-    with open(meta_path) as fh:
-        meta = json.load(fh)
-    meta["n_vectors"] = int(meta["n_vectors"]) + n_new
-    atomic_write_json(meta_path, meta)
-    index.n_vectors = meta["n_vectors"]
     return {"n_added": n_new, "n_vectors": index.n_vectors}

@@ -16,12 +16,13 @@ is stateless given the frozen centroid matrix.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from vector_indexer_spark.operators.index_build import IvfIndex
+from vector_indexer_spark.operators.index_build import (
+    IvfIndex,
+    attach_shards,
+    write_sharded,
+)
 from vector_indexer_spark.operators.kmeans import assign_clusters
 
 
@@ -35,16 +36,7 @@ def assign_and_shard(batch_df: DataFrame, index: IvfIndex) -> DataFrame:
         out_col="cluster_id",
         seed=index.seed,
     )
-    shard_map = batch_df.sparkSession.createDataFrame(
-        [
-            (int(c), int(s))
-            for c, s in enumerate(index.centroid_shards)
-        ],
-        "cluster_id long, shard_id long",
-    )
-    return assigned.join(F.broadcast(shard_map), "cluster_id").select(
-        *batch_df.columns, "cluster_id", "shard_id"
-    )
+    return attach_shards(assigned, index)
 
 
 def start_vector_ingest(
@@ -63,13 +55,8 @@ def start_vector_ingest(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        out = assign_and_shard(batch_df, index)
-        (
-            out.repartition("shard_id")
-            .sortWithinPartitions("shard_id", "cluster_id")
-            .write.mode("append")
-            .partitionBy("shard_id")
-            .parquet(os.path.join(index.path, "vectors"))
+        write_sharded(
+            assign_and_shard(batch_df, index), index.vectors_path, "append"
         )
 
     writer = (
