@@ -10,12 +10,18 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from vector_indexer_spark.operators.index_build import build_index, load_index
+from vector_indexer_spark.operators.index_build import (
+    build_index,
+    check_build_input,
+    collect_centroids,
+    load_index,
+)
 from vector_indexer_spark.operators.knn import knn_exact
 from vector_indexer_spark.operators.search import (
     calculate_recall,
     search_index,
 )
+from vector_indexer_spark.operators.sq import SQModel, ivfsq_search
 
 
 @pytest.fixture(scope="module")
@@ -87,6 +93,57 @@ def test_dim_mismatch_build_raises(spark):
     df = spark.createDataFrame(rows, "id long, values array<float>")
     with pytest.raises(ValueError, match="dim"):
         build_index(df, "/tmp/never-written", dimension=8)
+
+
+def test_null_vector_build_check_matches_size_filter(spark):
+    # the folded P1 count keeps the old filter's null-array semantics
+    rows = [(0, [1.0] * 8), (1, None), (2, [1.0] * 7)]
+    df = spark.createDataFrame(rows, "id long, values array<float>")
+    bad = df.filter(F.size("values") != 8).count()
+    with pytest.raises(ValueError, match=f"^{bad} records have dimension != 8"):
+        check_build_input(df, "values", 8)
+
+
+@pytest.mark.parametrize("dimension", [64, None])
+def test_build_counts_its_input_once(
+    spark, vec_df, tmp_path, monkeypatch, dimension
+):
+    """One build runs one ``count()`` (the k-means sample's, which
+    ``kmeans_fit`` reuses) and one ``first()`` for the folded row + P1
+    aggregation, plus one more ``first()`` only when it has to infer
+    the dimension."""
+    calls = {"count": 0, "first": 0}
+    cls = type(vec_df)
+    for name in calls:
+        orig = getattr(cls, name)
+
+        def wrapped(self, *a, _name=name, _orig=orig, **kw):
+            calls[_name] += 1
+            return _orig(self, *a, **kw)
+
+        monkeypatch.setattr(cls, name, wrapped)
+    index = build_index(
+        vec_df, str(tmp_path / "ix"), dimension=dimension, nlist=4, max_iters=2
+    )
+    monkeypatch.undo()
+    assert index.n_vectors == 500 and index.dimension == 64
+    assert calls == {"count": 1, "first": 1 if dimension else 2}
+
+
+def test_collect_centroids_empty_frame_raises(spark):
+    empty = spark.createDataFrame([], "centroid_id long, cvec array<double>")
+    with pytest.raises(ValueError, match="centroid frame is empty"):
+        collect_centroids(empty, "centroid_id", "cvec")
+    # the composable tier stages surface the same error
+    queries = spark.createDataFrame(
+        [(0, [0.0, 1.0])], "query_id long, query array<float>"
+    )
+    codes = spark.createDataFrame([], "id long, cluster_id long")
+    with pytest.raises(ValueError, match="centroid frame is empty"):
+        ivfsq_search(
+            codes, empty, SQModel((0.0, 0.0), (1.0, 1.0)), queries, k=1,
+            n_probe=1,
+        )
 
 
 @pytest.mark.parametrize("method", ["native", "arrow"])

@@ -188,12 +188,19 @@ def check_build_input(
     """Build-input contract of every tier: non-empty (reference: an
     empty build is an error, tests/api_tests.rs:265-271) and P1 — one
     dimension for every record, checked before any training. Returns
-    ``(n, dimension)``; ``dimension`` defaults to the first row's."""
-    n = df.count()
+    ``(n, dimension)``; ``dimension`` defaults to the first row's.
+    The row count and the P1 count are one aggregation."""
+    empty = ValueError("cannot build an index from an empty DataFrame")
+    if not dimension:
+        first = df.select(vec_col).first()
+        if first is None:
+            raise empty
+        dimension = len(first[0])
+    n, bad = df.agg(
+        F.count("*"), F.count(F.when(F.size(vec_col) != dimension, 1))
+    ).first()
     if n == 0:
-        raise ValueError("cannot build an index from an empty DataFrame")
-    dimension = dimension or len(df.select(vec_col).first()[0])
-    bad = df.filter(F.size(vec_col) != dimension).count()
+        raise empty
     if bad:
         raise ValueError(
             f"{bad} records have dimension != {dimension} (dim validation, P1)"
@@ -411,6 +418,10 @@ def collect_centroids(
     zero-filled rows that callers must bar from ranking and
     encoding."""
     rows = centroids.select(id_col, vec_col).collect()
+    if not rows:
+        raise ValueError(
+            "the centroid frame is empty: no clusters to probe or encode against"
+        )
     nlist = 1 + max(r[0] for r in rows)
     cents = np.zeros((nlist, len(rows[0][1])), dtype=np.float64)
     present = np.zeros(nlist, dtype=bool)

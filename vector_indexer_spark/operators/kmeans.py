@@ -127,8 +127,9 @@ def kmeans_pp_init(mat: np.ndarray, k: int, rng: np.random.Generator) -> np.ndar
 
 def _collect_sample(
     df: DataFrame, vec_col: str, cap: int, seed: int
-) -> np.ndarray:
-    """Seeded sample of ≤cap vectors, collected to the driver as (m,d)."""
+) -> tuple[np.ndarray, int]:
+    """Seeded sample of ≤cap vectors, collected to the driver as (m,d),
+    plus the row count ``n`` of ``df`` it was drawn from."""
     n = df.count()
     if n == 0:
         raise ValueError("cannot fit k-means on an empty DataFrame")
@@ -139,7 +140,7 @@ def _collect_sample(
         # Bernoulli variance, then hard-limit for determinism of size
         frac = min(1.0, (cap * 1.2) / n)
         rows = df.select(vec_col).sample(False, frac, seed=seed).limit(cap).collect()
-    return stack_arrays([r[0] for r in rows])
+    return stack_arrays([r[0] for r in rows]), n
 
 
 # ---------------------------------------------------------------------------
@@ -342,8 +343,7 @@ def kmeans_fit(
         df = df.cache()
         we_cached = True
     try:
-        sample = _collect_sample(df, vec_col, sample_cap, seed)
-        n_est = df.count()
+        sample, n_est = _collect_sample(df, vec_col, sample_cap, seed)
         if max_iters is None:
             max_iters = calculate_max_iterations(n_est)
         centroids = kmeans_pp_init(sample, k, rng)

@@ -168,7 +168,7 @@ def pq_train(
         raise ValueError("m and ksub must be positive")
     if ksub > 2**16:
         raise ValueError("ksub above 65536 is not supported")
-    sample = _collect_sample(df, vec_col, sample_cap, seed)
+    sample, _ = _collect_sample(df, vec_col, sample_cap, seed)
     d = sample.shape[1]
     if d % m != 0:
         raise ValueError(f"dimension {d} not divisible by m={m}")
@@ -527,7 +527,7 @@ def build_ivfpq_index(
 
     # 3. PQ on residual sample (seed offset keeps the PQ sample draw
     # independent of the coarse-training draw)
-    sample = _collect_sample(df, vec_col, KMEANS_INIT_SAMPLE_CAP, seed + 1)
+    sample, _ = _collect_sample(df, vec_col, KMEANS_INIT_SAMPLE_CAP, seed + 1)
     res = sample - centroids[assign_nearest(sample, centroids)]
     dsub = dimension // m
     cb = np.zeros((m, ksub, dsub), dtype=np.float64)

@@ -6,13 +6,63 @@ kernels are pandas UDFs batched through Arrow), shuffle partitions
 sized to cores rather than the 200 default. On a 1000-executor
 cluster only ``master`` and the shuffle-partition count change — the
 engine code never assumes local mode.
+
+Importing this module inside a reused Python worker also runs
+:func:`_bootstrap_worker` once per worker process (the package
+``__init__`` imports it, and every package kernel's unpickling imports
+the package).
 """
 
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
+from pyspark import TaskContext
 from pyspark.sql import SparkSession
+
+_stdlib_zip_invalidate = zipimport.zipimporter.invalidate_caches
+
+
+def _zip_invalidate_if_changed(self) -> None:
+    """``zipimporter.invalidate_caches`` that re-reads the archive's
+    central directory only when its ``(st_mtime_ns, st_size, st_ino)``
+    changed since this importer last read it — the lazy behaviour
+    CPython 3.13 has, backported. The stat is taken before the read, so
+    a rewrite racing the read is seen by the next call."""
+    try:
+        st = os.stat(self.archive)
+        key = (st.st_mtime_ns, st.st_size, st.st_ino)
+    except OSError:
+        key = None
+    if key is not None and getattr(self, "_read_stat", None) == key:
+        return
+    _stdlib_zip_invalidate(self)
+    self._read_stat = key
+
+
+def _bootstrap_worker() -> None:
+    """Once per reused Python worker, stop every Arrow task from
+    re-reading ``pyspark.zip``.
+
+    Spark's per-task ``setup_spark_files`` calls
+    ``importlib.invalidate_caches()``. On CPython < 3.13 every
+    zipimporter then eagerly re-reads its archive's central directory —
+    one importer per package directory imported from ``pyspark.zip``
+    (3.5 MB), so ~16 full reads, most of a no-op task's CPU. Installing
+    the stat guard above skips unchanged archives.
+
+    A no-op on the driver (no ``TaskContext``) and in a worker that
+    serves only one task (``SPARK_REUSE_WORKER`` unset); installing it
+    again changes nothing.
+    """
+    if (
+        sys.version_info < (3, 13)
+        and os.environ.get("SPARK_REUSE_WORKER")
+        and TaskContext.get() is not None
+    ):
+        zipimport.zipimporter.invalidate_caches = _zip_invalidate_if_changed
 
 
 def _usable_ram_gb() -> int:
@@ -97,3 +147,6 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+_bootstrap_worker()
