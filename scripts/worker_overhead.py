@@ -1,8 +1,8 @@
 """Fixed Python-worker CPU per Arrow task.
 
-Runs ``--jobs`` no-op ``mapInPandas`` jobs of ``--tasks`` tasks each on a
-``get_spark()`` session, after ``--warmup`` untimed jobs that start the
-reused workers, and reads the CPU time of the Python worker processes
+Runs ``--jobs`` no-op ``mapInPandas`` jobs of 4 tasks each on a
+``get_spark()`` session, after 3 untimed jobs that start the reused
+workers, and reads the CPU time of the Python worker processes
 (every descendant of the Spark JVM: the daemon and its forked workers)
 from ``/proc`` before and after. The no-op imports the package, as the
 unpickling of every package kernel does, so the per-worker bootstrap of
@@ -24,38 +24,18 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-_TICK = os.sysconf("SC_CLK_TCK")
+from perfbench.procs import _TICK, _tree  # noqa: E402
 
-
-def _stats() -> dict[int, list[str]]:
-    """``/proc/<pid>/stat`` fields after the command name, by pid."""
-    out = {}
-    for name in os.listdir("/proc"):
-        if not name.isdigit():
-            continue
-        try:
-            with open(f"/proc/{name}/stat") as f:
-                stat = f.read()
-        except OSError:
-            continue
-        out[int(name)] = stat[stat.rindex(")") + 2 :].split()
-    return out
+TASKS = 4  # tasks per job
+WARMUP = 3  # untimed jobs that start the reused workers
 
 
 def worker_cpu_s(jvm_pid: int) -> tuple[float, int]:
     """CPU seconds (user + system, with reaped children) of every
     descendant of the JVM, and how many such processes are alive."""
-    stats = _stats()
-    children: dict[int, list[int]] = {}
-    for pid, fields in stats.items():
-        children.setdefault(int(fields[1]), []).append(pid)
-    ticks, todo, n = 0, list(children.get(jvm_pid, ())), 0
-    while todo:
-        pid = todo.pop()
-        todo.extend(children.get(pid, ()))
-        ticks += sum(map(int, stats[pid][11:15]))
-        n += 1
-    return ticks / _TICK, n
+    tree = _tree(jvm_pid)
+    tree.pop(jvm_pid, None)
+    return sum(sum(map(int, f[11:15])) for f in tree.values()) / _TICK, len(tree)
 
 
 def _noop(batches):
@@ -68,8 +48,6 @@ def _noop(batches):
 def main(argv=None) -> None:
     p = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     p.add_argument("--jobs", type=int, default=20)
-    p.add_argument("--tasks", type=int, default=4)
-    p.add_argument("--warmup", type=int, default=3)
     args = p.parse_args(argv)
 
     from pyspark import SparkContext
@@ -81,18 +59,18 @@ def main(argv=None) -> None:
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     jvm_pid = SparkContext._gateway.proc.pid
-    df = spark.range(args.tasks, numPartitions=args.tasks)
+    df = spark.range(TASKS, numPartitions=TASKS)
 
     def run_jobs(n: int) -> None:
         for _ in range(n):
             df.mapInPandas(_noop, "id long").collect()
 
-    run_jobs(args.warmup)
+    run_jobs(WARMUP)
     cpu0, _ = worker_cpu_s(jvm_pid)
     run_jobs(args.jobs)
     cpu1, n_procs = worker_cpu_s(jvm_pid)
     spark.stop()
-    n_tasks = args.jobs * args.tasks
+    n_tasks = args.jobs * TASKS
     print(
         json.dumps(
             {

@@ -28,9 +28,13 @@ _stdlib_zip_invalidate = zipimport.zipimporter.invalidate_caches
 def _zip_invalidate_if_changed(self) -> None:
     """``zipimporter.invalidate_caches`` that re-reads the archive's
     central directory only when its ``(st_mtime_ns, st_size, st_ino)``
-    changed since this importer last read it — the lazy behaviour
-    CPython 3.13 has, backported. The stat is taken before the read, so
-    a rewrite racing the read is seen by the next call."""
+    changed since this importer last read it: a stat-guarded skip, not
+    CPython 3.13's lazy re-read, which drops the cached directory and so
+    can never serve a stale one. The stat is taken before the read, so a
+    rewrite racing the read is seen by the next call. Limit: a rewrite
+    that keeps the size and lands within one tick of the file system's
+    mtime clock (``zipfile.ZipFile(path, "w")`` truncates in place, so
+    the inode stays) looks unchanged and is not re-read."""
     try:
         st = os.stat(self.archive)
         key = (st.st_mtime_ns, st.st_size, st.st_ino)
