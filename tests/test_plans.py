@@ -34,6 +34,17 @@ def test_pruned_scan_filters(spark, idx):
     assert any("shard_id" in f for f in s["partition_filters"])
     assert any("cluster_id" in f for f in s["pushed_filters"])
     assert s["shuffles"] == 0
+    # search's prune(): the same filters from one SQL predicate, at a
+    # probe-list size (>= 20 ids) where isin made a py4j call per id
+    from vector_indexer_spark.operators.search import prune
+
+    s = audit.plan_summary(prune(idx.vectors(spark), [0, 1], range(24)))
+    assert any("shard_id" in f for f in s["partition_filters"])
+    assert any("cluster_id" in f for f in s["pushed_filters"])
+    assert s["shuffles"] == 0
+    # an empty probe list selects nothing (not a parse error)
+    assert prune(idx.vectors(spark), [], []).count() == 0
+    assert prune(idx.vectors(spark), None, []).count() == 0
 
 
 def test_knn_native_broadcasts_queries(spark, embeddings):

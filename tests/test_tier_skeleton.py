@@ -134,7 +134,8 @@ def test_hierarchical_scan_score_agreement(
         )
 
 
-def _job_count(spark, fn) -> int:
+def _job_ids(spark, fn) -> list[int]:
+    """The ids of the Spark jobs ``fn()`` launches."""
     sc = spark.sparkContext
     group = f"jobcount-{uuid.uuid4().hex}"
     sc.setJobGroup(group, "job count", False)
@@ -148,7 +149,11 @@ def _job_count(spark, fn) -> int:
         import time
 
         time.sleep(2.0)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _job_count(spark, fn) -> int:
+    return len(_job_ids(spark, fn))
 
 
 def test_tier_searches_run_no_more_jobs_than_pq(
@@ -160,6 +165,11 @@ def test_tier_searches_run_no_more_jobs_than_pq(
     more jobs than IVF-PQ's search. IVF-OPQ hands its rotated matrix to
     the same plan instead of re-collecting a rebuilt query frame."""
     queries.count()
+    # a handle's first open of its codes table infers the schema (one
+    # job, then cached on the handle); open each once so every count
+    # below is a steady-state search
+    for idx in tiers.values():
+        idx.codes(spark)
     counts = {
         tier: _job_count(
             spark, lambda t=tier: SEARCH[t](spark, tiers[t], queries, K, 8)
@@ -172,6 +182,7 @@ def test_tier_searches_run_no_more_jobs_than_pq(
         corpus, str(tmp_path / "opq"), nlist=16, m=4, ksub=16, seed=3,
         max_iters=2,
     )
+    oidx.ivfpq.codes(spark)
     n_opq = _job_count(
         spark, lambda: opq.search_ivfopq(spark, oidx, queries, k=K, n_probe=8)
     )

@@ -10,7 +10,8 @@ python/vector_indexer_py/__init__.py:41-133):
 - ``VectorIndex.search(xq (nq,d), k, n_probe) -> (D, I)`` with the
   padded-array contract: rows with < k hits are filled with ``inf`` /
   ``-1`` (lib.rs:179-202). The reference loops queries serially inside
-  a worker thread (lib.rs:74-97); our batch is one distributed job.
+  a worker thread (lib.rs:74-97); our batch is one distributed job,
+  taking the matrix in and the driver-merged winners out as NumPy.
 - ``search_sync`` — same result, synchronous name kept for parity.
 - ``suggest_nlist`` re-export (lib.rs:307-315).
 
@@ -41,7 +42,12 @@ from vector_indexer_spark.operators.index_build import (
     build_index,
     load_index,
 )
-from vector_indexer_spark.operators.search import search_index
+from vector_indexer_spark.operators.search import (
+    clamp_k_probe,
+    search_batch,
+    search_index,
+    warn_missing_shards,
+)
 from vector_indexer_spark.session import get_spark
 
 
@@ -90,31 +96,45 @@ class VectorIndex:
 
         D: (nq, k) float32, squared L2, ``inf`` where < k hits.
         I: (nq, k) int64 external ids, ``-1`` where < k hits.
+
+        The matrix goes straight to the arrow search core
+        (``search.search_batch``): no query DataFrame is built unless
+        the batch takes a relational route, and a driver-merged result
+        fills (D, I) from its NumPy columns.
         """
         xq = np.ascontiguousarray(xq, dtype=np.float32)
-        if xq.ndim != 2 or xq.shape[1] != self.dimension:
+        if xq.ndim != 2 or xq.shape[1] != self.dimension:  # P2
             raise ValueError(
                 f"query matrix must be (nq, {self.dimension}), got {xq.shape}"
             )
         # clamp before allocating: padding columns beyond the engine's
         # clamped k would falsely read as "no neighbor found" (P4)
-        from vector_indexer_spark.config import MAX_K, MAX_N_PROBE
-
-        k = min(k, MAX_K)
-        n_probe = min(n_probe, MAX_N_PROBE)
+        k, n_probe = clamp_k_probe(k, n_probe)
+        warn_missing_shards(self._index)
         nq = xq.shape[0]
-        qdf = self._spark.createDataFrame(
-            pd.DataFrame(
-                {"query_id": np.arange(nq, dtype=np.int64), "query": list(xq)}
-            ),
-            "query_id long, query array<float>",
-        )
-        rows = self.search_df(qdf, k=k, n_probe=n_probe).collect()
         D = np.full((nq, k), np.inf, dtype=np.float32)
         I = np.full((nq, k), -1, dtype=np.int64)
-        for r in rows:
-            D[r["query_id"], r["rank"] - 1] = r["dist2"]
-            I[r["query_id"], r["rank"] - 1] = r["neighbor_id"]
+        if nq == 0:
+            return D, I
+        qids = np.arange(nq, dtype=np.int64)
+        winners = search_batch(
+            self._spark,
+            self._index,
+            qids,
+            xq.astype(np.float64),
+            lambda: self._spark.createDataFrame(
+                pd.DataFrame({"query_id": qids, "query": list(xq)}),
+                "query_id long, query array<float>",
+            ),
+            k,
+            n_probe,
+        )
+        if isinstance(winners, DataFrame):
+            winners = winners.toPandas()
+        q = winners["query_id"].to_numpy()
+        r = winners["rank"].to_numpy() - 1
+        D[q, r] = winners["dist2"].to_numpy()
+        I[q, r] = winners["neighbor_id"].to_numpy()
         return D, I
 
     def search_sync(

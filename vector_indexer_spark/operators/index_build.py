@@ -88,7 +88,24 @@ class IvfHandle:
 
     def codes(self, spark: SparkSession) -> DataFrame:
         """The compressed tiers' shard-partitioned codes table."""
-        return spark.read.parquet(self.codes_path())
+        return self.read_table(spark, self.codes_path())
+
+    def read_table(self, spark: SparkSession, path: str) -> DataFrame:
+        """Open one of this index's Parquet tables. The handle's first
+        open of ``path`` infers its schema (a footer-reading Spark job)
+        and caches it on the handle, as :meth:`probe_hierarchy` caches
+        the hierarchy; every later open passes that schema and runs no
+        job. The directory is still listed on every open, so files
+        appended since (``add_vectors``, the streaming sink, a
+        compaction's swap) are read."""
+        # setdefault: concurrent searches on one handle share one dict
+        schemas = self.__dict__.setdefault("_schemas", {})
+        schema = schemas.get(path)
+        if schema is not None:
+            return spark.read.schema(schema).parquet(path)
+        table = spark.read.parquet(path)
+        schemas[path] = table.schema
+        return table
 
     def centroids_df(self, spark: SparkSession) -> DataFrame:
         """``(centroid_id, cvec array<float>)`` built from the driver
@@ -144,7 +161,7 @@ class IvfIndex(IvfHandle):
         return os.path.join(self.path, "meta.json")
 
     def vectors(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.vectors_path)
+        return self.read_table(spark, self.vectors_path)
 
     def centroids_df(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self.centroids_path)
@@ -658,17 +675,29 @@ def validate_add_batch(
     P1 dimension check, unique ids within the batch, and (when ``existing_ids`` is given) no collision with ids
     already in the index — that last check is a column-pruned scan of
     the live table; at warehouse scale pass ``None`` and enforce
-    uniqueness upstream. Returns the batch row count."""
-    n_new = df.count()
-    if n_new == 0:
+    uniqueness upstream. Returns the batch row count.
+
+    The row count, the P1 count and the distinct-id count are one
+    aggregation over the batch grouped by id (one shuffle). Grouping
+    keeps ``distinct()``'s null semantics: all null ids form one
+    group, so one null id counts as a value and two are duplicates."""
+    n_new, bad, n_ids = (
+        df.groupBy(id_col)
+        .agg(
+            F.count("*").alias("n"),
+            F.count(F.when(F.size(vec_col) != dimension, 1)).alias("bad"),
+        )
+        .agg(F.sum("n"), F.sum("bad"), F.count("*"))
+        .first()
+    )
+    if not n_new:
         raise ValueError("cannot add an empty DataFrame")
-    bad = df.filter(F.size(vec_col) != dimension).count()
     if bad:
         raise ValueError(
             f"{bad} records have dimension != {dimension}"
             " (dim validation, P1)"
         )
-    if df.select(id_col).distinct().count() != n_new:
+    if n_ids != n_new:
         raise ValueError("duplicate ids within the batch")
     if existing_ids is not None:
         keyed = df.select(F.col(id_col).alias("__add_id"))
@@ -710,7 +739,7 @@ def append_rows(
         vec_col=vec_col,
         dimension=index.dimension,
         existing_ids=(
-            spark.read.parquet(table).select(id_col)
+            index.read_table(spark, table).select(id_col)
             if check_duplicate_ids
             else None
         ),
@@ -770,7 +799,7 @@ def add_vectors(
     # schema would silently fork the table schema)
     live_cols = [
         f.name
-        for f in spark.read.parquet(index.vectors_path).schema.fields
+        for f in index.vectors(spark).schema.fields
         if f.name not in ("cluster_id", "shard_id")
     ]
     missing = set(live_cols) - set(df.columns)

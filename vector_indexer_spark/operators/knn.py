@@ -14,10 +14,13 @@ Two physical strategies for the same logical query:
   bit-reproducible (the correctness oracle's path).
 - ``method="arrow"`` (default): per-partition NumPy top-k against the
   broadcast query matrix inside ``mapInPandas`` — a map-side combine
-  that reduces the shuffle from ``n_vectors × n_queries`` rows to
-  ``n_partitions × n_queries × k`` rows before the global rank. At 100 TB
-  the native plan's window over the full cross product is the bottleneck;
-  this one shuffles only the per-partition winners.
+  that reduces the ``n_vectors × n_queries`` candidates to
+  ``n_partitions × n_queries × k`` winners before the global rank. A
+  driver-sized batch merges them on the driver, like the IVF search
+  (``search.merge_winners``): one Spark job, no shuffle. At 100 TB the
+  native plan's window over the full cross product is the bottleneck;
+  past the driver-merge bound this one window-ranks only the
+  per-partition winners.
 """
 
 from __future__ import annotations
@@ -29,7 +32,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from vector_indexer_spark.functions.distance import dist2_expr
-from vector_indexer_spark.functions.kernels import stack_arrays, topk_per_row
+from vector_indexer_spark.functions.kernels import stack_arrays
+from vector_indexer_spark.operators.search import merge_winners, winners_frame
 
 
 def knn_exact(
@@ -137,9 +141,4 @@ def _knn_arrow(vectors, queries, k, id_col, vec_col, query_id_col, query_col):
     local = vectors.select(id_col, vec_col).mapInPandas(
         local_topk, "query_id long, neighbor_id long, dist2 double"
     )
-    w = Window.partitionBy("query_id").orderBy("dist2", "neighbor_id")
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "dist2")
-    )
+    return winners_frame(spark, merge_winners(local, len(qids), k))

@@ -27,9 +27,10 @@ Spark-first re-expression, one job for a whole *batch* of queries:
    exact; the shard predicate prunes directories earlier.
 3. **Scoring + top-k** (F1/W2): per-Arrow-batch NumPy scoring of each
    candidate cluster against only the queries that probed it, with a
-   *local* top-k emitted map-side, then one global window rank over
-   ``≤ partitions × nq × k`` rows. The full candidate × query
-   cross-product never hits a shuffle.
+   *local* top-k emitted map-side, then one global rank over
+   ``≤ partitions × nq × k`` rows (:func:`merge_winners`: on the
+   driver for a driver-sized batch, a window beyond). The full
+   candidate × query cross-product never hits a shuffle.
 
 ``method="native"`` runs the same logical plan as pure DataFrame ops
 (broadcast joins + fold expression + window) — bit-reproducible and
@@ -326,17 +327,27 @@ def probe_plan(
     )
 
 
+def _in_list(col: str, ids) -> str:
+    """``col IN (…)`` as SQL text; an empty list is ``false``, the
+    always-false result of an empty ``isin``."""
+    if not len(ids):
+        return "false"
+    return f"{col} IN ({', '.join(str(int(i)) for i in ids)})"
+
+
 def prune(table: DataFrame, shard_ids, cluster_ids) -> DataFrame:
     """J4/P6/S8 — literal ``shard_id IN (...) AND cluster_id IN (...)``
     predicates: Hive partition pruning reads only the probed shard
     directories, and the cluster-sorted layout's row-group stats skip
     non-probed clusters inside them. cluster ids are globally unique,
     so the cluster predicate alone is exact; ``shard_ids=None`` (a
-    frame with no shard layout) keeps only it."""
-    cond = F.col("cluster_id").isin([int(c) for c in cluster_ids])
+    frame with no shard layout) keeps only it. The predicate is one
+    SQL expression — one py4j call, where ``isin`` made one per
+    literal; the optimized plan is the same."""
+    cond = _in_list("cluster_id", cluster_ids)
     if shard_ids is not None:
-        cond = F.col("shard_id").isin([int(s) for s in shard_ids]) & cond
-    return table.where(cond)
+        cond = f"{_in_list('shard_id', shard_ids)} AND {cond}"
+    return table.where(F.expr(cond))
 
 
 def rank_winners(local: DataFrame, k: int, dist_col: str) -> DataFrame:
@@ -347,6 +358,47 @@ def rank_winners(local: DataFrame, k: int, dist_col: str) -> DataFrame:
         local.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "rank", "neighbor_id", dist_col)
+    )
+
+
+def merge_winners(local: DataFrame, nq: int, k: int) -> pd.DataFrame | DataFrame:
+    """W2 for ``(query_id, neighbor_id, dist2)`` local top-k winners —
+    the final merge of search and exact kNN. The stream is ≤ tasks × nq
+    × k rows: for a driver-sized batch (estimated with a generous
+    1024-task bound, since computing the real partition count would
+    force plan→RDD conversion, itself a job) it is collected and ranked
+    by one ``(query_id, dist2, neighbor_id)`` lexsort — the driver-side
+    assembly the reference does, and what Spark's own
+    TakeOrderedAndProject does for a global top-k — with no shuffle
+    stage. Returns that pandas frame; past ``_DRIVER_MERGE_LIMIT``
+    estimated rows, the distributed window rank's DataFrame. Columns
+    are ``(query_id, rank, neighbor_id, dist2)`` either way."""
+    if 1024 * nq * k > _DRIVER_MERGE_LIMIT:
+        return rank_winners(local, k, "dist2")
+    pdf = local.toPandas()
+    pdf = pdf.iloc[
+        np.lexsort(
+            (
+                pdf["neighbor_id"].to_numpy(),
+                pdf["dist2"].to_numpy(),
+                pdf["query_id"].to_numpy(),
+            )
+        )
+    ]
+    rank = pdf.groupby("query_id", sort=False).cumcount() + 1
+    out = pdf.assign(rank=rank.astype("int32"))
+    return out[out["rank"] <= k][["query_id", "rank", "neighbor_id", "dist2"]]
+
+
+def winners_frame(spark: SparkSession, winners: pd.DataFrame | DataFrame) -> DataFrame:
+    """:func:`merge_winners`' result as a DataFrame (a driver-merged
+    frame becomes a local relation: collecting it runs no job)."""
+    if isinstance(winners, DataFrame):
+        return winners
+    if winners.empty:
+        return empty_result(spark, "dist2")
+    return spark.createDataFrame(
+        winners, "query_id long, rank int, neighbor_id long, dist2 double"
     )
 
 
@@ -425,7 +477,7 @@ def search_frames(
     return score(prune(codes_df, None, plan.cluster_ids), plan, cents)
 
 
-def _warn_missing_shards(index: IvfIndex) -> None:
+def warn_missing_shards(index: IvfIndex) -> None:
     """P8 — missing-shard tolerance, reference semantics (a shard file
     that disappeared logs a warning and search proceeds over the
     surviving shards, src/shards.rs): Spark's Hive partition discovery
@@ -435,7 +487,8 @@ def _warn_missing_shards(index: IvfIndex) -> None:
     test_index.py). This check only adds the reference's warning, and
     only where it can be had for free: a local filesystem path. Remote
     object-store paths skip it — a per-search remote listing would
-    cost more than the warning is worth."""
+    cost more than the warning is worth. Call it from the public
+    search entry point itself: the warning points at its caller."""
     import os  # noqa: PLC0415
     import warnings  # noqa: PLC0415
 
@@ -452,6 +505,14 @@ def _warn_missing_shards(index: IvfIndex) -> None:
             RuntimeWarning,
             stacklevel=3,
         )
+
+
+def clamp_k_probe(k: int, n_probe: int) -> tuple[int, int]:
+    """P3/P4 — positivity, then clamping (reference api.rs:189-190,
+    ivf_index.rs:197-202)."""
+    if k <= 0 or n_probe <= 0:
+        raise ValueError("k and n_probe must be positive")
+    return min(k, MAX_K), min(n_probe, MAX_N_PROBE)
 
 
 def search_index(
@@ -488,23 +549,18 @@ def search_index(
     and ``index.vec_col`` — plus ``cluster_id`` and ``shard_id``
     (i.e. the persisted table's schema; the scan normalizes names).
 
-    The arrow path runs exactly TWO Spark actions: one query collect
-    (the query batch is driver-sized by contract — the reference's
-    whole input is a NumPy matrix), and one scan→score→rank job. Probe
-    ranking happens on the driver against the resident (nlist, d)
-    centroid matrix; the reference does the same scan-all-centroids
-    ranking per query (src/ivf_index.rs:204-220).
+    The arrow path collects the query batch (driver-sized by contract
+    — the reference's whole input is a NumPy matrix) and hands it to
+    :func:`search_batch`: a driver-sized batch then runs one
+    scan→score→top-k job and merges on the driver. Probe ranking
+    happens on the driver against the resident (nlist, d) centroid
+    matrix; the reference does the same scan-all-centroids ranking per
+    query (src/ivf_index.rs:204-220).
     """
-    # P3/P4 — positivity + clamping (reference api.rs:189-190,
-    # ivf_index.rs:197-202)
-    if k <= 0 or n_probe <= 0:
-        raise ValueError("k and n_probe must be positive")
-    k = min(k, MAX_K)
-    n_probe = min(n_probe, MAX_N_PROBE)
-
+    k, n_probe = clamp_k_probe(k, n_probe)
     if filter_expr is not None and isinstance(filter_expr, str):
         filter_expr = F.expr(filter_expr)
-    _warn_missing_shards(index)
+    warn_missing_shards(index)
     if method == "native":
         out = _search_native(
             spark, index, queries, k, n_probe, query_id_col, query_col,
@@ -603,12 +659,10 @@ def _search_arrow(
     spark, index, queries, k, n_probe, query_id_col, query_col, vectors,
     filter_expr=None,
 ):
-    """Two-action pipeline: collect queries → driver probe plan →
-    one pruned scan+score+rank job."""
+    """The DataFrame front of :func:`search_batch`: one query collect,
+    then the batch search. A lazy-centroid handle skips the collect —
+    only the relational plan can rank its probes."""
     if index.centroids is None:
-        # lazily-loaded handle (load_index(lazy_centroids=True)): no
-        # driver matrix exists — the relational native path is the
-        # only one that can rank probes
         return _search_native(
             spark, index, queries, k, n_probe, query_id_col, query_col,
             vectors, filter_expr,
@@ -616,7 +670,54 @@ def _search_arrow(
     batch = collect_queries(queries, index.dimension, query_id_col, query_col)
     if batch is None:
         return empty_result(spark, "dist2")
-    qids, qmat = batch
+    return winners_frame(
+        spark,
+        search_batch(
+            spark, index, *batch, lambda: queries, k, n_probe,
+            query_id_col=query_id_col, query_col=query_col,
+            vectors=vectors, filter_expr=filter_expr,
+        ),
+    )
+
+
+def search_batch(
+    spark: SparkSession,
+    index: IvfIndex,
+    qids: np.ndarray,
+    qmat: np.ndarray,
+    queries: Callable[[], DataFrame],
+    k: int,
+    n_probe: int,
+    *,
+    query_id_col: str = "query_id",
+    query_col: str = "query",
+    vectors: DataFrame | None = None,
+    filter_expr=None,
+) -> pd.DataFrame | DataFrame:
+    """The arrow search of one driver-resident, non-empty query batch
+    (``qids`` (nq,) int64, ``qmat`` (nq, d) float64), P2-checked and
+    P3/P4-clamped by the caller: driver probe plan → pruned scan →
+    map-side scoring → :func:`merge_winners`. A driver-sized batch is
+    one Spark job and returns the driver-merged pandas frame; larger
+    ones return a DataFrame.
+
+    ``queries()`` builds the batch as a ``(query_id_col, query_col)``
+    DataFrame. Only the routes that run the relational native plan
+    call it: a lazy-centroid handle, a bulk batch past
+    ``_ARROW_BULK_QUERY_BYTES`` and a probe mask past
+    ``_ARROW_DENSE_MASK_LIMIT``."""
+
+    def native():
+        return _search_native(
+            spark, index, queries(), k, n_probe, query_id_col, query_col,
+            vectors, filter_expr,
+        )
+
+    if index.centroids is None:
+        # lazily-loaded handle (load_index(lazy_centroids=True)): no
+        # driver matrix exists — the relational native path is the
+        # only one that can rank probes
+        return native()
     # bulk batch: the masked all-queries GEMM would waste
     # ~(1 − n_probe/nlist) of its flops. While the query matrix still
     # fits the broadcast budget, use the per-cluster GEMM kernel (each
@@ -627,10 +728,7 @@ def _search_arrow(
     # only honest shape.
     bulk = len(qids) > _ARROW_MAX_QUERY_BATCH
     if bulk and qmat.nbytes > _ARROW_BULK_QUERY_BYTES:
-        return _search_native(
-            spark, index, queries, k, n_probe, query_id_col, query_col,
-            vectors, filter_expr,
-        )
+        return native()
     plan = probe_plan(
         qids,
         qmat,
@@ -643,10 +741,7 @@ def _search_arrow(
         # the dense bool mask alone would exceed the broadcast budget —
         # run the batch through the fully-distributed relational path
         # (same semantics, no driver-sized state)
-        return _search_native(
-            spark, index, queries, k, n_probe, query_id_col, query_col,
-            vectors, filter_expr,
-        )
+        return native()
     pruned = _pruned_scan(
         spark, index, vectors, plan.shard_ids, plan.cluster_ids, filter_expr
     )
@@ -670,8 +765,8 @@ def _search_arrow_bulk(spark, pruned, plan, k):
     queries — the IVF-BQ/SQ r9 kernel shape), for query batches too
     large for the masked all-queries GEMM but small enough to
     broadcast. The probe plan ranked on the driver in bounded query
-    chunks; the global rank is a window (a bulk batch is past the
-    driver-merge regime by definition)."""
+    chunks; at a bulk batch's size the final merge is normally past
+    the driver-merge regime, so :func:`merge_winners` window-ranks."""
     bc = spark.sparkContext.broadcast((plan.qids, plan.qmat, plan.qprobe))
 
     def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -701,7 +796,7 @@ def _search_arrow_bulk(spark, pruned, plan, k):
     local = pruned.select("id", "values", "cluster_id").mapInPandas(
         _score, "query_id long, neighbor_id long, dist2 double"
     )
-    return rank_winners(local, k, "dist2")
+    return merge_winners(local, len(plan.qids), k)
 
 
 def _score_native(vectors, probes, queries, k, query_id_col, query_col):
@@ -730,7 +825,7 @@ def _score_native(vectors, probes, queries, k, query_id_col, query_col):
 def _score_arrow_scan(spark, vectors, qids, qmat, cluster_ids, probe_mask, k):
     """Arrow scoring with a probe mask: one GEMM per Arrow batch for
     all queries × all batch rows, non-probed (query, row) slots masked
-    to +inf, local top-k emitted map-side, then one global window rank.
+    to +inf, local top-k emitted map-side, then :func:`merge_winners`.
 
     A per-cluster Python group loop was ~2× slower at nlist≈1.3k
     (thousands of tiny GEMMs); masking trades a few redundant flops on
@@ -773,30 +868,7 @@ def _score_arrow_scan(spark, vectors, qids, qmat, cluster_ids, probe_mask, k):
     local = vectors.select("id", "values", "cluster_id").mapInPandas(
         _score, "query_id long, neighbor_id long, dist2 double"
     )
-    # Final merge: the local top-k stream is ≤ tasks × nq × k rows. For
-    # driver-sized batches, collect and merge in NumPy — the same
-    # driver-side assembly the reference does (and what Spark's own
-    # TakeOrderedAndProject does for global top-k), skipping a whole
-    # shuffle stage. Very large batches fall back to a window rank.
-    # (estimate with a generous task-count bound — computing the real
-    # partition count would force plan→RDD conversion, itself a job)
-    est_rows = 1024 * len(qids) * k
-    if est_rows <= _DRIVER_MERGE_LIMIT:
-        pdf = local.toPandas()
-        if pdf.empty:
-            return empty_result(spark, "dist2")
-        order = np.lexsort(
-            (pdf["neighbor_id"].to_numpy(), pdf["dist2"].to_numpy(),
-             pdf["query_id"].to_numpy())
-        )
-        pdf = pdf.iloc[order]
-        rank = pdf.groupby("query_id", sort=False).cumcount() + 1
-        out = pdf.assign(rank=rank.astype("int32"))
-        out = out[out["rank"] <= k][["query_id", "rank", "neighbor_id", "dist2"]]
-        return spark.createDataFrame(
-            out, "query_id long, rank int, neighbor_id long, dist2 double"
-        )
-    return rank_winners(local, k, "dist2")
+    return merge_winners(local, len(qids), k)
 
 
 def range_search(
