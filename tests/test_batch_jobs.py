@@ -13,6 +13,8 @@ import pytest
 from tests.test_tier_skeleton import _job_count, _job_ids
 from vector_indexer_spark import api
 from vector_indexer_spark.operators import index_build as IB
+from vector_indexer_spark.operators import knn as K
+from vector_indexer_spark.operators import search as S
 from vector_indexer_spark.operators.knn import knn_exact
 
 DIM = 16
@@ -145,6 +147,65 @@ def test_knn_arrow_driver_sized_batch_is_one_job_without_shuffle(spark, ties):
     for j in jobs:
         for sid in sc.statusTracker().getJobInfo(j).stageIds:
             assert store.lastStageAttempt(sid).shuffleReadBytes() == 0
+
+
+@pytest.fixture
+def small_arrow_batches(spark):
+    """16-row Arrow batches, so every scan partition holds several."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "16")
+    yield
+    spark.conf.set(key, old)
+
+
+def _spy_merge(monkeypatch, module):
+    """Record each ``merge_winners`` call's local row count and whether
+    it took the driver route (a pandas frame) or the window route."""
+    calls = []
+    orig = S.merge_winners
+
+    def spy(local, nq, k):
+        out = orig(local, nq, k)
+        calls.append((local.count(), isinstance(out, pd.DataFrame)))
+        return out
+
+    monkeypatch.setattr(module, "merge_winners", spy, raising=True)
+    return calls
+
+
+def test_knn_merge_route_follows_the_real_task_count(
+    ties, small_arrow_batches, monkeypatch
+):
+    """Each scan task emits one running top-k (nq × k rows) however
+    many Arrow batches its split holds, and the driver merge is taken
+    exactly while tasks × nq × k stays within ``_DRIVER_MERGE_LIMIT``;
+    one row more and the window rank is, with the same winners."""
+    vectors, queries = ties
+    tasks = vectors.select("id", "values").rdd.getNumPartitions()
+    bound = tasks * 6 * 20
+    want = sorted(
+        tuple(r)
+        for r in knn_exact(vectors, queries, 20, method="native").collect()
+    )
+    calls = _spy_merge(monkeypatch, K)
+    for limit, driver in ((bound, True), (bound - 1, False)):
+        monkeypatch.setattr(S, "_DRIVER_MERGE_LIMIT", limit, raising=True)
+        got = sorted(tuple(r) for r in knn_exact(vectors, queries, 20).collect())
+        assert got == want
+        assert calls[-1] == (bound, driver)
+
+
+def test_search_emits_one_top_k_per_task(built, small_arrow_batches, monkeypatch):
+    """The masked search kernel keeps a running top-k per task too: a
+    full-probe batch's local stream is ≤ tasks × nq × k rows, not one
+    nq × k block per Arrow batch."""
+    vi, xb, _ = built
+    calls = _spy_merge(monkeypatch, S)
+    vi.search(xb[:4], k=5, n_probe=vi._index.nlist)
+    tasks = vi._index.vectors(vi._spark).rdd.getNumPartitions()
+    (n_local, driver), = calls
+    assert driver and n_local <= tasks * 4 * 5
 
 
 def test_handle_infers_schema_once_and_lists_adds(spark, tmp_path):

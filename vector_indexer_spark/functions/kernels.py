@@ -263,6 +263,25 @@ def stack_arrays(series) -> np.ndarray:
 MAX_SCORE_CELLS = 40_000_000
 
 
+def merge_topk(
+    best: tuple[np.ndarray, np.ndarray] | None,
+    new: tuple[np.ndarray, np.ndarray],
+    k: int,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Running top-k: the per-row top ``k`` of two ``(dists, ids)``
+    results over the same rows (``best`` None: nothing yet), by the
+    (distance, id) order of :func:`topk_per_row`."""
+    if best is None:
+        return new
+    md = np.concatenate([best[0], new[0]], axis=1)
+    mi = np.concatenate([best[1], new[1]], axis=1)
+    order = np.lexsort((mi, md), axis=1)[:, :k]
+    return (
+        np.take_along_axis(md, order, axis=1),
+        np.take_along_axis(mi, order, axis=1),
+    )
+
+
 def chunked_topk(
     qmat: np.ndarray,
     vmat: np.ndarray,
@@ -282,24 +301,14 @@ def chunked_topk(
         if mask_fn is not None:
             mask_fn(slice(0, n), d2)
         return topk_per_row(d2, k, ids=vids)
-    best_d = best_i = None
+    best = None
     for start in range(0, n, chunk):
         sl = slice(start, min(start + chunk, n))
         d2 = pairwise_dist2(qmat, vmat[sl])
         if mask_fn is not None:
             mask_fn(sl, d2)
-        cd, ci = topk_per_row(d2, k, ids=vids[sl])
-        if best_d is None:
-            best_d, best_i = cd, ci
-        else:
-            # merge this chunk's winners with the running winners by
-            # (dist, id) rank over the concatenated columns
-            md = np.concatenate([best_d, cd], axis=1)
-            mi = np.concatenate([best_i, ci], axis=1)
-            order = np.lexsort((mi, md), axis=1)[:, :k]
-            best_d = np.take_along_axis(md, order, axis=1)
-            best_i = np.take_along_axis(mi, order, axis=1)
-    return best_d, best_i
+        best = merge_topk(best, topk_per_row(d2, k, ids=vids[sl]), k)
+    return best
 
 
 def rowwise_dist2_foldexact(a: np.ndarray, b: np.ndarray) -> np.ndarray:

@@ -15,18 +15,20 @@ Two physical strategies for the same logical query:
 - ``method="arrow"`` (default): per-partition NumPy top-k against the
   broadcast query matrix inside ``mapInPandas`` — a map-side combine
   that reduces the ``n_vectors × n_queries`` candidates to
-  ``n_partitions × n_queries × k`` winners before the global rank. A
-  driver-sized batch merges them on the driver, like the IVF search
-  (``search.merge_winners``): one Spark job, no shuffle. At 100 TB the
-  native plan's window over the full cross product is the bottleneck;
-  past the driver-merge bound this one window-ranks only the
-  per-partition winners.
+  ``n_partitions × n_queries × k`` winners (one running top-k per
+  partition) before the global rank. When the scan's partition count
+  keeps those winners driver-sized, they merge on the driver, like
+  the IVF search (``search.merge_winners``): one Spark job, no
+  shuffle. At 100 TB the native plan's window over the full cross
+  product is the bottleneck; past the driver-merge bound this one
+  window-ranks only the per-partition winners.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -119,8 +121,14 @@ def _knn_arrow(vectors, queries, k, id_col, vec_col, query_id_col, query_col):
 
     def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         qids_, qmat_ = bq.value
-        from vector_indexer_spark.functions.kernels import chunked_topk
+        from vector_indexer_spark.functions.kernels import (
+            chunked_topk,
+            merge_topk,
+        )
 
+        # one running top-k per partition, emitted once: a task yields
+        # ≤ nq × k rows however many Arrow batches its split holds
+        best = None
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -128,15 +136,17 @@ def _knn_arrow(vectors, queries, k, id_col, vec_col, query_id_col, query_col):
             vids = pdf[id_col].to_numpy()
             # per-query local top-k; candidate-chunked so the scratch
             # matrix stays bounded for large query batches
-            dists, ids = chunked_topk(qmat_, vmat, vids, k)
-            nq, kk = dists.shape
-            yield pd.DataFrame(
-                {
-                    "query_id": [qid for qid in qids_ for _ in range(kk)],
-                    "neighbor_id": ids.reshape(-1),
-                    "dist2": dists.reshape(-1),
-                }
-            )
+            best = merge_topk(best, chunked_topk(qmat_, vmat, vids, k), k)
+        if best is None:
+            return
+        dists, ids = best
+        yield pd.DataFrame(
+            {
+                "query_id": np.repeat(qids_, dists.shape[1]),
+                "neighbor_id": ids.reshape(-1),
+                "dist2": dists.reshape(-1),
+            }
+        )
 
     local = vectors.select(id_col, vec_col).mapInPandas(
         local_topk, "query_id long, neighbor_id long, dist2 double"

@@ -26,10 +26,11 @@ Spark-first re-expression, one job for a whole *batch* of queries:
    cluster ids are globally unique, so the cluster predicate alone is
    exact; the shard predicate prunes directories earlier.
 3. **Scoring + top-k** (F1/W2): per-Arrow-batch NumPy scoring of each
-   candidate cluster against only the queries that probed it, with a
-   *local* top-k emitted map-side, then one global rank over
-   ``≤ partitions × nq × k`` rows (:func:`merge_winners`: on the
-   driver for a driver-sized batch, a window beyond). The full
+   candidate cluster against only the queries that probed it, with one
+   running *local* top-k per partition emitted map-side, then one
+   global rank over ``≤ partitions × nq × k`` rows
+   (:func:`merge_winners`: on the driver when the real partition
+   count keeps that driver-sized, a window beyond). The full
    candidate × query cross-product never hits a shuffle.
 
 ``method="native"`` runs the same logical plan as pure DataFrame ops
@@ -361,19 +362,32 @@ def rank_winners(local: DataFrame, k: int, dist_col: str) -> DataFrame:
     )
 
 
+def _task_count(df: DataFrame) -> int | None:
+    """The number of tasks a collect of ``df`` runs, read off the
+    physical plan that the collect then reuses. Building a scan's RDD
+    lists its splits and runs no job. An adaptive plan (one with an
+    exchange or a subquery) runs its stages to build its RDD, so it
+    gives None."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        return None
+    return plan.execute().getNumPartitions()
+
+
 def merge_winners(local: DataFrame, nq: int, k: int) -> pd.DataFrame | DataFrame:
-    """W2 for ``(query_id, neighbor_id, dist2)`` local top-k winners —
-    the final merge of search and exact kNN. The stream is ≤ tasks × nq
-    × k rows: for a driver-sized batch (estimated with a generous
-    1024-task bound, since computing the real partition count would
-    force plan→RDD conversion, itself a job) it is collected and ranked
-    by one ``(query_id, dist2, neighbor_id)`` lexsort — the driver-side
-    assembly the reference does, and what Spark's own
-    TakeOrderedAndProject does for a global top-k — with no shuffle
-    stage. Returns that pandas frame; past ``_DRIVER_MERGE_LIMIT``
-    estimated rows, the distributed window rank's DataFrame. Columns
-    are ``(query_id, rank, neighbor_id, dist2)`` either way."""
-    if 1024 * nq * k > _DRIVER_MERGE_LIMIT:
+    """W2 for ``(query_id, neighbor_id, dist2)`` winners that a map-side
+    kernel emits once per partition — the final merge of search and
+    exact kNN. The stream is ≤ tasks × nq × k rows. When the plan's
+    real task count keeps that within ``_DRIVER_MERGE_LIMIT``, it is
+    collected and ranked by one ``(query_id, dist2, neighbor_id)``
+    lexsort — the driver-side assembly the reference does, and what
+    Spark's own TakeOrderedAndProject does for a global top-k — with
+    no shuffle stage, and the pandas frame is returned. Otherwise
+    (more rows, or a task count only an adaptive plan's stages could
+    tell) the distributed window rank's DataFrame is. Columns are
+    ``(query_id, rank, neighbor_id, dist2)`` either way."""
+    tasks = _task_count(local)
+    if tasks is None or tasks * nq * k > _DRIVER_MERGE_LIMIT:
         return rank_winners(local, k, "dist2")
     pdf = local.toPandas()
     pdf = pdf.iloc[
@@ -765,8 +779,8 @@ def _search_arrow_bulk(spark, pruned, plan, k):
     queries — the IVF-BQ/SQ r9 kernel shape), for query batches too
     large for the masked all-queries GEMM but small enough to
     broadcast. The probe plan ranked on the driver in bounded query
-    chunks; at a bulk batch's size the final merge is normally past
-    the driver-merge regime, so :func:`merge_winners` window-ranks."""
+    chunks; the global rank is a window (a bulk batch is past the
+    driver-merge regime by definition)."""
     bc = spark.sparkContext.broadcast((plan.qids, plan.qmat, plan.qprobe))
 
     def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -796,7 +810,7 @@ def _search_arrow_bulk(spark, pruned, plan, k):
     local = pruned.select("id", "values", "cluster_id").mapInPandas(
         _score, "query_id long, neighbor_id long, dist2 double"
     )
-    return merge_winners(local, len(plan.qids), k)
+    return rank_winners(local, k, "dist2")
 
 
 def _score_native(vectors, probes, queries, k, query_id_col, query_col):
@@ -825,7 +839,8 @@ def _score_native(vectors, probes, queries, k, query_id_col, query_col):
 def _score_arrow_scan(spark, vectors, qids, qmat, cluster_ids, probe_mask, k):
     """Arrow scoring with a probe mask: one GEMM per Arrow batch for
     all queries × all batch rows, non-probed (query, row) slots masked
-    to +inf, local top-k emitted map-side, then :func:`merge_winners`.
+    to +inf, one running local top-k per partition emitted map-side,
+    then :func:`merge_winners`.
 
     A per-cluster Python group loop was ~2× slower at nlist≈1.3k
     (thousands of tiny GEMMs); masking trades a few redundant flops on
@@ -837,8 +852,14 @@ def _score_arrow_scan(spark, vectors, qids, qmat, cluster_ids, probe_mask, k):
 
     def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         qids_, qmat_, cids_, mask_ = bc.value
-        from vector_indexer_spark.functions.kernels import chunked_topk
+        from vector_indexer_spark.functions.kernels import (
+            chunked_topk,
+            merge_topk,
+        )
 
+        # one running top-k per partition, emitted once: a task yields
+        # ≤ nq × k rows however many Arrow batches its split holds
+        best = None
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -851,19 +872,24 @@ def _score_arrow_scan(spark, vectors, qids, qmat, cluster_ids, probe_mask, k):
             def _mask(sl, d2, rowpos=rowpos, mask_=mask_):
                 d2[~mask_[:, rowpos[sl]]] = np.inf
 
-            dists, ids = chunked_topk(qmat_, vmat, vids, k, mask_fn=_mask)
-            keep = np.isfinite(dists)
-            if not keep.any():
-                continue
-            nq, kk = dists.shape
-            qrep = np.repeat(qids_, kk).reshape(nq, kk)
-            yield pd.DataFrame(
-                {
-                    "query_id": qrep[keep],
-                    "neighbor_id": ids[keep],
-                    "dist2": dists[keep],
-                }
+            best = merge_topk(
+                best, chunked_topk(qmat_, vmat, vids, k, mask_fn=_mask), k
             )
+        if best is None:
+            return
+        dists, ids = best
+        keep = np.isfinite(dists)
+        if not keep.any():
+            return
+        nq, kk = dists.shape
+        qrep = np.repeat(qids_, kk).reshape(nq, kk)
+        yield pd.DataFrame(
+            {
+                "query_id": qrep[keep],
+                "neighbor_id": ids[keep],
+                "dist2": dists[keep],
+            }
+        )
 
     local = vectors.select("id", "values", "cluster_id").mapInPandas(
         _score, "query_id long, neighbor_id long, dist2 double"
