@@ -13,7 +13,6 @@ import pytest
 from tests.test_tier_skeleton import _job_count, _job_ids
 from vector_indexer_spark import api
 from vector_indexer_spark.operators import index_build as IB
-from vector_indexer_spark.operators import knn as K
 from vector_indexer_spark.operators import search as S
 from vector_indexer_spark.operators.knn import knn_exact
 
@@ -159,18 +158,21 @@ def small_arrow_batches(spark):
     spark.conf.set(key, old)
 
 
-def _spy_merge(monkeypatch, module):
-    """Record each ``merge_winners`` call's local row count and whether
-    it took the driver route (a pandas frame) or the window route."""
+def _spy_merge(monkeypatch):
+    """Record each ``merge_winners`` call's local row count, whether it
+    took the driver route (a pandas frame) or the window route, and the
+    task count of the local stream's plan."""
     calls = []
     orig = S.merge_winners
 
-    def spy(local, nq, k):
-        out = orig(local, nq, k)
-        calls.append((local.count(), isinstance(out, pd.DataFrame)))
+    def spy(local, nq, k, dist_col):
+        out = orig(local, nq, k, dist_col)
+        calls.append(
+            (local.count(), isinstance(out, pd.DataFrame), S._task_count(local))
+        )
         return out
 
-    monkeypatch.setattr(module, "merge_winners", spy, raising=True)
+    monkeypatch.setattr(S, "merge_winners", spy, raising=True)
     return calls
 
 
@@ -188,24 +190,230 @@ def test_knn_merge_route_follows_the_real_task_count(
         tuple(r)
         for r in knn_exact(vectors, queries, 20, method="native").collect()
     )
-    calls = _spy_merge(monkeypatch, K)
+    calls = _spy_merge(monkeypatch)
     for limit, driver in ((bound, True), (bound - 1, False)):
         monkeypatch.setattr(S, "_DRIVER_MERGE_LIMIT", limit, raising=True)
         got = sorted(tuple(r) for r in knn_exact(vectors, queries, 20).collect())
         assert got == want
-        assert calls[-1] == (bound, driver)
+        assert calls[-1] == (bound, driver, tasks)
 
 
-def test_search_emits_one_top_k_per_task(built, small_arrow_batches, monkeypatch):
-    """The masked search kernel keeps a running top-k per task too: a
-    full-probe batch's local stream is ≤ tasks × nq × k rows, not one
-    nq × k block per Arrow batch."""
+# A duplicate-heavy corpus for the scorer contract: 30 integer base
+# vectors around 4 integer centers, 8 copies each (ids shuffled), so
+# every k = 6 cut falls inside a tie group. Integer coordinates keep the
+# exact scorers' distances exact on both engines.
+NQ, TOP, D8 = 5, 6, 8
+
+
+@pytest.fixture(scope="module")
+def dup(spark, tmp_path_factory):
+    rng = np.random.default_rng(21)
+    centers = rng.integers(-9, 10, size=(4, D8)).astype(np.float64)
+    label = rng.integers(0, 4, size=30)
+    base = centers[label] + rng.integers(-2, 3, size=(30, D8))
+    copies = np.repeat(np.arange(30), 8)
+    ids = rng.permutation(len(copies)).astype(np.int64)
+    root = tmp_path_factory.mktemp("dup")
+    pdf = pd.DataFrame(
+        {
+            "id": ids,
+            "cluster_id": label[copies].astype(np.int64),
+            "values": list(base[copies].astype(np.float32)),
+        }
+    )
+    spark.createDataFrame(
+        pdf, "id long, cluster_id long, values array<float>"
+    ).repartition(3).write.parquet(str(root / "vec"))
+    xq = base[[0, 7, 13, 21, 29]] + rng.integers(-1, 2, size=(NQ, D8))
+    cents = spark.createDataFrame(
+        [(i, [float(v) for v in centers[i]]) for i in range(4)],
+        "centroid_id long, cvec array<double>",
+    )
+    return {
+        "spark": spark,
+        "root": root,
+        "vec": spark.read.parquet(str(root / "vec")),
+        "xq": xq.astype(np.float32),
+        "cents": cents,
+    }
+
+
+def _stored(d, name, df):
+    """``df`` written as a 3-file parquet table and read back: a plain
+    scan of 3 tasks, several 16-row Arrow batches each."""
+    path = str(d["root"] / name)
+    df.repartition(3).write.mode("overwrite").parquet(path)
+    return d["spark"].read.parquet(path)
+
+
+def _adc_truth(qmat, qids, codes_pdf, cents, codebooks, n_probe):
+    """NumPy residual-ADC top-k over each query's own probed clusters:
+    ``‖(q − c) − recon‖²`` with the residual reconstructed from its
+    codewords, ties by id."""
+    plan = S.probe_plan(qids, qmat, cents, n_probe)
+    codes = np.stack(codes_pdf["codes"].to_numpy()).astype(np.int64)
+    resid = np.concatenate(
+        [codebooks[j][codes[:, j]] for j in range(codebooks.shape[0])], axis=1
+    )
+    cl = codes_pdf["cluster_id"].to_numpy()
+    ids = codes_pdf["id"].to_numpy()
+    rows = []
+    for qi, q in enumerate(qmat):
+        keep = np.isin(cl, plan.probe_ids[qi])
+        r = (q[None, :] - cents[cl[keep]]) - resid[keep]
+        dist = (r * r).sum(axis=1)
+        order = np.lexsort((ids[keep], dist))[:TOP]
+        rows += [
+            (int(qids[qi]), rank + 1, int(ids[keep][o]), float(dist[o]))
+            for rank, o in enumerate(order)
+        ]
+    return rows
+
+
+def _scorer(name, d, monkeypatch):
+    """``(search, truth)`` of one arrow scorer on the duplicate-heavy
+    corpus: ``search(queries, method)`` runs it, and ``truth`` holds the
+    NumPy top-k rows of ``d["xq"]`` where the scorer has no native twin
+    (None where it has one)."""
+    from vector_indexer_spark.operators import bq, ivfbq, opq, pq, rabitq, sq
+
+    spark, vec, cents = d["spark"], d["vec"], d["cents"]
+    flat = vec.select("id", "values")
+    assigned = vec.select("id", "cluster_id", "values")
+    if name == "sq":
+        model = sq.sq_train(flat)
+        codes = _stored(d, name, sq.sq_encode(flat, model))
+        return lambda q, m: sq.sq_search(codes, model, q, TOP, method=m), None
+    if name == "ivfsq":
+        model = sq.ivfsq_train(assigned, cents)
+        codes = _stored(d, name, sq.ivfsq_encode(assigned, cents, model))
+        return lambda q, m: sq.ivfsq_search(
+            codes, cents, model, q, TOP, 2, method=m
+        ), None
+    if name in ("bq_hamming", "bq_adc"):
+        model = bq.bq_train(flat)
+        codes = _stored(d, name, bq.bq_encode(flat, model))
+        fn = bq.bq_search if name == "bq_hamming" else bq.bq_adc_search
+        return lambda q, m: fn(codes, model, q, k=TOP, method=m), None
+    if name == "ivfbq":
+        codes = _stored(d, name, ivfbq.ivfbq_encode(assigned, cents))
+        scales = ivfbq.ivfbq_train_scales(assigned, cents)
+        return lambda q, m: ivfbq.ivfbq_search(
+            codes, cents, q, TOP, 2, scales=scales, method=m
+        ), None
+    if name == "rabitq":
+        model = rabitq.rabitq_train(flat)
+        codes = _stored(d, name, rabitq.rabitq_encode(flat, model))
+        return lambda q, m: rabitq.rabitq_search(
+            codes, model, q, k=TOP, method=m
+        ), None
+    if name == "ivf_rabitq":
+        rot = tuple(
+            tuple(float(v) for v in r) for r in rabitq.hadamard_rotation(D8, 3)
+        )
+        codes = _stored(d, name, rabitq.ivf_rabitq_encode(assigned, cents, rot))
+        return lambda q, m: rabitq.ivf_rabitq_search(
+            codes, cents, q, rot, k=TOP, n_probe=2, method=m
+        ), None
+    if name == "knn":
+        return lambda q, m: knn_exact(flat, q, TOP, method=m), None
+    qids = np.arange(NQ, dtype=np.int64)
+    qmat = d["xq"].astype(np.float64)
+    if name == "pq":
+        model = pq.pq_train(flat, m=4, ksub=8, seed=2)
+        codes = _stored(d, name, pq.pq_encode(flat, model))
+        truth = _adc_truth(
+            qmat, qids, codes.toPandas().assign(cluster_id=0),
+            np.zeros((1, D8)), model.codebooks, 1,
+        )
+        return lambda q, m: pq.pq_search(codes, q, model, TOP), truth
+    path = str(d["root"] / name)
+    if name in ("ivfpq", "ivfopq"):
+        kw = dict(nlist=4, m=4, ksub=8, seed=2, max_iters=4)
+        if name == "ivfpq":
+            idx = pq.build_ivfpq_index(flat, path, **kw)
+            search = lambda q, m: pq.search_ivfpq(spark, idx, q, TOP, 2)
+        else:
+            oidx = opq.build_ivfopq_index(flat, path, **kw)
+            search = lambda q, m: opq.search_ivfopq(spark, oidx, q, TOP, 2)
+            idx, qmat = oidx.ivfpq, oidx.rotate(qmat)
+        codes_pdf = idx.codes(spark).select("id", "cluster_id", "codes").toPandas()
+        truth = _adc_truth(
+            qmat, qids, codes_pdf, idx.centroids, idx.pq.codebooks, 2
+        )
+        return search, truth
+    # masked and bulk: the flat persisted index, every cluster probed
+    index = IB.build_index(flat, path, nlist=4, seed=2)
+    if name == "bulk":
+        monkeypatch.setattr(S, "_ARROW_MAX_QUERY_BATCH", 1, raising=True)
+    return lambda q, m: S.search_index(
+        spark, index, q, TOP, index.nlist, method=m
+    ), None
+
+
+SCORERS = [
+    "sq", "ivfsq", "bq_hamming", "bq_adc", "ivfbq", "rabitq", "ivf_rabitq",
+    "pq", "ivfpq", "ivfopq", "knn", "masked", "bulk",
+]
+
+
+@pytest.mark.parametrize("name", SCORERS)
+def test_search_emits_one_top_k_per_task(
+    dup, small_arrow_batches, monkeypatch, name
+):
+    """Every arrow scorer runs the one map-side top-k stream: each scan
+    task emits ≤ nq × k winners however many Arrow batches (and
+    clusters) its split holds, the driver merges them, the rows equal
+    the native twin (or a NumPy truth) with ties by id, and an empty
+    query batch returns the tier's empty schema."""
+    spark = dup["spark"]
+    search, truth = _scorer(name, dup, monkeypatch)
+    want = truth if truth is not None else [
+        tuple(r) for r in search(_frame(spark, dup["xq"]), "native").collect()
+    ]
+    calls = _spy_merge(monkeypatch)
+    got = search(_frame(spark, dup["xq"]), "arrow")
+    rows = sorted(tuple(r) for r in got.collect())
+    want = sorted(want)
+    assert len(rows) == NQ * TOP
+    assert [r[:3] for r in rows] == [w[:3] for w in want]
+    np.testing.assert_allclose(
+        [r[3] for r in rows], [w[3] for w in want], rtol=1e-9, atol=1e-9
+    )
+    (n_local, driver, tasks), = calls
+    assert driver and n_local <= tasks * NQ * TOP
+    empty = search(_frame(spark, dup["xq"][:0]), "arrow")
+    dist_col = got.columns[3]
+    assert empty.count() == 0
+    assert empty.dtypes == [
+        ("query_id", "bigint"), ("rank", "int"), ("neighbor_id", "bigint"),
+        (dist_col, "bigint" if dist_col == "hamming" else "double"),
+    ]
+
+
+def test_bulk_search_is_the_masked_search_merged_on_the_driver(
+    built, small_arrow_batches, monkeypatch
+):
+    """A batch past ``_ARROW_MAX_QUERY_BATCH`` takes the per-cluster bulk
+    kernel and returns the masked route's ``(D, I)`` bit for bit, with
+    one running top-k per task merged on the driver."""
     vi, xb, _ = built
-    calls = _spy_merge(monkeypatch, S)
-    vi.search(xb[:4], k=5, n_probe=vi._index.nlist)
-    tasks = vi._index.vectors(vi._spark).rdd.getNumPartitions()
-    (n_local, driver), = calls
-    assert driver and n_local <= tasks * 4 * 5
+    xq = xb[:6] + np.float32(0.01)
+    D, I = vi.search(xq, k=5, n_probe=3)
+    calls = _spy_merge(monkeypatch)
+    monkeypatch.setattr(S, "_ARROW_MAX_QUERY_BATCH", 2, raising=True)
+    bulk = []
+    orig = S._search_arrow_bulk
+    monkeypatch.setattr(
+        S, "_search_arrow_bulk",
+        lambda *a: bulk.append(1) or orig(*a), raising=True,
+    )
+    Db, Ib = vi.search(xq, k=5, n_probe=3)
+    assert bulk
+    np.testing.assert_array_equal(Ib, I)
+    np.testing.assert_array_equal(Db.view(np.int32), D.view(np.int32))
+    (n_local, driver, tasks), = calls
+    assert driver and n_local <= tasks * 6 * 5
 
 
 def test_handle_infers_schema_once_and_lists_adds(spark, tmp_path):

@@ -102,10 +102,17 @@ def test_sessionize_single_shuffle(spark):
     assert s["shuffles"] == 1
 
 
-def test_sq_search_reads_only_codes(spark, embeddings, tmp_path_factory):
+def test_sq_search_reads_only_codes(
+    spark, embeddings, tmp_path_factory, monkeypatch
+):
     """The compressed search scan must column-prune to (id, codes) —
-    reading anything else forfeits the 4x scan advantage."""
+    reading anything else forfeits the 4x scan advantage. The window
+    merge keeps the scan in the returned plan (a driver merge returns
+    a local relation)."""
+    from vector_indexer_spark.operators import search as S
     from vector_indexer_spark.operators.sq import sq_encode, sq_train
+
+    monkeypatch.setattr(S, "_DRIVER_MERGE_LIMIT", 0, raising=True)
 
     vec = embeddings.select(
         F.col("vec_id").alias("id"), F.col("embedding").alias("values")

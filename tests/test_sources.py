@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import os
 import struct
 
 import numpy as np
@@ -224,6 +225,39 @@ class TestTrainingShards:
         assert set(m1["shard_rows"].values()) and min(
             m1["shard_rows"].values()
         ) > 0
+
+    def test_manifest_write_crash_keeps_previous_manifest(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A rewrite whose manifest write fails midway leaves the
+        previous complete manifest: the shard set still loads."""
+        import json
+        import shutil
+
+        from vector_indexer_spark.sinks import (
+            read_training_shards,
+            write_training_shards,
+        )
+
+        df = spark.createDataFrame(
+            [(i, f"doc {i}") for i in range(20)], "doc_id long, text string"
+        )
+        path = str(tmp_path / "shards")
+        first = write_training_shards(df, path, n_shards=2)
+        orig = json.dump
+
+        def crash(obj, fp, *args, **kwargs):
+            if "manifest" in getattr(fp, "name", ""):
+                fp.write("{")  # a partial write, then the crash
+                raise OSError("disk full")
+            return orig(obj, fp, *args, **kwargs)
+
+        shutil.rmtree(os.path.join(path, "data"))
+        monkeypatch.setattr(json, "dump", crash)
+        with pytest.raises(OSError, match="disk full"):
+            write_training_shards(df, path, n_shards=2)
+        monkeypatch.setattr(json, "dump", orig)
+        assert read_training_shards(spark, path).count() == first["rows"]
 
     def test_errors(self, spark, tmp_path):
         from vector_indexer_spark.sinks import (

@@ -12,7 +12,8 @@ standard first-pass filter at web scale (cf. the "Hamming embedding"
 Scale posture: encoding is a scan-local codegen fold (zero shuffle);
 search broadcasts the (small) query batch, scores with JVM-side
 ``bit_count(xor)`` expressions or an Arrow popcount-LUT GEMM-style
-kernel per partition, and only shuffles per-partition winners. The
+kernel in the shared map-side top-k stream (one running top-k per
+task, ``search.stream_topk``). The
 raw-vector table is never read at search time — codes only.
 
 Parity anchor: reference search contract (top-k, ties by id) per
@@ -23,14 +24,13 @@ the same way SQ8/PQ do.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from vector_indexer_spark.functions.kernels import topk_per_row
+from vector_indexer_spark.operators.search import ALL_QUERIES, stream_queries
 
 WORD_BITS = 32  # bits packed per BIGINT word (kept at 32 so the
 # fold accumulator stays far from the sign bit and the same literal
@@ -150,11 +150,10 @@ def bq_search(
 
     ``native`` scores with codegen ``bit_count(xor)`` expressions and
     ranks with a per-query window — the oracle-checkable path.
-    ``arrow`` unpacks codes to a uint8 matrix per partition, scores
-    every query against the partition with a popcount lookup table,
-    keeps the local top-k, and only shuffles partitions×nq×k winner
-    rows — the scan-scale path (same two-stage shape as knn's arrow
-    method). Both return identical rows.
+    ``arrow`` unpacks each Arrow batch's codes to a uint8 matrix,
+    scores every query against it with a popcount lookup table, and
+    keeps one running top-k per task — the scan-scale path (the
+    stream knn's arrow method runs too). Both return identical rows.
     """
     if k <= 0:
         raise ValueError("k must be positive")
@@ -194,21 +193,14 @@ def _codes_to_bytes(mat: np.ndarray) -> np.ndarray:
     )
 
 
-def _bq_search_arrow(codes_df, model, queries, k, query_id_col, query_col):
-    spark = codes_df.sparkSession
-    qrows = queries.select(query_id_col, query_col).collect()
-    if not qrows:
-        return spark.createDataFrame(
-            [], "query_id long, rank int, neighbor_id long, hamming long"
-        )
-    thr = np.asarray(model.thresholds, dtype=np.float64)
+def _query_bytes(qmat: np.ndarray, model: BQModel) -> np.ndarray:
+    """Queries sign-packed like :func:`pack_bits_expr`, as the byte
+    matrix the popcount table scores."""
     d, n_words = model.d, model.n_words
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qmat = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
-    if qmat.shape[1] != d:
-        raise ValueError(f"query dimension {qmat.shape[1]} != index {d}")
-    qbits = np.zeros((len(qids), n_words), dtype=np.int64)
-    bits = (qmat > thr).astype(np.int64)
+    qbits = np.zeros((len(qmat), n_words), dtype=np.int64)
+    bits = (qmat > np.asarray(model.thresholds, dtype=np.float64)).astype(
+        np.int64
+    )
     for j in range(d):
         w = j // WORD_BITS
         qbits[:, w] = qbits[:, w] * 2 + bits[:, j]
@@ -216,47 +208,24 @@ def _bq_search_arrow(codes_df, model, queries, k, query_id_col, query_col):
     tail = n_words * WORD_BITS - d
     if tail:
         qbits[:, -1] <<= tail
-    qbytes = _codes_to_bytes(qbits)
-    bq = spark.sparkContext.broadcast((qids, qbytes))
+    return _codes_to_bytes(qbits)
 
-    def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids_, qbytes_ = bq.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            cmat = np.stack(
-                [np.asarray(c, dtype=np.int64) for c in pdf["codes"]]
-            )
-            cbytes = _codes_to_bytes(cmat)
-            ids = pdf["id"].to_numpy()
-            # (nq, n, nbytes) xor is memory-bounded per partition batch;
-            # Arrow batches are ~10k rows so nq×10k×nbytes stays small
-            ham = _POPCNT8[np.bitwise_xor(qbytes_[:, None, :], cbytes[None, :, :])].sum(
-                axis=2
-            )
-            # tie-safe local cut — integer Hamming distances tie
-            # constantly; plain argpartition would keep arbitrary
-            # members of the boundary tie group instead of the
-            # lowest-id ones the global window contract expects
-            td, ti = topk_per_row(
-                ham.astype(np.float64), k, ids.astype(np.int64)
-            )
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(qids_, td.shape[1]),
-                    "neighbor_id": ti.reshape(-1),
-                    "hamming": td.astype(np.int64).reshape(-1),
-                }
-            )
 
-    local = codes_df.select("id", "codes").mapInPandas(
-        local_topk, "query_id long, neighbor_id long, hamming long"
-    )
-    w = Window.partitionBy("query_id").orderBy("hamming", "neighbor_id")
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "hamming")
+def _bq_search_arrow(codes_df, model, queries, k, query_id_col, query_col):
+    def blocks(pdf, qbytes_):
+        cmat = np.stack([np.asarray(c, dtype=np.int64) for c in pdf["codes"]])
+        cbytes = _codes_to_bytes(cmat)
+        # (nq, n, nbytes) xor is memory-bounded per Arrow batch
+        ham = _POPCNT8[
+            np.bitwise_xor(qbytes_[:, None, :], cbytes[None, :, :])
+        ].sum(axis=2)
+        ids = pdf["id"].to_numpy().astype(np.int64)
+        yield ALL_QUERIES, *topk_per_row(ham.astype(np.float64), k, ids)
+
+    return stream_queries(
+        codes_df.select("id", "codes"), queries, model.d, k, "hamming",
+        blocks, lambda qmat: _query_bytes(qmat, model), query_id_col,
+        query_col,
     )
 
 
@@ -348,12 +317,12 @@ def bq_adc_search(
     uses d graded contributions instead of d equal-weight bit flips.
 
     ``native`` scores with the flat codegen fold (the oracle path);
-    ``arrow`` unpacks each partition's codes to a ±1 float matrix and
-    GEMMs the query block against it, keeping the local top-k — same
-    two-stage shape as the Hamming arrow path, winner rows only ever
-    shuffle. The GEMM accumulates in a different order than the fold,
-    so arrow scores can differ in final ULPs (ranking ties by id are
-    preserved for distinct scores; the oracle path is ``native``).
+    ``arrow`` unpacks each Arrow batch's codes to a ±1 float matrix
+    and GEMMs the query block against it in the same top-k stream as
+    the Hamming arrow path. The GEMM accumulates in a different order
+    than the fold, so arrow scores can differ in final ULPs (ranking
+    ties by id are preserved for distinct scores; the oracle path is
+    ``native``).
 
     Returns ``(query_id, rank, neighbor_id, score)``, score DESC.
     """
@@ -399,50 +368,20 @@ def _unpack_bits(codes, d: int) -> np.ndarray:
 
 
 def _bq_adc_arrow(codes_df, model, queries, k, query_id_col, query_col):
-    spark = codes_df.sparkSession
-    qrows = queries.select(query_id_col, query_col).collect()
-    if not qrows:
-        return spark.createDataFrame(
-            [], "query_id long, rank int, neighbor_id long, score double"
-        )
     d = model.d
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qmat = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
-    if qmat.shape[1] != d:
-        raise ValueError(f"query dimension {qmat.shape[1]} != index {d}")
-    bq = spark.sparkContext.broadcast((qids, qmat))
 
-    def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids_, qmat_ = bq.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            signs = _unpack_bits(pdf["codes"], d) * 2.0 - 1.0  # (n, d)
-            ids = pdf["id"].to_numpy()
-            scores = qmat_ @ signs.T  # (nq, n)
-            # tie-safe local cut on negated scores: equal-score groups
-            # straddling the k boundary keep their lowest ids, matching
-            # the global (score DESC, id ASC) window
-            td, ti = topk_per_row(-scores, k, ids.astype(np.int64))
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(qids_, td.shape[1]),
-                    "neighbor_id": ti.reshape(-1),
-                    "score": (-td).reshape(-1),
-                }
-            )
+    def blocks(pdf, qmat_):
+        signs = _unpack_bits(pdf["codes"], d) * 2.0 - 1.0  # (n, d)
+        ids = pdf["id"].to_numpy().astype(np.int64)
+        # the stream ranks ascending: rank the negated score
+        yield ALL_QUERIES, *topk_per_row(-(qmat_ @ signs.T), k, ids)
 
-    local = codes_df.select("id", "codes").mapInPandas(
-        local_topk, "query_id long, neighbor_id long, score double"
+    out = stream_queries(
+        codes_df.select("id", "codes"), queries, d, k, "score", blocks,
+        lambda qmat: qmat, query_id_col, query_col,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), "neighbor_id"
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "score")
-    )
+    # (score DESC, id) order; negate back to the score
+    return out.withColumn("score", -F.col("score"))
 
 
 def bq_adc_refined(

@@ -29,9 +29,10 @@ Scoring, both over probed clusters only (J3/J4 pruning unchanged):
 Scale posture: candidates = codes ⋈ broadcast(probes) — the codes
 table never shuffles; the native paths are whole-stage-codegen folds
 (bit-replayable in DuckDB — oracles ``ivfbq_search_fixed`` /
-``ivfbq_hamming_fixed``); the arrow ADC path decodes each partition to
-a ±1 matrix and GEMMs the query block, masked by the probe matrix,
-keeping local top-k — winners-only shuffle (the IVF-SQ arrow shape).
+``ivfbq_hamming_fixed``); the arrow ADC path decodes each Arrow batch
+to a ±1 matrix and GEMMs each cluster's rows against only its probing
+queries, in the one map-side top-k stream every arrow scorer shares
+(``search.stream_topk``, the IVF-SQ arrow shape).
 
 Reference parity: the reference is flat-IVF only (src/shards.rs); this
 tier extends it like SQ/PQ do, same result contract (ties by id).
@@ -40,10 +41,8 @@ tier extends it like SQ/PQ do, same result contract (ties by id).
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -66,9 +65,10 @@ from vector_indexer_spark.operators.index_build import (
     write_sharded,
 )
 from vector_indexer_spark.operators.search import (
-    rank_winners,
+    probed_clusters,
     search_frames,
     search_persisted,
+    stream_topk,
 )
 
 __all__ = [
@@ -249,9 +249,9 @@ def ivfbq_search(
       cluster. Returns ``(query_id, rank, neighbor_id, hamming)``.
 
     Ties by id. ``native`` is the codegen/oracle path;
-    ``method="arrow"`` (adc only) is the scan-scale kernel:
-    per-partition ±1 decode + masked GEMM, local top-k, winners-only
-    shuffle.
+    ``method="arrow"`` (adc only) is the scan-scale kernel: per-batch
+    ±1 decode, a per-cluster GEMM against the probing queries, one
+    running top-k per task.
     """
     if k <= 0 or n_probe <= 0:
         raise ValueError("k and n_probe must be positive")  # P3
@@ -353,57 +353,30 @@ def _ivfbq_adc_score(codes_df, plan, cents, rhov, k):
     all-queries GEMM scored every query against every partition row
     and discarded the misses — measured 4.29 s vs 1.30 s for the
     per-cluster shape at 1M×128, 256 localized queries / 16 probes),
-    local top-k map-side, winners-only window rank. The ``|q−c|²``
-    term is the plan's own probe distance."""
+    through the shared top-k stream. The ``|q−c|²`` term is the plan's
+    own probe distance."""
     d = plan.qmat.shape[1]
     # per-cluster |q−c|² of its probing queries, aligned with qprobe
     qd2 = {
         c: plan.probe_d2[qidx, np.argmax(plan.probe_ids[qidx] == c, axis=1)]
         for c, qidx in plan.qprobe.items()
     }
-    bc = codes_df.sparkSession.sparkContext.broadcast(
-        (plan.qids, plan.qmat, cents, plan.qprobe, qd2, rhov)
-    )
 
-    def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids_, qmat_, cents_, qprobe_, qd2_, rhov_ = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            signs = _unpack_bits(pdf["codes"], d) * 2.0 - 1.0
-            cl = pdf["cluster_id"].to_numpy()
-            ids = pdf["id"].to_numpy()
-            # raw = (q − c)·signs_row; adist2 = |q−c|² − 2ρ·raw + d·ρ²
-            for c in np.unique(cl):
-                qidx = qprobe_.get(int(c))
-                if qidx is None or not len(qidx):
-                    continue
-                rows = np.flatnonzero(cl == c)
-                raw = (qmat_[qidx] - cents_[c][None, :]) @ signs[rows].T
-                rho = rhov_[c]
-                adist2 = (
-                    qd2_[int(c)][:, None]
-                    - 2.0 * rho * raw
-                    + d * rho * rho
-                )
-                # tie-safe local cut: include the whole boundary tie
-                # group and lexsort (dist, id) so the global window's
-                # ties-by-id contract survives the per-partition prune
-                td, ti = topk_per_row(
-                    adist2, k, ids[rows].astype(np.int64)
-                )
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.repeat(qids_[qidx], td.shape[1]),
-                        "neighbor_id": ti.reshape(-1),
-                        "adist2": td.reshape(-1),
-                    }
-                )
+    def blocks(pdf, state):
+        qmat_, cents_, qprobe_, qd2_, rhov_ = state
+        signs = _unpack_bits(pdf["codes"], d) * 2.0 - 1.0
+        ids = pdf["id"].to_numpy().astype(np.int64)
+        # raw = (q − c)·signs_row; adist2 = |q−c|² − 2ρ·raw + d·ρ²
+        for c, rows, qidx in probed_clusters(pdf, qprobe_):
+            raw = (qmat_[qidx] - cents_[c][None, :]) @ signs[rows].T
+            rho = rhov_[c]
+            adist2 = qd2_[c][:, None] - 2.0 * rho * raw + d * rho * rho
+            yield qidx, *topk_per_row(adist2, k, ids[rows])
 
-    local = codes_df.select("id", "cluster_id", "codes").mapInPandas(
-        local_topk, "query_id long, neighbor_id long, adist2 double"
+    return stream_topk(
+        codes_df.select("id", "cluster_id", "codes"), plan.qids, k, "adist2",
+        blocks, (plan.qmat, cents, plan.qprobe, qd2, rhov),
     )
-    return rank_winners(local, k, "adist2")
 
 
 def ivfbq_search_refined(

@@ -16,26 +16,21 @@ Two physical strategies for the same logical query:
   broadcast query matrix inside ``mapInPandas`` — a map-side combine
   that reduces the ``n_vectors × n_queries`` candidates to
   ``n_partitions × n_queries × k`` winners (one running top-k per
-  partition) before the global rank. When the scan's partition count
-  keeps those winners driver-sized, they merge on the driver, like
-  the IVF search (``search.merge_winners``): one Spark job, no
-  shuffle. At 100 TB the native plan's window over the full cross
-  product is the bottleneck; past the driver-merge bound this one
-  window-ranks only the per-partition winners.
+  partition) before the global rank — the map-side stream every arrow
+  scorer shares (``search.stream_topk``). When the scan's partition
+  count keeps those winners driver-sized, they merge on the driver:
+  one Spark job, no shuffle. At 100 TB the native plan's window over
+  the full cross product is the bottleneck; past the driver-merge
+  bound this one window-ranks only the per-partition winners.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from vector_indexer_spark.functions.distance import dist2_expr
-from vector_indexer_spark.functions.kernels import stack_arrays
-from vector_indexer_spark.operators.search import merge_winners, winners_frame
+from vector_indexer_spark.operators.search import ALL_QUERIES, stream_queries
 
 
 def knn_exact(
@@ -109,46 +104,18 @@ def _knn_native(vectors, queries, k, id_col, vec_col, query_id_col, query_col):
 
 
 def _knn_arrow(vectors, queries, k, id_col, vec_col, query_id_col, query_col):
-    spark = vectors.sparkSession
-    qrows = queries.select(query_id_col, query_col).collect()
-    if not qrows:
-        return spark.createDataFrame(
-            [], "query_id long, rank int, neighbor_id long, dist2 double"
-        )
-    qids = [r[0] for r in qrows]
-    qmat = stack_arrays([r[1] for r in qrows])
-    bq = spark.sparkContext.broadcast((qids, qmat))
-
-    def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids_, qmat_ = bq.value
+    def blocks(pdf, qmat_):
         from vector_indexer_spark.functions.kernels import (
             chunked_topk,
-            merge_topk,
+            stack_arrays,
         )
 
-        # one running top-k per partition, emitted once: a task yields
-        # ≤ nq × k rows however many Arrow batches its split holds
-        best = None
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            vmat = stack_arrays(pdf[vec_col])
-            vids = pdf[id_col].to_numpy()
-            # per-query local top-k; candidate-chunked so the scratch
-            # matrix stays bounded for large query batches
-            best = merge_topk(best, chunked_topk(qmat_, vmat, vids, k), k)
-        if best is None:
-            return
-        dists, ids = best
-        yield pd.DataFrame(
-            {
-                "query_id": np.repeat(qids_, dists.shape[1]),
-                "neighbor_id": ids.reshape(-1),
-                "dist2": dists.reshape(-1),
-            }
-        )
+        # per-query local top-k; candidate-chunked so the scratch
+        # matrix stays bounded for large query batches
+        vmat = stack_arrays(pdf[vec_col])
+        yield ALL_QUERIES, *chunked_topk(qmat_, vmat, pdf[id_col].to_numpy(), k)
 
-    local = vectors.select(id_col, vec_col).mapInPandas(
-        local_topk, "query_id long, neighbor_id long, dist2 double"
+    return stream_queries(
+        vectors.select(id_col, vec_col), queries, None, k, "dist2", blocks,
+        lambda qmat: qmat, query_id_col, query_col,
     )
-    return winners_frame(spark, merge_winners(local, len(qids), k))

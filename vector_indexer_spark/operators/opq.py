@@ -60,6 +60,7 @@ from vector_indexer_spark.operators.search import (
     empty_result,
     probe_plan,
     prune,
+    winners_frame,
 )
 
 OPQ_FORMAT_VERSION = 1
@@ -426,10 +427,11 @@ def search_ivfopq(
         shards=pq.centroid_shards,
         hierarchy=pq.probe_hierarchy,
     )
-    return _ivfpq_score(
+    winners = _ivfpq_score(
         prune(pq.codes(spark), plan.shard_ids, plan.cluster_ids),
         plan,
         pq.centroids,
         pq.pq.codebooks,
         k,
     )
+    return winners_frame(spark, winners, "adc_dist2")

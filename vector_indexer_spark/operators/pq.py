@@ -25,9 +25,10 @@ Spark shape (all DataFrame-native):
   too). Distributed encode/search; only training samples.
 - **encode** — ``mapInPandas`` argmin per subspace against broadcast
   codebooks → ``(id, codes ARRAY<INT>)``. One scan, no shuffle.
-- **search** — broadcast per-query LUTs; per-partition ADC top-k
-  (map-side combine, the ``knn_exact`` arrow pattern) → global
-  window rank over ``partitions × nq × k`` rows. The 100 TB scan
+- **search** — broadcast per-query LUTs; one running ADC top-k per
+  task (the map-side stream every arrow scorer shares,
+  ``search.stream_topk``) → one merge of ``≤ tasks × nq × k`` rows,
+  on the driver while that is driver-sized. The 100 TB scan
   reads ONLY the codes column (Parquet column pruning) — the raw
   vector table is never touched at query time.
 
@@ -71,10 +72,11 @@ from vector_indexer_spark.operators.kmeans import (
     kmeans_numpy,
 )
 from vector_indexer_spark.operators.search import (
-    collect_queries,
-    empty_result,
-    rank_winners,
+    ALL_QUERIES,
+    probed_clusters,
     search_persisted,
+    stream_queries,
+    stream_topk,
 )
 
 PQ_FORMAT_VERSION = 1
@@ -219,6 +221,20 @@ def _luts(qmat: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
         )
     np.maximum(lut, 0.0, out=lut)
     return lut
+
+
+def _int_codes(codes) -> np.ndarray:
+    """A ``codes`` column → (n, m) int64 matrix."""
+    return np.asarray([np.asarray(c, dtype=np.int64) for c in codes])
+
+
+def _adc(lut: np.ndarray, codes: np.ndarray) -> np.ndarray:
+    """(nq, n) ADC distances ``Σ_j lut[q, j, codes[i, j]]``: the
+    gather of one (nq, n) block per subspace, summed in order."""
+    d2 = lut[:, 0, codes[:, 0]]
+    for j in range(1, lut.shape[1]):
+        d2 = d2 + lut[:, j, codes[:, j]]
+    return d2
 
 
 def pq_encode(
@@ -388,49 +404,22 @@ def pq_search(
 
     Plan shape: the query batch is collected (bounded-batch contract,
     same as ``knn_exact``'s arrow path), per-query LUTs are broadcast
-    (nq·m·ksub doubles — 256 queries × 16 × 256 ≈ 8 MB), each partition
-    emits its local top-k, and a global window ranks the
-    ``partitions × nq × k`` survivors. The big side never shuffles.
+    (nq·m·ksub doubles — 256 queries × 16 × 256 ≈ 8 MB), each task
+    emits one running top-k, and ``search.merge_winners`` ranks the
+    ``≤ tasks × nq × k`` survivors. The big side never shuffles.
     """
     if k <= 0:
         raise ValueError("k must be positive")
-    spark = codes_df.sparkSession
-    batch = collect_queries(queries, model.dimension, query_id_col, query_col)
-    if batch is None:
-        return empty_result(spark, "adc_dist2")
-    qids, qmat = batch
-    blut = spark.sparkContext.broadcast((qids, _luts(qmat, model.codebooks)))
 
-    def _adc_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids_, lut_ = blut.value
-        nq_, m_, _ = lut_.shape
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            codes = np.asarray(
-                [np.asarray(c, dtype=np.int64) for c in pdf[codes_col]]
-            )
-            vids = pdf[id_col].to_numpy()
-            # gather: d2[q, i] = Σ_j lut[q, j, codes[i, j]]
-            # lut[:, j, codes[:, j]] is (nq, n) per subspace — summed in
-            # place so scratch stays at one (nq, n) block
-            d2 = lut_[:, 0, codes[:, 0]]
-            for j in range(1, m_):
-                d2 = d2 + lut_[:, j, codes[:, j]]
-            dists, ids = topk_per_row(d2, k, ids=vids)
-            kk = dists.shape[1]
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(qids_, kk),
-                    "neighbor_id": ids.reshape(-1),
-                    "adc_dist2": dists.reshape(-1),
-                }
-            )
+    def blocks(pdf, lut_):
+        d2 = _adc(lut_, _int_codes(pdf[codes_col]))
+        yield ALL_QUERIES, *topk_per_row(d2, k, ids=pdf[id_col].to_numpy())
 
-    local = codes_df.select(id_col, codes_col).mapInPandas(
-        _adc_topk, "query_id long, neighbor_id long, adc_dist2 double"
+    return stream_queries(
+        codes_df.select(id_col, codes_col), queries, model.dimension, k,
+        "adc_dist2", blocks, lambda qmat: _luts(qmat, model.codebooks),
+        query_id_col, query_col,
     )
-    return rank_winners(local, k, "adc_dist2")
 
 
 # ---------------------------------------------------------------------------
@@ -598,55 +587,22 @@ def search_ivfpq(
 
 def _ivfpq_score(codes_df, plan, cents, codebooks, k):
     """Per-cluster residual ADC over a pruned codes scan (the
-    :func:`search_ivfpq` kernel, shared with IVF-OPQ)."""
-    bstate = codes_df.sparkSession.sparkContext.broadcast(
-        (plan.qids, plan.qmat, cents, codebooks, plan.qprobe)
-    )
+    :func:`search_ivfpq` kernel, shared with IVF-OPQ): for each scanned
+    cluster, residual LUTs for its probing queries only, then the
+    LUT-gather distances, through the shared top-k stream."""
 
-    def _adc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids_, qmat_, cents_, cb_, qprobe_ = bstate.value
-        m_ = cb_.shape[0]
-        nq = qmat_.shape[0]
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            codes_np = np.asarray(
-                [np.asarray(c, dtype=np.int64) for c in pdf["codes"]]
-            )
-            vids = pdf["id"].to_numpy()
-            cl = pdf["cluster_id"].to_numpy()
-            nrows = len(vids)
-            d2 = np.full((nq, nrows), np.inf)
-            # per scanned cluster: residual LUTs for the probing
-            # queries only, then the LUT-gather distance fill
-            for c in np.unique(cl):
-                qsel = qprobe_.get(int(c))
-                if qsel is None or qsel.size == 0:
-                    continue
-                rsel = np.flatnonzero(cl == c)
-                lut = _luts(qmat_[qsel] - cents_[c], cb_)
-                sub = lut[:, 0, codes_np[rsel, 0]]
-                for j in range(1, m_):
-                    sub = sub + lut[:, j, codes_np[rsel, j]]
-                d2[np.ix_(qsel, rsel)] = sub
-            dists, ids = topk_per_row(d2, k, ids=vids)
-            keep = np.isfinite(dists)
-            if not keep.any():
-                continue
-            kk = dists.shape[1]
-            qrep = np.repeat(qids_, kk).reshape(nq, kk)
-            yield pd.DataFrame(
-                {
-                    "query_id": qrep[keep],
-                    "neighbor_id": ids[keep],
-                    "adc_dist2": dists[keep],
-                }
-            )
+    def blocks(pdf, state):
+        qmat_, cents_, cb_, qprobe_ = state
+        codes = _int_codes(pdf["codes"])
+        vids = pdf["id"].to_numpy()
+        for c, rows, qidx in probed_clusters(pdf, qprobe_):
+            d2 = _adc(_luts(qmat_[qidx] - cents_[c], cb_), codes[rows])
+            yield qidx, *topk_per_row(d2, k, ids=vids[rows])
 
-    local = codes_df.select("id", "codes", "cluster_id").mapInPandas(
-        _adc, "query_id long, neighbor_id long, adc_dist2 double"
+    return stream_topk(
+        codes_df.select("id", "codes", "cluster_id"), plan.qids, k,
+        "adc_dist2", blocks, (plan.qmat, cents, codebooks, plan.qprobe),
     )
-    return rank_winners(local, k, "adc_dist2")
 
 
 def add_vectors_ivfpq(

@@ -27,9 +27,11 @@ Scale posture (mirrors ``bq_adc_search``): encoding is scan-local
 (zero shuffle; the arrow path GEMMs each Arrow batch against the
 broadcast d×d rotation), search reads the **codes+factors table only**
 (16 B + d/8 B per vector — the raw vector table is never scanned),
-broadcasts the bounded rotated query batch, scores per partition, and
-shuffles only per-partition winners. ``native`` is the flat-codegen
-fold path the correctness oracle replays term-for-term in DuckDB;
+broadcasts the bounded rotated query batch, and scores it in the one
+map-side top-k stream every arrow scorer shares (``search.stream_topk``:
+one running top-k per task, merged on the driver while that is
+driver-sized). ``native`` is the flat-codegen fold path the
+correctness oracle replays term-for-term in DuckDB;
 ``arrow`` is the NumPy/GEMM hot path (different accumulation order —
 final-ULP score drift possible, ranking preserved for distinct scores).
 
@@ -41,8 +43,8 @@ do (reference is a flat+IVF f32 engine).
 from __future__ import annotations
 
 import math
+from collections.abc import Iterator
 from dataclasses import dataclass
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -65,11 +67,12 @@ from vector_indexer_spark.operators.index_build import (
     write_sharded,
 )
 from vector_indexer_spark.operators.search import (
-    collect_queries,
-    empty_result,
-    rank_winners,
+    ALL_QUERIES,
+    probed_clusters,
     search_frames,
     search_persisted,
+    stream_queries,
+    stream_topk,
 )
 
 RABITQ_FORMAT_VERSION = 1
@@ -400,8 +403,8 @@ def rabitq_search(
 
     The raw-vector table is never read. ``native``: broadcast prepped
     queries × codes scored by the codegen fold (oracle path).
-    ``arrow``: per-partition unpack-to-bits + GEMM against the query
-    block, local top-k, winners-only shuffle (hot path)."""
+    ``arrow``: per-batch unpack-to-bits + GEMM against the query
+    block, one running top-k per task (hot path)."""
     if k <= 0:
         raise ValueError("k must be positive")  # P3
     if method == "native":
@@ -432,62 +435,52 @@ def rabitq_search(
     raise ValueError(f"unknown method {method!r}")
 
 
-def _rabitq_search_arrow(codes_df, model, queries, k, query_id_col, query_col):
-    spark = codes_df.sparkSession
-    d = model.d
-    batch = collect_queries(queries, d, query_id_col, query_col)
-    if batch is None:
-        return empty_result(spark, "est_dist2")
-    qids, qmat = batch
-    p = model.rotation_matrix()
-    c = np.asarray(model.centroid, dtype=np.float64)
-    rq = (qmat - c[None, :]) @ p.T  # (nq, d)
+def _prep_queries(qmat: np.ndarray, center: np.ndarray, p: np.ndarray):
+    """The estimator's query factors against one centering point: the
+    rotated unit residuals ``u``, their norms ``‖q−c‖`` and ``Σu``."""
+    rq = (qmat - center[None, :]) @ p.T  # (nq, d)
     qn = np.sqrt(np.einsum("ij,ij->i", rq, rq))
     u = np.divide(rq, qn[:, None], out=np.zeros_like(rq), where=qn[:, None] > 0)
-    sum_u = u.sum(axis=1)
-    scale = 1.0 / math.sqrt(d)
-    bq_ = spark.sparkContext.broadcast((qids, u, qn, sum_u))
+    return u, qn, u.sum(axis=1)
 
-    def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids_, u_, qn_, sum_u_ = bq_.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            cbits = _unpack_bits(pdf["codes"], d)
-            norm = pdf["norm"].to_numpy()
-            dot_o = pdf["dot_o"].to_numpy()
-            ids = pdf["id"].to_numpy()
-            s1 = u_ @ cbits.T  # (nq, n)
-            est_obar_u = (2.0 * s1 - sum_u_[:, None]) * scale
-            est_ip = np.divide(
-                est_obar_u,
-                dot_o[None, :],
-                out=np.zeros_like(est_obar_u),
-                where=dot_o[None, :] > 0,
-            )
-            d2 = (
-                (norm * norm)[None, :]
-                + (qn_ * qn_)[:, None]
-                - 2.0 * norm[None, :] * qn_[:, None] * est_ip
-            )
-            # tie-safe local cut: plain argpartition keeps ARBITRARY
-            # members of an equal-distance tie group straddling the k
-            # boundary, so a lower-id tied candidate could be dropped
-            # before the global (dist, id) window — violating the
-            # engine-wide ties-by-id contract on duplicate-heavy data
-            td, ti = topk_per_row(d2, k, ids.astype(np.int64))
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(qids_, td.shape[1]),
-                    "neighbor_id": ti.reshape(-1),
-                    "est_dist2": td.reshape(-1),
-                }
-            )
 
-    local = codes_df.select("id", "codes", "norm", "dot_o").mapInPandas(
-        local_topk, "query_id long, neighbor_id long, est_dist2 double"
+def _estimate(u, qn, sum_u, cbits, norm, dot_o) -> np.ndarray:
+    """(nq, n) estimated squared distances of prepped queries to
+    unpacked codes with their ``norm`` / ``dot_o`` factors — the NumPy
+    twin of :func:`rabitq_score_expr`."""
+    s1 = u @ cbits.T  # (nq, n)
+    est_obar_u = (2.0 * s1 - sum_u[:, None]) * (1.0 / math.sqrt(u.shape[1]))
+    est_ip = np.divide(
+        est_obar_u,
+        dot_o[None, :],
+        out=np.zeros_like(est_obar_u),
+        where=dot_o[None, :] > 0,
     )
-    return rank_winners(local, k, "est_dist2")
+    return (
+        (norm * norm)[None, :]
+        + (qn * qn)[:, None]
+        - 2.0 * norm[None, :] * qn[:, None] * est_ip
+    )
+
+
+def _rabitq_search_arrow(codes_df, model, queries, k, query_id_col, query_col):
+    d = model.d
+    center = np.asarray(model.centroid, dtype=np.float64)
+
+    def blocks(pdf, prep_):
+        d2 = _estimate(
+            *prep_, _unpack_bits(pdf["codes"], d), pdf["norm"].to_numpy(),
+            pdf["dot_o"].to_numpy(),
+        )
+        ids = pdf["id"].to_numpy().astype(np.int64)
+        yield ALL_QUERIES, *topk_per_row(d2, k, ids)
+
+    return stream_queries(
+        codes_df.select("id", "codes", "norm", "dot_o"), queries, d, k,
+        "est_dist2", blocks,
+        lambda qmat: _prep_queries(qmat, center, model.rotation_matrix()),
+        query_id_col, query_col,
+    )
 
 
 # --------------------------------------------------------------------------
@@ -679,8 +672,8 @@ def ivf_rabitq_search(
     ``native``: whole-stage-codegen folds, the oracle path. ``arrow``:
     driver probe ranking on the nlist-sized centroid matrix, literal
     IN pruning of the codes scan, then a per-cluster GEMM of unpacked
-    bits against that cluster's probing-query block inside
-    ``mapInPandas`` — winners-only shuffle."""
+    bits against that cluster's probing-query block, one running
+    top-k per task."""
     if k <= 0 or n_probe <= 0:
         raise ValueError("k and n_probe must be positive")  # P3
     d = len(rotation)
@@ -766,73 +759,32 @@ def _ivf_rabitq_score(codes_df, plan, cents, rotation, k):
     cluster, the rotated unit residuals of its probing queries vs THIS
     centroid are prepared on the driver — (nq × n_probe × d) total,
     bounded — then each cluster's unpacked bits are GEMMed against
-    that block inside ``mapInPandas``; winners-only window rank."""
+    that block through the shared top-k stream."""
     d = len(rotation)
     if plan.qmat.shape[1] != d:
         raise ValueError(
             f"query dimension {plan.qmat.shape[1]} != rotation {d}"
         )
     p = np.asarray(rotation, dtype=np.float64)
-    prep: dict = {}
-    for c, qidx in plan.qprobe.items():
-        rq = (plan.qmat[qidx] - cents[c][None, :]) @ p.T
-        qn = np.sqrt(np.einsum("ij,ij->i", rq, rq))
-        u = np.divide(
-            rq, qn[:, None], out=np.zeros_like(rq), where=qn[:, None] > 0
-        )
-        prep[c] = (qidx, u, qn, u.sum(axis=1))
-    scale = 1.0 / math.sqrt(d)
-    bc = codes_df.sparkSession.sparkContext.broadcast((plan.qids, prep))
+    prep = {
+        c: _prep_queries(plan.qmat[qidx], cents[c], p)
+        for c, qidx in plan.qprobe.items()
+    }
 
-    def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids_, prep_ = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            cl = pdf["cluster_id"].to_numpy()
-            cbits = _unpack_bits(pdf["codes"], d)
-            norm = pdf["norm"].to_numpy()
-            dot_o = pdf["dot_o"].to_numpy()
-            ids = pdf["id"].to_numpy()
-            for c in np.unique(cl):
-                entry = prep_.get(int(c))
-                if entry is None:
-                    continue
-                qidx, u, qn, su = entry
-                rows = np.flatnonzero(cl == c)
-                s1 = u @ cbits[rows].T  # (nq_c, n_c)
-                est_obar_u = (2.0 * s1 - su[:, None]) * scale
-                do = dot_o[rows]
-                est_ip = np.divide(
-                    est_obar_u,
-                    do[None, :],
-                    out=np.zeros_like(est_obar_u),
-                    where=do[None, :] > 0,
-                )
-                nr = norm[rows]
-                d2 = (
-                    (nr * nr)[None, :]
-                    + (qn * qn)[:, None]
-                    - 2.0 * nr[None, :] * qn[:, None] * est_ip
-                )
-                # tie-safe local cut (see rabitq_search's local_topk)
-                td, ti = topk_per_row(
-                    d2, k, ids[rows].astype(np.int64)
-                )
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.repeat(qids_[qidx], td.shape[1]),
-                        "neighbor_id": ti.reshape(-1),
-                        "est_dist2": td.reshape(-1),
-                    }
-                )
+    def blocks(pdf, state):
+        qprobe_, prep_ = state
+        cbits = _unpack_bits(pdf["codes"], d)
+        norm = pdf["norm"].to_numpy()
+        dot_o = pdf["dot_o"].to_numpy()
+        ids = pdf["id"].to_numpy().astype(np.int64)
+        for c, rows, qidx in probed_clusters(pdf, qprobe_):
+            d2 = _estimate(*prep_[c], cbits[rows], norm[rows], dot_o[rows])
+            yield qidx, *topk_per_row(d2, k, ids[rows])
 
-    local = codes_df.select(
-        "id", "cluster_id", "codes", "norm", "dot_o"
-    ).mapInPandas(
-        local_topk, "query_id long, neighbor_id long, est_dist2 double"
+    return stream_topk(
+        codes_df.select("id", "cluster_id", "codes", "norm", "dot_o"),
+        plan.qids, k, "est_dist2", blocks, (plan.qprobe, prep),
     )
-    return rank_winners(local, k, "est_dist2")
 
 
 def ivf_rabitq_search_refined(

@@ -26,12 +26,12 @@ Spark-first re-expression, one job for a whole *batch* of queries:
    cluster ids are globally unique, so the cluster predicate alone is
    exact; the shard predicate prunes directories earlier.
 3. **Scoring + top-k** (F1/W2): per-Arrow-batch NumPy scoring of each
-   candidate cluster against only the queries that probed it, with one
-   running *local* top-k per partition emitted map-side, then one
-   global rank over ``≤ partitions × nq × k`` rows
-   (:func:`merge_winners`: on the driver when the real partition
-   count keeps that driver-sized, a window beyond). The full
-   candidate × query cross-product never hits a shuffle.
+   candidate cluster against only the queries that probed it, folded
+   into one running *local* top-k per task that the task emits once,
+   then one global rank over ``≤ tasks × nq × k`` rows
+   (:func:`merge_winners`: on the driver when the real task count
+   keeps that driver-sized, a window beyond). The full candidate ×
+   query cross-product never hits a shuffle.
 
 ``method="native"`` runs the same logical plan as pure DataFrame ops
 (broadcast joins + fold expression + window) — bit-reproducible and
@@ -41,7 +41,9 @@ The arrow path's driver probe plan (:func:`probe_plan`) and pruning
 (:func:`prune`) are the one search skeleton of every persisted tier:
 the compressed tiers (IVF-SQ/BQ/RaBitQ/PQ) reach them through
 :func:`search_persisted`, their composable stages through
-:func:`search_frames`, and each supplies only its scoring kernel.
+:func:`search_frames`. Every Arrow scorer — flat and IVF, exact kNN
+included — runs through one map-side top-k stream
+(:func:`stream_topk`) and supplies only its block function.
 """
 
 from __future__ import annotations
@@ -250,15 +252,18 @@ class ProbePlan(NamedTuple):
 
 
 def collect_queries(
-    queries: DataFrame, dimension: int, query_id_col: str, query_col: str
+    queries: DataFrame, dimension: int | None, query_id_col: str, query_col: str
 ) -> tuple[np.ndarray, np.ndarray] | None:
     """The one driver collect of a query batch (driver-sized by
     contract — the reference's whole input is a NumPy matrix), with
-    P2 validation on the collected rows (no extra Spark job). Returns
+    P2 validation on the collected rows (no extra Spark job; a
+    ``dimension`` of None checks against the first row's). Returns
     ``(qids, qmat)``, or None for an empty batch."""
     qrows = queries.select(query_id_col, query_col).collect()
     if not qrows:
         return None
+    if dimension is None:
+        dimension = len(qrows[0][1])
     bad = sum(1 for r in qrows if len(r[1]) != dimension)
     if bad:
         raise ValueError(f"{bad} queries have dimension != {dimension}")
@@ -374,55 +379,158 @@ def _task_count(df: DataFrame) -> int | None:
     return plan.execute().getNumPartitions()
 
 
-def merge_winners(local: DataFrame, nq: int, k: int) -> pd.DataFrame | DataFrame:
-    """W2 for ``(query_id, neighbor_id, dist2)`` winners that a map-side
-    kernel emits once per partition — the final merge of search and
-    exact kNN. The stream is ≤ tasks × nq × k rows. When the plan's
+def merge_winners(
+    local: DataFrame, nq: int, k: int, dist_col: str
+) -> pd.DataFrame | DataFrame:
+    """W2 for ``(query_id, neighbor_id, <dist_col>)`` winners that a
+    map-side kernel emits once per task — the final merge of every
+    arrow scorer. The stream is ≤ tasks × nq × k rows. When the plan's
     real task count keeps that within ``_DRIVER_MERGE_LIMIT``, it is
-    collected and ranked by one ``(query_id, dist2, neighbor_id)``
+    collected and ranked by one ``(query_id, dist, neighbor_id)``
     lexsort — the driver-side assembly the reference does, and what
     Spark's own TakeOrderedAndProject does for a global top-k — with
     no shuffle stage, and the pandas frame is returned. Otherwise
     (more rows, or a task count only an adaptive plan's stages could
     tell) the distributed window rank's DataFrame is. Columns are
-    ``(query_id, rank, neighbor_id, dist2)`` either way."""
+    ``(query_id, rank, neighbor_id, <dist_col>)`` either way."""
     tasks = _task_count(local)
     if tasks is None or tasks * nq * k > _DRIVER_MERGE_LIMIT:
-        return rank_winners(local, k, "dist2")
+        return rank_winners(local, k, dist_col)
     pdf = local.toPandas()
     pdf = pdf.iloc[
         np.lexsort(
             (
                 pdf["neighbor_id"].to_numpy(),
-                pdf["dist2"].to_numpy(),
+                pdf[dist_col].to_numpy(),
                 pdf["query_id"].to_numpy(),
             )
         )
     ]
     rank = pdf.groupby("query_id", sort=False).cumcount() + 1
     out = pdf.assign(rank=rank.astype("int32"))
-    return out[out["rank"] <= k][["query_id", "rank", "neighbor_id", "dist2"]]
+    return out[out["rank"] <= k][["query_id", "rank", "neighbor_id", dist_col]]
 
 
-def winners_frame(spark: SparkSession, winners: pd.DataFrame | DataFrame) -> DataFrame:
+def _dist_type(dist_col: str) -> str:
+    """Hamming counts are long, every distance is double."""
+    return "long" if dist_col == "hamming" else "double"
+
+
+def _result_schema(dist_col: str) -> str:
+    return (
+        f"query_id long, rank int, neighbor_id long, {dist_col} "
+        + _dist_type(dist_col)
+    )
+
+
+def winners_frame(
+    spark: SparkSession, winners: pd.DataFrame | DataFrame, dist_col: str
+) -> DataFrame:
     """:func:`merge_winners`' result as a DataFrame (a driver-merged
     frame becomes a local relation: collecting it runs no job)."""
     if isinstance(winners, DataFrame):
         return winners
     if winners.empty:
-        return empty_result(spark, "dist2")
-    return spark.createDataFrame(
-        winners, "query_id long, rank int, neighbor_id long, dist2 double"
-    )
+        return empty_result(spark, dist_col)
+    return spark.createDataFrame(winners, _result_schema(dist_col))
 
 
 def empty_result(spark: SparkSession, dist_col: str) -> DataFrame:
-    """The result of an empty query batch (hamming counts are long,
-    every distance is double)."""
-    dtype = "long" if dist_col == "hamming" else "double"
-    return spark.createDataFrame(
-        [], f"query_id long, rank int, neighbor_id long, {dist_col} {dtype}"
+    """The result of an empty query batch."""
+    return spark.createDataFrame([], _result_schema(dist_col))
+
+
+# The query rows of a block that scores every query of the batch.
+ALL_QUERIES = slice(None)
+
+
+def stream_topk(
+    frame: DataFrame,
+    qids: np.ndarray,
+    k: int,
+    dist_col: str,
+    blocks: Callable[[pd.DataFrame, object], Iterator[tuple]],
+    state=None,
+) -> pd.DataFrame | DataFrame:
+    """The map-side top-k stream every arrow scorer runs (F1/W2).
+
+    ``qids`` and the scorer's driver-built ``state`` are broadcast once.
+    Each task folds the blocks that ``blocks(pdf, state)`` yields for
+    its non-empty Arrow batches of ``frame`` into one running
+    ``(nq, k)`` top-k. A block is ``(rows, dists, ids)``: the query rows
+    it scored (an index array, or ``ALL_QUERIES``) and their
+    ``(distance, id)``-cut top-k (``kernels.topk_per_row`` or
+    ``chunked_topk``). The task emits its finite winners once — at
+    most nq × k rows however many batches and clusters it scored — and
+    :func:`merge_winners` ranks them."""
+    bc = frame.sparkSession.sparkContext.broadcast((qids, state))
+    dtype = np.int64 if _dist_type(dist_col) == "long" else np.float64
+
+    def _stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from vector_indexer_spark.functions.kernels import merge_topk
+
+        qids_, state_ = bc.value
+        # pad slots sort after every real pair and are never emitted
+        dists = np.full((len(qids_), k), np.inf)
+        ids = np.full((len(qids_), k), np.iinfo(np.int64).max)
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            for rows, bd, bi in blocks(pdf, state_):
+                dists[rows], ids[rows] = merge_topk(
+                    (dists[rows], ids[rows]), (bd, bi), k
+                )
+        keep = np.isfinite(dists)
+        if keep.any():
+            yield pd.DataFrame(
+                {
+                    "query_id": np.broadcast_to(qids_[:, None], keep.shape)[keep],
+                    "neighbor_id": ids[keep],
+                    dist_col: dists[keep].astype(dtype),
+                }
+            )
+
+    local = frame.mapInPandas(
+        _stream,
+        f"query_id long, neighbor_id long, {dist_col} {_dist_type(dist_col)}",
     )
+    return merge_winners(local, len(qids), k, dist_col)
+
+
+def stream_queries(
+    frame: DataFrame,
+    queries: DataFrame,
+    dimension: int | None,
+    k: int,
+    dist_col: str,
+    blocks: Callable[[pd.DataFrame, object], Iterator[tuple]],
+    state: Callable[[np.ndarray], object],
+    query_id_col: str,
+    query_col: str,
+) -> DataFrame:
+    """A flat scorer's search: one query collect, then
+    :func:`stream_topk` over ``frame`` with ``state(qmat)``, as a
+    DataFrame (an empty batch is :func:`empty_result`)."""
+    spark = frame.sparkSession
+    batch = collect_queries(queries, dimension, query_id_col, query_col)
+    if batch is None:
+        return empty_result(spark, dist_col)
+    qids, qmat = batch
+    winners = stream_topk(frame, qids, k, dist_col, blocks, state(qmat))
+    return winners_frame(spark, winners, dist_col)
+
+
+def probed_clusters(
+    pdf: pd.DataFrame, qprobe: dict
+) -> Iterator[tuple[int, np.ndarray, np.ndarray]]:
+    """The per-cluster probe loop of the IVF scorers: for each cluster
+    of an Arrow batch that some query probes, ``(cluster id, its batch
+    rows, the indices of the queries probing it)``."""
+    cl = pdf["cluster_id"].to_numpy()
+    for c in np.unique(cl):
+        qidx = qprobe.get(int(c))
+        if qidx is not None and len(qidx):
+            yield int(c), np.flatnonzero(cl == c), qidx
 
 
 def search_persisted(
@@ -433,14 +541,15 @@ def search_persisted(
     n_probe: int,
     codes: DataFrame | None,
     dist_col: str,
-    score: Callable[[DataFrame, ProbePlan, np.ndarray], DataFrame],
+    score: Callable[[DataFrame, ProbePlan, np.ndarray], pd.DataFrame | DataFrame],
     query_id_col: str,
     query_col: str,
 ) -> DataFrame:
     """The persisted compressed-tier search: one query collect → one
     driver probe plan against the index's centroid matrix → literal
     IN pruning of the codes table (``codes`` overrides the scan) →
-    ``score(pruned, plan, centroids)``, the tier's kernel. Every
+    ``score(pruned, plan, centroids)``, the tier's kernel (a
+    :func:`stream_topk` result, or a DataFrame). Every
     query's candidates come from exactly its own probe list, flat or
     hierarchical — the scan and the scorer cannot disagree."""
     if k <= 0 or n_probe <= 0:
@@ -456,9 +565,8 @@ def search_persisted(
         hierarchy=index.probe_hierarchy,
     )
     table = codes if codes is not None else index.codes(spark)
-    return score(
-        prune(table, plan.shard_ids, plan.cluster_ids), plan, index.centroids
-    )
+    pruned = prune(table, plan.shard_ids, plan.cluster_ids)
+    return winners_frame(spark, score(pruned, plan, index.centroids), dist_col)
 
 
 def search_frames(
@@ -467,7 +575,7 @@ def search_frames(
     queries: DataFrame,
     n_probe: int,
     dist_col: str,
-    score: Callable[[DataFrame, ProbePlan, np.ndarray], DataFrame],
+    score: Callable[[DataFrame, ProbePlan, np.ndarray], pd.DataFrame | DataFrame],
     query_id_col: str,
     query_col: str,
     centroid_id_col: str,
@@ -488,7 +596,8 @@ def search_frames(
     # decodes them — without it the kernel decoded and scored every
     # row of every partition (measured 16.7 s → pruned cost at 1M,
     # synth workload probing ~6% of rows)
-    return score(prune(codes_df, None, plan.cluster_ids), plan, cents)
+    winners = score(prune(codes_df, None, plan.cluster_ids), plan, cents)
+    return winners_frame(codes_df.sparkSession, winners, dist_col)
 
 
 def warn_missing_shards(index: IvfIndex) -> None:
@@ -691,6 +800,7 @@ def _search_arrow(
             query_id_col=query_id_col, query_col=query_col,
             vectors=vectors, filter_expr=filter_expr,
         ),
+        "dist2",
     )
 
 
@@ -760,57 +870,36 @@ def search_batch(
         spark, index, vectors, plan.shard_ids, plan.cluster_ids, filter_expr
     )
     if bulk:
-        return _search_arrow_bulk(spark, pruned, plan, k)
-    # (nq, n_probed_clusters) membership mask over the compacted
-    # cluster list — the executor-side scoring mask
-    probe_mask = np.zeros((len(qids), len(plan.cluster_ids)), dtype=bool)
-    probe_mask[
-        np.arange(len(qids))[:, None],
-        np.searchsorted(plan.cluster_ids, plan.probe_ids),
-    ] = True
-    return _score_arrow_scan(
-        spark, pruned, qids, qmat, plan.cluster_ids, probe_mask, k
-    )
+        return _search_arrow_bulk(pruned, plan, k)
+    return _score_arrow_scan(pruned, plan, k)
 
 
-def _search_arrow_bulk(spark, pruned, plan, k):
+def _search_arrow_bulk(pruned, plan, k):
     """Bulk-batch arrow search: per-cluster GEMM of each cluster's rows
     against ONLY the queries probing it (work ∝ probed rows × probing
     queries — the IVF-BQ/SQ r9 kernel shape), for query batches too
     large for the masked all-queries GEMM but small enough to
     broadcast. The probe plan ranked on the driver in bounded query
-    chunks; the global rank is a window (a bulk batch is past the
-    driver-merge regime by definition)."""
-    bc = spark.sparkContext.broadcast((plan.qids, plan.qmat, plan.qprobe))
+    chunks."""
 
-    def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids_, qmat_, qprobe_ = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            vmat = stack_arrays(pdf["values"])
-            vids = pdf["id"].to_numpy()
-            cl = pdf["cluster_id"].to_numpy()
-            for c in np.unique(cl):
-                qidx = qprobe_.get(int(c))
-                if qidx is None or not len(qidx):
-                    continue
-                rows = np.flatnonzero(cl == c)
-                d2 = pairwise_dist2(qmat_[qidx], vmat[rows])
-                # tie-safe local cut (ties-by-id contract)
-                td, ti = topk_per_row(d2, k, vids[rows])
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.repeat(qids_[qidx], td.shape[1]),
-                        "neighbor_id": ti.reshape(-1),
-                        "dist2": td.reshape(-1),
-                    }
-                )
+    def blocks(pdf, state):
+        from vector_indexer_spark.functions.kernels import (
+            pairwise_dist2,
+            stack_arrays,
+            topk_per_row,
+        )
 
-    local = pruned.select("id", "values", "cluster_id").mapInPandas(
-        _score, "query_id long, neighbor_id long, dist2 double"
+        qmat_, qprobe_ = state
+        vmat = stack_arrays(pdf["values"])
+        vids = pdf["id"].to_numpy()
+        for _, rows, qidx in probed_clusters(pdf, qprobe_):
+            d2 = pairwise_dist2(qmat_[qidx], vmat[rows])
+            yield qidx, *topk_per_row(d2, k, vids[rows])
+
+    return stream_topk(
+        pruned.select("id", "values", "cluster_id"), plan.qids, k, "dist2",
+        blocks, (plan.qmat, plan.qprobe),
     )
-    return rank_winners(local, k, "dist2")
 
 
 def _score_native(vectors, probes, queries, k, query_id_col, query_col):
@@ -836,65 +925,46 @@ def _score_native(vectors, probes, queries, k, query_id_col, query_col):
     )
 
 
-def _score_arrow_scan(spark, vectors, qids, qmat, cluster_ids, probe_mask, k):
+def _score_arrow_scan(vectors, plan, k):
     """Arrow scoring with a probe mask: one GEMM per Arrow batch for
     all queries × all batch rows, non-probed (query, row) slots masked
-    to +inf, one running local top-k per partition emitted map-side,
-    then :func:`merge_winners`.
+    to +inf, through :func:`stream_topk`.
 
     A per-cluster Python group loop was ~2× slower at nlist≈1.3k
     (thousands of tiny GEMMs); masking trades a few redundant flops on
     the already-pruned rows for batch-sized vectorized kernels.
     """
-    bc = spark.sparkContext.broadcast(
-        (qids, qmat, np.asarray(cluster_ids, dtype=np.int64), probe_mask)
-    )
+    # (nq, n_probed_clusters) membership mask over the compacted
+    # cluster list — the executor-side scoring mask
+    nq = len(plan.qids)
+    probe_mask = np.zeros((nq, len(plan.cluster_ids)), dtype=bool)
+    probe_mask[
+        np.arange(nq)[:, None],
+        np.searchsorted(plan.cluster_ids, plan.probe_ids),
+    ] = True
 
-    def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids_, qmat_, cids_, mask_ = bc.value
+    def blocks(pdf, state):
         from vector_indexer_spark.functions.kernels import (
             chunked_topk,
-            merge_topk,
+            stack_arrays,
         )
 
-        # one running top-k per partition, emitted once: a task yields
-        # ≤ nq × k rows however many Arrow batches its split holds
-        best = None
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            vmat = stack_arrays(pdf["values"])
-            vids = pdf["id"].to_numpy()
-            # compact position of each row's cluster (cids_ is sorted;
-            # the scan predicate guarantees membership)
-            rowpos = np.searchsorted(cids_, pdf["cluster_id"].to_numpy())
+        qmat_, cids_, mask_ = state
+        # compact position of each row's cluster (cids_ is sorted; the
+        # scan predicate guarantees membership)
+        rowpos = np.searchsorted(cids_, pdf["cluster_id"].to_numpy())
 
-            def _mask(sl, d2, rowpos=rowpos, mask_=mask_):
-                d2[~mask_[:, rowpos[sl]]] = np.inf
+        def _mask(sl, d2):
+            d2[~mask_[:, rowpos[sl]]] = np.inf
 
-            best = merge_topk(
-                best, chunked_topk(qmat_, vmat, vids, k, mask_fn=_mask), k
-            )
-        if best is None:
-            return
-        dists, ids = best
-        keep = np.isfinite(dists)
-        if not keep.any():
-            return
-        nq, kk = dists.shape
-        qrep = np.repeat(qids_, kk).reshape(nq, kk)
-        yield pd.DataFrame(
-            {
-                "query_id": qrep[keep],
-                "neighbor_id": ids[keep],
-                "dist2": dists[keep],
-            }
-        )
+        vmat = stack_arrays(pdf["values"])
+        vids = pdf["id"].to_numpy()
+        yield ALL_QUERIES, *chunked_topk(qmat_, vmat, vids, k, mask_fn=_mask)
 
-    local = vectors.select("id", "values", "cluster_id").mapInPandas(
-        _score, "query_id long, neighbor_id long, dist2 double"
+    return stream_topk(
+        vectors.select("id", "values", "cluster_id"), plan.qids, k, "dist2",
+        blocks, (plan.qmat, plan.cluster_ids, probe_mask),
     )
-    return merge_winners(local, len(qids), k)
 
 
 def range_search(

@@ -38,15 +38,17 @@ from __future__ import annotations
 
 import json
 import os
-from collections.abc import Iterator
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from vector_indexer_spark.functions.kernels import chunked_topk, topk_per_row
+from vector_indexer_spark.functions.kernels import (
+    chunked_topk,
+    pairwise_dist2,
+    topk_per_row,
+)
 from vector_indexer_spark.ioutil import atomic_write_json
 from vector_indexer_spark.operators.index_build import (
     IvfHandle,
@@ -62,11 +64,12 @@ from vector_indexer_spark.operators.index_build import (
     write_sharded,
 )
 from vector_indexer_spark.operators.search import (
-    collect_queries,
-    empty_result,
-    rank_winners,
+    ALL_QUERIES,
+    probed_clusters,
     search_frames,
     search_persisted,
+    stream_queries,
+    stream_topk,
 )
 
 SQ_FORMAT_VERSION = 1
@@ -220,10 +223,11 @@ def sq_search(
 
     Two physical strategies, same semantics (the knn_exact split):
 
-    - ``"arrow"`` (default): per-partition NumPy decode + GEMM top-k
-      against the broadcast query matrix — shuffles only
-      ``partitions × nq × k`` winners, the plan that survives a 100 TB
-      codes scan.
+    - ``"arrow"`` (default): per-batch NumPy decode + GEMM top-k
+      against the broadcast query matrix, one running top-k per task
+      (``search.stream_topk``) — at most ``tasks × nq × k`` winners
+      reach the final merge, the plan that survives a 100 TB codes
+      scan.
     - ``"native"``: reconstruction + fold inside whole-stage codegen,
       window over the full cross product — bit-reproducible; the
       correctness oracle's path (a pytest bridges the two).
@@ -275,40 +279,28 @@ def _sq_search_native(codes_df, model, queries, k, query_id_col, query_col):
     )
 
 
+def _sq_decode(codes, dmin, scale, centroid=None) -> np.ndarray:
+    """A ``codes`` column → (n, d) float64 reconstructions
+    ``dmin + code·scale``, offset by the cluster ``centroid`` for the
+    residual codes of IVF-SQ."""
+    codes = np.asarray([np.asarray(c, dtype=np.float64) for c in codes])
+    base = dmin if centroid is None else centroid[None, :] + dmin
+    return base + codes * scale
+
+
 def _sq_search_arrow(codes_df, model, queries, k, query_id_col, query_col):
-    spark = codes_df.sparkSession
-    batch = collect_queries(queries, model.dimension, query_id_col, query_col)
-    if batch is None:
-        return empty_result(spark, "adist2")
-    qids, qmat = batch
+    def blocks(pdf, state):
+        qmat_, dmin_, scale_ = state
+        recon = _sq_decode(pdf["codes"], dmin_, scale_)
+        yield ALL_QUERIES, *chunked_topk(qmat_, recon, pdf["id"].to_numpy(), k)
+
     dmin = np.asarray(model.dmin, dtype=np.float64)
     scale = np.asarray(model.scale, dtype=np.float64)
-    bstate = spark.sparkContext.broadcast((qids, qmat, dmin, scale))
-
-    def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids_, qmat_, dmin_, scale_ = bstate.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            codes = np.asarray(
-                [np.asarray(c, dtype=np.float64) for c in pdf["codes"]]
-            )
-            recon = dmin_ + codes * scale_  # (n, d) decode in one op
-            vids = pdf["id"].to_numpy()
-            dists, ids = chunked_topk(qmat_, recon, vids, k)
-            nq, kk = dists.shape
-            yield pd.DataFrame(
-                {
-                    "query_id": [qid for qid in qids_ for _ in range(kk)],
-                    "neighbor_id": ids.reshape(-1),
-                    "adist2": dists.reshape(-1),
-                }
-            )
-
-    local = codes_df.select("id", "codes").mapInPandas(
-        local_topk, "query_id long, neighbor_id long, adist2 double"
+    return stream_queries(
+        codes_df.select("id", "codes"), queries, model.dimension, k,
+        "adist2", blocks, lambda qmat: (qmat, dmin, scale), query_id_col,
+        query_col,
     )
-    return rank_winners(local, k, "adist2")
 
 
 # ---------------------------------------------------------------------------
@@ -435,12 +427,12 @@ def ivfsq_search(
     """Pruned decode-and-score search over residual codes. Returns
     ``(query_id, rank, neighbor_id, adist2)``.
 
-    - ``"arrow"`` (default): per-partition NumPy decode + GEMM with a
-      probe mask (a candidate scores for a query only if its cluster is
-      probed by that query), map-side top-k — winners-only shuffle. The
-      scan-scale path: the native fold over ~10⁶ (query, candidate)
-      pairs × d element ops is an order of magnitude slower (measured
-      24 s vs 2 s at n=200k, nq=256).
+    - ``"arrow"`` (default): each scanned cluster's rows decoded and
+      GEMMed against only the queries probing it, one running top-k
+      per task (``search.stream_topk``). The scan-scale path: the
+      native fold over ~10⁶ (query, candidate) pairs × d element ops
+      is an order of magnitude slower (measured 24 s vs 2 s at
+      n=200k, nq=256).
     - ``"native"``: probe ranking, reconstruction ``c + (dmin +
       code·scale)`` and the fold all in whole-stage codegen —
       bit-reproducible; the oracle's path (``ivfsq_search_fixed``).
@@ -606,59 +598,29 @@ def _ivfsq_score(codes_df, plan, cents, model, k):
     against ONLY the queries that probe it (the masked all-queries
     GEMM scored every query against every kept row and discarded the
     misses — at 256 localized queries / 16 of 4000 probes that is
-    ~99% wasted flops; same fix as the IVF-BQ arrow kernel), local
-    top-k map-side, winners-only window rank."""
+    ~99% wasted flops; same fix as the IVF-BQ arrow kernel), through
+    the shared top-k stream."""
     if plan.qmat.shape[1] != model.dimension:
         raise ValueError(
             f"query dimension {plan.qmat.shape[1]} != SQ dimension "
             f"{model.dimension}"
         )
+
+    def blocks(pdf, state):
+        qmat_, qprobe_, cents_, dmin_, scale_ = state
+        codes = pdf["codes"].to_numpy()
+        vids = pdf["id"].to_numpy()
+        for c, rows, qidx in probed_clusters(pdf, qprobe_):
+            rc = _sq_decode(codes[rows], dmin_, scale_, cents_[c])
+            d2 = pairwise_dist2(qmat_[qidx], rc)
+            yield qidx, *topk_per_row(d2, k, ids=vids[rows])
+
     dmin = np.asarray(model.dmin, dtype=np.float64)
     scale = np.asarray(model.scale, dtype=np.float64)
-    bstate = codes_df.sparkSession.sparkContext.broadcast(
-        (plan.qids, plan.qmat, plan.qprobe, cents, dmin, scale)
+    return stream_topk(
+        codes_df.select("id", "cluster_id", "codes"), plan.qids, k, "adist2",
+        blocks, (plan.qmat, plan.qprobe, cents, dmin, scale),
     )
-
-    def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids_, qmat_, qprobe_, cents_, dmin_, scale_ = bstate.value
-        qsq = np.einsum("ij,ij->i", qmat_, qmat_)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            cl = pdf["cluster_id"].to_numpy()
-            codes = np.asarray(
-                [np.asarray(c, dtype=np.float64) for c in pdf["codes"]]
-            )
-            vids = pdf["id"].to_numpy()
-            for c in np.unique(cl):
-                qidx = qprobe_.get(int(c))
-                if qidx is None or not len(qidx):
-                    continue
-                rows = np.flatnonzero(cl == c)
-                rc = cents_[c][None, :] + dmin_ + codes[rows] * scale_
-                qs = qmat_[qidx]
-                d2 = (
-                    qsq[qidx][:, None]
-                    - 2.0 * (qs @ rc.T)
-                    + np.einsum("ij,ij->i", rc, rc)[None, :]
-                )
-                np.maximum(d2, 0.0, out=d2)
-                # pad slots (k > cluster size) carry inf — dropped below
-                dd, ii = topk_per_row(d2, k, ids=vids[rows])
-                kk = dd.shape[1]
-                out = pd.DataFrame(
-                    {
-                        "query_id": np.repeat(qids_[qidx], kk),
-                        "neighbor_id": ii.reshape(-1),
-                        "adist2": dd.reshape(-1),
-                    }
-                )
-                yield out[np.isfinite(out["adist2"])]
-
-    local = codes_df.select("id", "cluster_id", "codes").mapInPandas(
-        local_topk, "query_id long, neighbor_id long, adist2 double"
-    )
-    return rank_winners(local, k, "adist2")
 
 
 def add_vectors_ivfsq(

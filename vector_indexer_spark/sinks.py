@@ -30,6 +30,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from vector_indexer_spark.ioutil import atomic_write_json
+
 SHARD_FORMAT_VERSION = 1
 CONTENT_HASH_SEED = 23
 
@@ -133,8 +135,7 @@ def write_training_shards(
             str(s): stats.get(s, (0, 0))[1] for s in range(n_shards)
         },
     }
-    with open(os.path.join(path, "manifest.json"), "w") as f:
-        json.dump(manifest, f, indent=2, sort_keys=True)
+    atomic_write_json(os.path.join(path, "manifest.json"), manifest)
     return manifest
 
 
