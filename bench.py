@@ -213,6 +213,30 @@ def timed(fn, min_duration: float | None = None, key: str | None = None) -> floa
     return runs[len(runs) // 2]
 
 
+def write_extras(path: str, extras: dict) -> None:
+    """Merge-update the extras sidecar at ``path``: keys from sections
+    this run skipped (the heavy opt-in ones) keep their last recorded
+    values instead of being wiped by a lean run; keys this run computed
+    are replaced. The write is atomic (tmp + rename), so a run that
+    dies mid-write leaves the previous complete file — a truncated one
+    would fail to parse and the next run would silently drop every key
+    recorded in it."""
+    from vector_indexer_spark.ioutil import atomic_write_json
+
+    merged = {}
+    try:
+        with open(path) as f:
+            prior = json.load(f)
+        if isinstance(prior, dict):
+            merged.update(prior)
+    except (OSError, ValueError):
+        pass
+    merged.update(extras)
+    # atomic_write_json keeps insertion order: a sort_keys round trip
+    # keeps the sidecar's sorted key order, nested keys included
+    atomic_write_json(path, json.loads(json.dumps(merged, sort_keys=True)))
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
@@ -2378,21 +2402,7 @@ def main() -> None:
         ),
     )
     try:
-        # merge-update: keys from sections this run skipped (the heavy
-        # opt-in ones) keep their last recorded values instead of being
-        # wiped by a lean run. Keys this run DID compute are replaced.
-        merged = {}
-        try:
-            with open(extras_path) as f:
-                prior = json.load(f)
-            if isinstance(prior, dict):
-                merged.update(prior)
-        except (OSError, ValueError):
-            pass
-        merged.update(extras)
-        with open(extras_path, "w") as f:
-            json.dump(merged, f, indent=2, sort_keys=True)
-            f.write("\n")
+        write_extras(extras_path, extras)
     except OSError:
         extras_path = None
     print(json.dumps({"extras_file": extras_path, "extras": extras}))

@@ -274,7 +274,8 @@ def _scorer(name, d, monkeypatch):
     """``(search, truth)`` of one arrow scorer on the duplicate-heavy
     corpus: ``search(queries, method)`` runs it, and ``truth`` holds the
     NumPy top-k rows of ``d["xq"]`` where the scorer has no native twin
-    (None where it has one)."""
+    (PQ's search of the rotated queries for OPQ; None where it has
+    one)."""
     from vector_indexer_spark.operators import bq, ivfbq, opq, pq, rabitq, sq
 
     spark, vec, cents = d["spark"], d["vec"], d["cents"]
@@ -327,6 +328,18 @@ def _scorer(name, d, monkeypatch):
             np.zeros((1, D8)), model.codebooks, 1,
         )
         return lambda q, m: pq.pq_search(codes, q, model, TOP), truth
+    if name == "opq":
+        model = opq.opq_train(flat, m=4, ksub=8, seed=2)
+        codes = _stored(d, name, opq.opq_encode(flat, model))
+        rotated = spark.createDataFrame(
+            pd.DataFrame({"query_id": qids, "query": list(model.rotate(qmat))}),
+            "query_id long, query array<double>",
+        )
+        truth = [
+            tuple(r)
+            for r in pq.pq_search(codes, rotated, model.pq, TOP).collect()
+        ]
+        return lambda q, m: opq.opq_search(codes, q, model, TOP), truth
     path = str(d["root"] / name)
     if name in ("ivfpq", "ivfopq"):
         kw = dict(nlist=4, m=4, ksub=8, seed=2, max_iters=4)
@@ -353,7 +366,7 @@ def _scorer(name, d, monkeypatch):
 
 SCORERS = [
     "sq", "ivfsq", "bq_hamming", "bq_adc", "ivfbq", "rabitq", "ivf_rabitq",
-    "pq", "ivfpq", "ivfopq", "knn", "masked", "bulk",
+    "pq", "ivfpq", "ivfopq", "knn", "masked", "bulk", "opq",
 ]
 
 

@@ -104,6 +104,24 @@ class TestSearch:
         with pytest.raises(ValueError):
             bq_search(bq_encode(df, model), model, q, k=0)
 
+    def test_native_drops_corrupt_code_rows(self, spark):
+        """A codes row of the wrong length folds to a NULL distance;
+        the native rank puts it after every real row and drops it
+        instead of ranking it first."""
+        model = BQModel(thresholds=(0.0,) * 4)
+        codes = spark.createDataFrame(
+            [(1, [5 << 28]), (2, [3 << 28]), (3, [])],
+            "id long, codes array<bigint>",
+        )
+        q = spark.createDataFrame(
+            [(0, [1.0, -1.0, 1.0, -1.0])], "query_id long, query array<double>"
+        )
+        rows = bq_search(codes, model, q, k=3, method="native").collect()
+        assert [(r["rank"], r.neighbor_id, r.hamming) for r in rows] == [
+            (1, 2, 2),
+            (2, 1, 4),
+        ]
+
     def test_recall_against_exact(self, spark):
         # binary codes are lossy but on gaussian data hamming@shortlist
         # must recover most true neighbors

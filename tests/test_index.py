@@ -806,6 +806,34 @@ class TestRelationalProbeRanking:
         with pytest.raises(ValueError, match="lazy_centroids"):
             lazy.probe_hierarchy()
 
+    def test_lazy_range_search_matches_eager(self, spark, index, queries_df):
+        """range_search shares the native search's probe-and-prune
+        stage: a lazy-centroid handle ranks its probes against the
+        centroid table and returns the eager handle's rows, and a
+        wrong-dimension batch raises ValueError on either."""
+        from vector_indexer_spark.operators.search import range_search
+
+        eager = load_index(spark, index.path)
+        lazy = load_index(spark, index.path, lazy_centroids=True)
+
+        def rows(idx):
+            return sorted(
+                tuple(r)
+                for r in range_search(
+                    spark, idx, queries_df, radius2=1.3, n_probe=4
+                ).collect()
+            )
+
+        want = rows(eager)
+        assert len(want) > len(set(r[0] for r in want))
+        assert rows(lazy) == want
+        bad = spark.createDataFrame(
+            [(0, [1.0, 2.0, 3.0])], "query_id long, query array<double>"
+        )
+        for idx in (eager, lazy):
+            with pytest.raises(ValueError, match="dimension"):
+                range_search(spark, idx, bad, radius2=1.0, n_probe=4)
+
 
 class TestAddVectors:
     """Incremental ingest (add_vectors): the maintenance twin of

@@ -79,7 +79,21 @@ SEARCH = {
     "pq": lambda spark, idx, q, k, n_probe: pq.search_ivfpq(
         spark, idx, q, k=k, n_probe=n_probe
     ),
+    # the persisted native (codegen) twins
+    "bq_hamming": lambda spark, idx, q, k, n_probe: ivfbq.search_ivfbq_index(
+        spark, idx, q, k=k, n_probe=n_probe, scoring="hamming"
+    ),
+    "bq_adc_native": lambda spark, idx, q, k, n_probe: ivfbq.search_ivfbq_index(
+        spark, idx, q, k=k, n_probe=n_probe, method="native"
+    ),
+    "rabitq_native": lambda spark, idx, q, k, n_probe: (
+        rabitq.search_ivf_rabitq_index(
+            spark, idx, q, k=k, n_probe=n_probe, method="native"
+        )
+    ),
 }
+# the index each SEARCH case runs on, where it is not the case's name
+TIER_OF = {"bq_hamming": "bq", "bq_adc_native": "bq", "rabitq_native": "rabitq"}
 
 
 def _by_query(rows):
@@ -89,15 +103,15 @@ def _by_query(rows):
     return out
 
 
-@pytest.mark.parametrize("tier", ["sq", "bq", "rabitq", "pq"])
+@pytest.mark.parametrize("tier", list(SEARCH))
 def test_hierarchical_scan_score_agreement(
     spark, tiers, queries, monkeypatch, tier
 ):
     """With hierarchical probe ranking forced on, every query's result
     is the top-k over ITS OWN hierarchical probe list (the flat
-    search_index contract) — no tier may score a cluster outside that
-    list, nor miss one inside it."""
-    idx = tiers[tier]
+    search_index contract) — no tier, arrow or native, may score a
+    cluster outside that list, nor miss one inside it."""
+    idx = tiers[TIER_OF.get(tier, tier)]
     qrows = queries.orderBy("query_id").collect()
     qids = [r.query_id for r in qrows]
     qmat = np.asarray([r.query for r in qrows], dtype=np.float64)

@@ -26,11 +26,15 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from vector_indexer_spark.functions.kernels import topk_per_row
-from vector_indexer_spark.operators.search import ALL_QUERIES, stream_queries
+from vector_indexer_spark.operators.search import (
+    ALL_QUERIES,
+    rank_winners,
+    stream_queries,
+)
 
 WORD_BITS = 32  # bits packed per BIGINT word (kept at 32 so the
 # fold accumulator stays far from the sign bit and the same literal
@@ -149,7 +153,8 @@ def bq_search(
     reference's result contract).
 
     ``native`` scores with codegen ``bit_count(xor)`` expressions and
-    ranks with a per-query window — the oracle-checkable path.
+    ranks with the one native window rank (``search.rank_winners``) —
+    the oracle-checkable path.
     ``arrow`` unpacks each Arrow batch's codes to a uint8 matrix,
     scores every query against it with a popcount lookup table, and
     keeps one running top-k per task — the scan-scale path (the
@@ -174,12 +179,7 @@ def _bq_search_native(codes_df, model, queries, k, query_id_col, query_col):
         F.col("id").alias("neighbor_id"),
         hamming_expr("codes", "__qc").alias("hamming"),
     )
-    w = Window.partitionBy("query_id").orderBy("hamming", "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "hamming")
-    )
+    return rank_winners(scored, k, "hamming")
 
 
 _POPCNT8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.int64)
@@ -316,7 +316,8 @@ def bq_adc_search(
     at identical storage — the query is never quantized, so ranking
     uses d graded contributions instead of d equal-weight bit flips.
 
-    ``native`` scores with the flat codegen fold (the oracle path);
+    ``native`` scores with the flat codegen fold and ranks the negated
+    score with ``search.rank_winners`` (the oracle path);
     ``arrow`` unpacks each Arrow batch's codes to a ±1 float matrix
     and GEMMs the query block against it in the same top-k stream as
     the Hamming arrow path. The GEMM accumulates in a different order
@@ -333,18 +334,15 @@ def bq_adc_search(
             F.col(query_id_col).alias("query_id"),
             F.col(query_col).alias("__qv"),
         )
+        # rank the negated score ascending, then negate back: the
+        # arrow twin's (score DESC, id) order
         scored = codes_df.crossJoin(F.broadcast(q)).select(
             "query_id",
             F.col("id").alias("neighbor_id"),
-            adc_score_expr("codes", "__qv", model).alias("score"),
+            (-adc_score_expr("codes", "__qv", model)).alias("score"),
         )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("score").desc(), "neighbor_id"
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "neighbor_id", "score")
+        return rank_winners(scored, k, "score").withColumn(
+            "score", -F.col("score")
         )
     if method == "arrow":
         return _bq_adc_arrow(codes_df, model, queries, k, query_id_col, query_col)

@@ -43,7 +43,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from vector_indexer_spark.functions.kernels import topk_per_row
@@ -64,8 +64,11 @@ from vector_indexer_spark.operators.index_build import (
     write_meta,
     write_sharded,
 )
+from vector_indexer_spark.operators.knn import knn_exact
 from vector_indexer_spark.operators.search import (
+    probe_pairs,
     probed_clusters,
+    rank_winners,
     search_frames,
     search_persisted,
     stream_topk,
@@ -218,6 +221,15 @@ def ivfbq_train_scales(
     return agg.select(cluster_col, rho.alias("rho"))
 
 
+def _check_scoring(scoring: str, method: str) -> None:
+    if scoring not in ("adc", "hamming"):
+        raise ValueError(f"unknown scoring {scoring!r}")
+    if method not in ("arrow", "native"):
+        raise ValueError(f"unknown method {method!r}")
+    if method == "arrow" and scoring != "adc":
+        raise ValueError("arrow path implements adc scoring only")
+
+
 def ivfbq_search(
     codes_df: DataFrame,
     centroids: DataFrame,
@@ -248,23 +260,22 @@ def ivfbq_search(
       per-cluster sign pack, ascending; bounded [0, d] in every
       cluster. Returns ``(query_id, rank, neighbor_id, hamming)``.
 
-    Ties by id. ``native`` is the codegen/oracle path;
+    Ties by id. ``native`` is the codegen/oracle path: probes ranked
+    by exact kNN's native plan over the centroid frame, candidates
+    scored by the fold and ranked by ``search.rank_winners``;
     ``method="arrow"`` (adc only) is the scan-scale kernel: per-batch
     ±1 decode, a per-cluster GEMM against the probing queries, one
     running top-k per task.
     """
     if k <= 0 or n_probe <= 0:
         raise ValueError("k and n_probe must be positive")  # P3
-    if scoring not in ("adc", "hamming"):
-        raise ValueError(f"unknown scoring {scoring!r}")
+    _check_scoring(scoring, method)
     if scoring == "adc" and scales is None:
         raise ValueError(
             "adc scoring needs the per-cluster scale table — "
             "pass scales=ivfbq_train_scales(...)"
         )
     if method == "arrow":
-        if scoring != "adc":
-            raise ValueError("arrow path implements adc scoring only")
 
         def score(pruned, plan, cents):
             rhov = np.zeros(len(cents), dtype=np.float64)
@@ -276,16 +287,35 @@ def ivfbq_search(
             codes_df, centroids, queries, n_probe, "adist2", score,
             query_id_col, query_col, centroid_id_col, centroid_vec_col,
         )
-    if method != "native":
-        raise ValueError(f"unknown method {method!r}")
+    qd = queries.select(F.size(query_col).alias("d")).first()
+    if qd is None:
+        raise ValueError("empty query batch")
+    # J3/W1: top-n_probe clusters per query
+    probes = knn_exact(
+        centroids, queries, n_probe, id_col=centroid_id_col,
+        vec_col=centroid_vec_col, query_id_col=query_id_col,
+        query_col=query_col, method="native",
+    ).select("query_id", F.col("neighbor_id").alias("cluster_id"))
+    return _ivfbq_native_score(
+        codes_df, centroids, queries, probes, k, scales, scoring, qd["d"],
+        query_id_col, query_col, centroid_id_col, centroid_vec_col,
+    )
+
+
+def _ivfbq_native_score(
+    codes_df, centroids, queries, probes, k, scales, scoring, d,
+    query_id_col, query_col, centroid_id_col="centroid_id",
+    centroid_vec_col="cvec",
+):
+    """The codegen scorer of the candidates of ``probes`` — each query's
+    ``(query_id, cluster_id)`` probe pairs — ranked by
+    :func:`search.rank_winners`. Codes join the broadcast probes, so
+    they never shuffle; ``|q−c|²``, the ADC estimator's first term, is
+    the same fold the probe ranking uses."""
     from vector_indexer_spark.functions.distance import (  # noqa: PLC0415
         dist2_expr,
     )
 
-    qd = queries.select(F.size(query_col).alias("d")).first()
-    if qd is None:
-        raise ValueError("empty query batch")
-    d = qd["d"]
     q = queries.select(
         F.col(query_id_col).alias("query_id"), F.col(query_col).alias("__q")
     )
@@ -293,57 +323,33 @@ def ivfbq_search(
         F.col(centroid_id_col).alias("cluster_id"),
         F.col(centroid_vec_col).alias("__cvec"),
     )
-    # J3/W1: top-n_probe clusters per query (cdist2 kept — it is the
-    # first term of the ADC estimator)
-    pscore = q.crossJoin(F.broadcast(cents)).select(
-        "query_id", "cluster_id",
-        dist2_expr("__q", "__cvec").alias("cdist2"),
-    )
-    pw = Window.partitionBy("query_id").orderBy("cdist2", "cluster_id")
-    probes = (
-        pscore.withColumn("pr", F.row_number().over(pw))
-        .filter(F.col("pr") <= n_probe)
-        .select("query_id", "cluster_id", "cdist2")
-    )
     # J4/P6: candidates from probed clusters only; codes never shuffle
     cand = (
         codes_df.join(F.broadcast(probes), "cluster_id")
         .join(F.broadcast(cents), "cluster_id")
         .join(F.broadcast(q), "query_id")
     )
-    if scoring == "adc":
+    if scoring == "hamming":
+        dist_col = "hamming"
+        dist = hamming_expr(
+            F.col("codes"), pack_sign_vs_expr("__q", "__cvec", d)
+        )
+    else:
         cand = cand.join(
             F.broadcast(scales.select("cluster_id", "rho")), "cluster_id"
         )
+        dist_col = "adist2"
         raw = _resid_adc_expr("codes", "__q", "__cvec", d)
         rho = F.col("rho")
-        adist2 = (
-            F.col("cdist2")
+        dist = (
+            dist2_expr("__q", "__cvec")
             - F.lit(2.0) * rho * raw
             + F.lit(float(d)) * rho * rho
         )
-        scored = cand.select(
-            "query_id",
-            F.col("id").alias("neighbor_id"),
-            adist2.alias("adist2"),
-        )
-        w = Window.partitionBy("query_id").orderBy("adist2", "neighbor_id")
-        out_cols = ["query_id", "rank", "neighbor_id", "adist2"]
-    else:
-        scored = cand.select(
-            "query_id",
-            F.col("id").alias("neighbor_id"),
-            hamming_expr(
-                F.col("codes"), pack_sign_vs_expr("__q", "__cvec", d)
-            ).alias("hamming"),
-        )
-        w = Window.partitionBy("query_id").orderBy("hamming", "neighbor_id")
-        out_cols = ["query_id", "rank", "neighbor_id", "hamming"]
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(*out_cols)
+    scored = cand.select(
+        "query_id", F.col("id").alias("neighbor_id"), dist.alias(dist_col)
     )
+    return rank_winners(scored, k, dist_col)
 
 
 def _ivfbq_adc_score(codes_df, plan, cents, rhov, k):
@@ -528,40 +534,32 @@ def search_ivfbq_index(
     """Pruned search against the persisted index: one driver probe plan
     on the resident centroid matrix → literal shard/cluster predicates
     (Hive partition pruning + row-group stats on the cluster-sorted
-    layout) → the tier scorer over only the scanned clusters.
+    layout) → the tier scorer over exactly each query's own probe
+    list, so at ``nlist >= _HIER_PROBE_NLIST`` (where that list is the
+    approximate hierarchical one) pruning and scoring always agree.
 
     ``method`` defaults by ``scoring``: the arrow GEMM kernel for adc,
     the codegen path for hamming (the arrow path implements adc only).
-    The arrow kernel scores each query against exactly its own probe
-    list, so at ``nlist >= _HIER_PROBE_NLIST`` (where that list is the
-    approximate hierarchical one) pruning and scoring always agree.
-    The native path hands :func:`ivfbq_search` the centroid table
-    restricted to the scanned clusters, so it too never scores a
-    cluster that was not scanned."""
+    The codegen path joins the pruned scan against the plan's own
+    ``(query_id, cluster_id)`` pairs (:func:`search.probe_pairs`)."""
     if method is None:
         method = "arrow" if scoring == "adc" else "native"
+    _check_scoring(scoring, method)
 
     def score(pruned, plan, cents):
-        if method == "arrow" and scoring == "adc":
+        if method == "arrow":
             return _ivfbq_adc_score(pruned, plan, cents, index.rhos, k)
-        # the codegen twin (which also rejects bad scoring/method
-        # arguments) ranks probes itself: restrict its centroid table
-        # to the scanned clusters, or at hierarchical nlist it could
-        # pick a cluster the scan never read (silently missing
-        # candidates). With exact probes the restriction is a no-op.
-        return ivfbq_search(
+        return _ivfbq_native_score(
             pruned,
-            index.centroids_df(spark).where(
-                F.col("centroid_id").isin(plan.cluster_ids.tolist())
-            ),
+            index.centroids_df(spark),
             queries,
-            k=k,
-            n_probe=n_probe,
-            scales=index.scales_df(spark) if scoring == "adc" else None,
-            scoring=scoring,
-            method=method,
-            query_id_col=query_id_col,
-            query_col=query_col,
+            probe_pairs(spark, plan),
+            k,
+            index.scales_df(spark) if scoring == "adc" else None,
+            scoring,
+            index.dimension,
+            query_id_col,
+            query_col,
         )
 
     return search_persisted(

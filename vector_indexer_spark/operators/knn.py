@@ -10,8 +10,10 @@ src/ivf_index.rs:264-266 — we pin ties for reproducibility, SURVEY §2.6).
 Two physical strategies for the same logical query:
 
 - ``method="native"``: ``broadcast(queries) cross-join vectors`` scored
-  by a Catalyst fold, ranked by a window. Fully JVM-side / codegen;
-  bit-reproducible (the correctness oracle's path).
+  by a Catalyst fold, ranked by the one window rank every native twin
+  shares (``search.rank_winners``). Fully JVM-side / codegen;
+  bit-reproducible (the correctness oracle's path). The composable
+  IVF tiers rank their probes with it too.
 - ``method="arrow"`` (default): per-partition NumPy top-k against the
   broadcast query matrix inside ``mapInPandas`` — a map-side combine
   that reduces the ``n_vectors × n_queries`` candidates to
@@ -26,11 +28,15 @@ Two physical strategies for the same logical query:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from vector_indexer_spark.functions.distance import dist2_expr
-from vector_indexer_spark.operators.search import ALL_QUERIES, stream_queries
+from vector_indexer_spark.operators.search import (
+    ALL_QUERIES,
+    rank_winners,
+    stream_queries,
+)
 
 
 def knn_exact(
@@ -83,24 +89,10 @@ def _knn_native(vectors, queries, k, id_col, vec_col, query_id_col, query_col):
     )
     # The query batch is the small side at scale — broadcast it so the
     # 100 TB vector table never shuffles for the join itself.
-    # a wrong-length vector row yields NULL from zip_with, and ascending
-    # sort is NULLS FIRST — map corrupt rows to +inf (sorts last) and
-    # drop them after ranking. (A pre-window isNotNull filter gets
-    # pushed into the join condition by Catalyst, re-evaluating the
-    # whole O(d) fold once more per pair.)
     scored = v.crossJoin(F.broadcast(q)).select(
-        "query_id",
-        "neighbor_id",
-        F.coalesce(
-            dist2_expr("__q", "__v"), F.lit(float("inf"))
-        ).alias("dist2"),
+        "query_id", "neighbor_id", dist2_expr("__q", "__v").alias("dist2")
     )
-    w = Window.partitionBy("query_id").orderBy("dist2", "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter((F.col("rank") <= k) & (F.col("dist2") != float("inf")))
-        .select("query_id", "rank", "neighbor_id", "dist2")
-    )
+    return rank_winners(scored, k, "dist2")
 
 
 def _knn_arrow(vectors, queries, k, id_col, vec_col, query_id_col, query_col):

@@ -50,9 +50,10 @@ from vector_indexer_spark.operators.kmeans import KMEANS_INIT_SAMPLE_CAP
 from vector_indexer_spark.operators.pca import pca_train
 from vector_indexer_spark.operators.pq import (
     PQModel,
+    _adc_blocks,
     _ivfpq_score,
+    _luts,
     pq_encode,
-    pq_search,
     pq_train,
 )
 from vector_indexer_spark.operators.search import (
@@ -60,6 +61,7 @@ from vector_indexer_spark.operators.search import (
     empty_result,
     probe_plan,
     prune,
+    stream_queries,
     winners_frame,
 )
 
@@ -263,38 +265,18 @@ def opq_search(
     query_id_col: str = "query_id",
     query_col: str = "query",
 ) -> DataFrame:
-    """ADC top-k under the rotation: queries rotate driver-side
-    (bounded batch), then the standard PQ LUT search runs over the
-    codes-only scan. Distances are rotated-space ≡ original-space.
+    """ADC top-k under the rotation: the one query collect rotates the
+    batch driver-side (bounded batch) into the per-query LUTs, then the
+    standard PQ ADC stream runs over the codes-only scan. Distances are
+    rotated-space ≡ original-space.
     """
-    spark = codes_df.sparkSession
-    qrows = queries.select(query_id_col, query_col).collect()
-    if not qrows:
-        return spark.createDataFrame(
-            [], "query_id long, rank int, neighbor_id long, adc_dist2 double"
-        )
-    qmat = stack_arrays([r[1] for r in qrows])
-    if qmat.shape[1] != model.dimension:
-        raise ValueError(
-            f"query dimension {qmat.shape[1]} != OPQ dim {model.dimension}"
-        )
-    rq = model.rotate(qmat)
-    rq_df = spark.createDataFrame(
-        [
-            (int(r[0]), [float(x) for x in rq[i]])
-            for i, r in enumerate(qrows)
-        ],
-        f"{query_id_col} long, {query_col} array<double>",
-    )
-    return pq_search(
-        codes_df,
-        rq_df,
-        model.pq,
-        k,
-        id_col=id_col,
-        codes_col=codes_col,
-        query_id_col=query_id_col,
-        query_col=query_col,
+    if k <= 0:
+        raise ValueError("k must be positive")
+    return stream_queries(
+        codes_df.select(id_col, codes_col), queries, model.dimension, k,
+        "adc_dist2", _adc_blocks(k, id_col, codes_col),
+        lambda qmat: _luts(model.rotate(qmat), model.pq.codebooks),
+        query_id_col, query_col,
     )
 
 

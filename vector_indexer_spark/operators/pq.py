@@ -48,7 +48,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vector_indexer_spark.ioutil import atomic_write_json
@@ -74,6 +74,7 @@ from vector_indexer_spark.operators.kmeans import (
 from vector_indexer_spark.operators.search import (
     ALL_QUERIES,
     probed_clusters,
+    rank_winners,
     search_persisted,
     stream_queries,
     stream_topk,
@@ -334,12 +335,7 @@ def refine_topk(
             dist2_expr("__q", "__v").alias("dist2"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy("dist2", "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "dist2")
-    )
+    return rank_winners(scored, k, "dist2")
 
 
 def pq_search_refined(
@@ -411,15 +407,23 @@ def pq_search(
     if k <= 0:
         raise ValueError("k must be positive")
 
-    def blocks(pdf, lut_):
-        d2 = _adc(lut_, _int_codes(pdf[codes_col]))
-        yield ALL_QUERIES, *topk_per_row(d2, k, ids=pdf[id_col].to_numpy())
-
     return stream_queries(
         codes_df.select(id_col, codes_col), queries, model.dimension, k,
-        "adc_dist2", blocks, lambda qmat: _luts(qmat, model.codebooks),
-        query_id_col, query_col,
+        "adc_dist2", _adc_blocks(k, id_col, codes_col),
+        lambda qmat: _luts(qmat, model.codebooks), query_id_col, query_col,
     )
+
+
+def _adc_blocks(k: int, id_col: str = "id", codes_col: str = "codes"):
+    """The flat ADC scorer's block function for ``search.stream_topk``:
+    each Arrow batch's codes gathered against the broadcast per-query
+    LUTs (its state), every query scored, cut to a per-query top-k."""
+
+    def blocks(pdf, lut):
+        d2 = _adc(lut, _int_codes(pdf[codes_col]))
+        yield ALL_QUERIES, *topk_per_row(d2, k, ids=pdf[id_col].to_numpy())
+
+    return blocks
 
 
 # ---------------------------------------------------------------------------

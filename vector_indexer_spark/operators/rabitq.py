@@ -48,7 +48,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from vector_indexer_spark.functions.kernels import topk_per_row
@@ -66,9 +66,12 @@ from vector_indexer_spark.operators.index_build import (
     write_meta,
     write_sharded,
 )
+from vector_indexer_spark.operators.knn import knn_exact
 from vector_indexer_spark.operators.search import (
     ALL_QUERIES,
+    probe_pairs,
     probed_clusters,
+    rank_winners,
     search_frames,
     search_persisted,
     stream_queries,
@@ -422,12 +425,7 @@ def rabitq_search(
                 "codes", "norm", "dot_o", "__uq", "__qn", "__su", model
             ).alias("est_dist2"),
         )
-        w = Window.partitionBy("query_id").orderBy("est_dist2", "neighbor_id")
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "neighbor_id", "est_dist2")
-        )
+        return rank_winners(scored, k, "est_dist2")
     if method == "arrow":
         return _rabitq_search_arrow(
             codes_df, model, queries, k, query_id_col, query_col
@@ -669,14 +667,15 @@ def ivf_rabitq_search(
     ties by id. Like every 1-bit tier the deployment shape is
     shortlist → :func:`ivf_rabitq_search_refined`.
 
-    ``native``: whole-stage-codegen folds, the oracle path. ``arrow``:
+    ``native``: whole-stage-codegen folds, the oracle path — probes
+    ranked by exact kNN's native plan over the centroid frame, the
+    estimator ranked by ``search.rank_winners``. ``arrow``:
     driver probe ranking on the nlist-sized centroid matrix, literal
     IN pruning of the codes scan, then a per-cluster GEMM of unpacked
     bits against that cluster's probing-query block, one running
     top-k per task."""
     if k <= 0 or n_probe <= 0:
         raise ValueError("k and n_probe must be positive")  # P3
-    d = len(rotation)
     if method == "arrow":
         return search_frames(
             codes_df, centroids, queries, n_probe, "est_dist2",
@@ -687,27 +686,33 @@ def ivf_rabitq_search(
         )
     if method != "native":
         raise ValueError(f"unknown method {method!r}")
-    from vector_indexer_spark.functions.distance import (  # noqa: PLC0415
-        dist2_expr,
+    probes = knn_exact(
+        centroids, queries, n_probe, id_col=centroid_id_col,
+        vec_col=centroid_vec_col, query_id_col=query_id_col,
+        query_col=query_col, method="native",
+    ).select("query_id", F.col("neighbor_id").alias("cluster_id"))
+    return _ivf_rabitq_native_score(
+        codes_df, centroids, queries, probes, rotation, k, query_id_col,
+        query_col, centroid_id_col, centroid_vec_col,
     )
 
+
+def _ivf_rabitq_native_score(
+    codes_df, centroids, queries, probes, rotation, k, query_id_col,
+    query_col, centroid_id_col="centroid_id", centroid_vec_col="cvec",
+):
+    """The codegen estimator over the candidates of ``probes`` — each
+    query's ``(query_id, cluster_id)`` probe pairs: per-pair rotated
+    query factors on the bounded (nq × n_probe)-row probe frame, codes
+    joined against it (never shuffled), ranked by
+    :func:`search.rank_winners`."""
+    d = len(rotation)
     q = queries.select(
         F.col(query_id_col).alias("query_id"), F.col(query_col).alias("__q")
     )
     cents = centroids.select(
         F.col(centroid_id_col).alias("cluster_id"),
         F.col(centroid_vec_col).alias("__cvec"),
-    )
-    pscore = q.crossJoin(F.broadcast(cents)).select(
-        "query_id",
-        "cluster_id",
-        dist2_expr("__q", "__cvec").alias("cdist2"),
-    )
-    pw = Window.partitionBy("query_id").orderBy("cdist2", "cluster_id")
-    probes = (
-        pscore.withColumn("pr", F.row_number().over(pw))
-        .filter(F.col("pr") <= n_probe)
-        .select("query_id", "cluster_id")
     )
     # per-pair query factors on the (n_queries × n_probe)-row frame
     rq = rotate_vs_expr("__q", "__cvec", rotation)
@@ -746,12 +751,7 @@ def ivf_rabitq_search(
             "codes", "norm", "dot_o", "__uq", "__qn", "__su", d
         ).alias("est_dist2"),
     )
-    w = Window.partitionBy("query_id").orderBy("est_dist2", "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "est_dist2")
-    )
+    return rank_winners(scored, k, "est_dist2")
 
 
 def _ivf_rabitq_score(codes_df, plan, cents, rotation, k):
@@ -956,28 +956,27 @@ def search_ivf_rabitq_index(
     """Pruned search against the persisted index: one driver probe plan
     on the resident centroid matrix → literal shard/cluster predicates
     (Hive partition pruning + row-group stats on the cluster-sorted
-    layout) → the estimator over only the scanned clusters. The arrow
-    kernel scores each query against exactly its own probe list; the
-    native path hands :func:`ivf_rabitq_search` the centroid table
-    restricted to the scanned clusters — so at ``nlist >=
-    _HIER_PROBE_NLIST`` (approximate hierarchical probes) pruning and
-    scoring always agree: no cluster is scored that was not
-    scanned."""
+    layout) → the estimator over exactly each query's own probe list:
+    the arrow kernel through the plan's per-cluster query index, the
+    native path by joining the pruned scan against the plan's own
+    ``(query_id, cluster_id)`` pairs (:func:`search.probe_pairs`). So
+    at ``nlist >= _HIER_PROBE_NLIST`` (approximate hierarchical probes)
+    pruning and scoring always agree."""
+    if method not in ("arrow", "native"):
+        raise ValueError(f"unknown method {method!r}")
+
     def score(pruned, plan, cents):
         if method == "arrow":
             return _ivf_rabitq_score(pruned, plan, cents, index.rotation, k)
-        return ivf_rabitq_search(
+        return _ivf_rabitq_native_score(
             pruned,
-            index.centroids_df(spark).where(
-                F.col("centroid_id").isin(plan.cluster_ids.tolist())
-            ),
+            index.centroids_df(spark),
             queries,
+            probe_pairs(spark, plan),
             index.rotation,
-            k=k,
-            n_probe=n_probe,
-            query_id_col=query_id_col,
-            query_col=query_col,
-            method=method,
+            k,
+            query_id_col,
+            query_col,
         )
 
     return search_persisted(

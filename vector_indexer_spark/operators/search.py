@@ -35,7 +35,12 @@ Spark-first re-expression, one job for a whole *batch* of queries:
 
 ``method="native"`` runs the same logical plan as pure DataFrame ops
 (broadcast joins + fold expression + window) — bit-reproducible and
-SQL-oracle-checkable; the arrow path is the throughput path.
+SQL-oracle-checkable; the arrow path is the throughput path. Every
+native (codegen) twin of every tier ends in the one window rank,
+:func:`rank_winners`; the composable IVF-SQ/BQ/RaBitQ twins rank
+their probes with ``knn_exact(method="native")`` over the centroid
+frame, and the persisted native BQ/RaBitQ searches score the driver
+plan's own probe pairs (:func:`probe_pairs`) instead.
 
 The arrow path's driver probe plan (:func:`probe_plan`) and pruning
 (:func:`prune`) are the one search skeleton of every persisted tier:
@@ -333,6 +338,23 @@ def probe_plan(
     )
 
 
+def probe_pairs(spark: SparkSession, plan: ProbePlan) -> DataFrame:
+    """The plan's own ``(query_id, cluster_id)`` probe pairs as a small
+    DataFrame (nq × n_probe rows): what a relational scorer joins the
+    pruned scan against, so it scores exactly the clusters the scan
+    read — flat or hierarchical probes alike."""
+    n_probe = plan.probe_ids.shape[1]
+    return spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "query_id": np.repeat(plan.qids, n_probe),
+                "cluster_id": plan.probe_ids.reshape(-1).astype(np.int64),
+            }
+        ),
+        "query_id long, cluster_id long",
+    )
+
+
 def _in_list(col: str, ids) -> str:
     """``col IN (…)`` as SQL text; an empty list is ``false``, the
     always-false result of an empty ``isin``."""
@@ -356,13 +378,22 @@ def prune(table: DataFrame, shard_ids, cluster_ids) -> DataFrame:
     return table.where(F.expr(cond))
 
 
-def rank_winners(local: DataFrame, k: int, dist_col: str) -> DataFrame:
-    """W2 — global ``(dist, id)`` window rank over the map-side local
-    top-k winners."""
-    w = Window.partitionBy("query_id").orderBy(dist_col, "neighbor_id")
+def rank_winners(scored: DataFrame, k: int, dist_col: str) -> DataFrame:
+    """W2 — the global ``(dist, id)`` window rank of
+    ``(query_id, neighbor_id, <dist_col>)`` rows: the top-k of every
+    native (codegen) scorer, and of the arrow winners past the
+    driver-merge bound. A NULL distance — a fold over a corrupt
+    (wrong-length) row — ranks after every real one, and it and +inf
+    are dropped after the rank. (A pre-window filter would be pushed
+    into the join condition by Catalyst, re-evaluating the whole O(d)
+    fold once more per pair.)"""
+    dist = F.col(dist_col)
+    w = Window.partitionBy("query_id").orderBy(
+        dist.asc_nulls_last(), "neighbor_id"
+    )
     return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter((F.col("rank") <= k) & (dist < float("inf")))
         .select("query_id", "rank", "neighbor_id", dist_col)
     )
 
@@ -729,13 +760,17 @@ def _pruned_scan(
     )
 
 
-def _search_native(
-    spark, index, queries, k, n_probe, query_id_col, query_col, vectors,
-    filter_expr=None,
+def _native_candidates(
+    spark, index, queries, n_probe, query_id_col, query_col, vectors,
+    filter_expr,
 ):
-    """Fully-relational pipeline (distributed probe ranking): the
-    bit-reproducible / oracle-checkable path, and the scale path for
-    query batches too large to collect."""
+    """The relational plan's probe-and-prune stage, shared by the
+    native search and :func:`range_search`: P2 validation, distributed
+    probe ranking (against the centroid table on a lazy handle or past
+    ``_CENTROID_BROADCAST_LIMIT``, hierarchical at
+    ``nlist >= _HIER_PROBE_NLIST``), the pruned scan of the probed
+    clusters, and the fold-scored ``(query_id, neighbor_id, dist2)``
+    pair of each candidate row × each query probing its cluster."""
     # P2 — query dimension validation
     bad = queries.filter(F.size(query_col) != index.dimension).count()
     if bad:
@@ -775,7 +810,34 @@ def _search_native(
         sorted({r.cluster_id for r in probe_keys}),
         filter_expr,
     )
-    return _score_native(pruned, probes, queries, k, query_id_col, query_col)
+    q = queries.select(
+        F.col(query_id_col).alias("query_id"), F.col(query_col).alias("__q")
+    )
+    probe_q = probes.select("query_id", "cluster_id").join(q, "query_id")
+    # each candidate row × each query probing its cluster (both small
+    # sides broadcast; the pruned scan never shuffles for the join)
+    return pruned.join(F.broadcast(probe_q), "cluster_id").select(
+        "query_id",
+        F.col("id").alias("neighbor_id"),
+        dist2_expr("__q", "values").alias("dist2"),
+    )
+
+
+def _search_native(
+    spark, index, queries, k, n_probe, query_id_col, query_col, vectors,
+    filter_expr=None,
+):
+    """Fully-relational pipeline (distributed probe ranking): the
+    bit-reproducible / oracle-checkable path, and the scale path for
+    query batches too large to collect."""
+    return rank_winners(
+        _native_candidates(
+            spark, index, queries, n_probe, query_id_col, query_col,
+            vectors, filter_expr,
+        ),
+        k,
+        "dist2",
+    )
 
 
 def _search_arrow(
@@ -902,29 +964,6 @@ def _search_arrow_bulk(pruned, plan, k):
     )
 
 
-def _score_native(vectors, probes, queries, k, query_id_col, query_col):
-    """Pure-DataFrame scoring: probes ⋈ queries (both small, broadcast)
-    ⋈ pruned vectors on cluster_id, fold-expression dist2, window top-k."""
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(query_col).alias("__q")
-    )
-    probe_q = probes.select("query_id", "cluster_id").join(q, "query_id")
-    cand = vectors.join(
-        F.broadcast(probe_q), "cluster_id"
-    )  # each candidate row × each query probing its cluster
-    scored = cand.select(
-        "query_id",
-        F.col("id").alias("neighbor_id"),
-        dist2_expr("__q", "values").alias("dist2"),
-    )
-    w = Window.partitionBy("query_id").orderBy("dist2", "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "dist2")
-    )
-
-
 def _score_arrow_scan(vectors, plan, k):
     """Arrow scoring with a probe mask: one GEMM per Arrow batch for
     all queries × all batch rows, non-probed (query, row) slots masked
@@ -981,10 +1020,12 @@ def range_search(
 ) -> DataFrame:
     """All neighbors within squared distance ``radius2`` (extension —
     the near-duplicate query shape: "everything closer than τ", not
-    top-k). Same pruned-scan pipeline as :func:`search_index`, with a
-    distance filter instead of a rank cut. Results carry no rank; at
-    scale output size is data-dependent, so no driver merge is
-    attempted.
+    top-k). The probe-and-prune stage of :func:`search_index`'s native
+    path — P2 validation, relational probes on a lazy-centroid handle,
+    hierarchical probes at large nlist, the missing-shard warning —
+    with a distance filter instead of a rank cut. Results carry no
+    rank; at scale output size is data-dependent, so no driver merge
+    is attempted.
 
     Approximate like any IVF query: only probed clusters are scanned
     (``n_probe >= nlist`` makes it exact). ``filter_expr`` pre-filters
@@ -997,39 +1038,12 @@ def range_search(
         raise ValueError("n_probe must be positive")
     if filter_expr is not None and isinstance(filter_expr, str):
         filter_expr = F.expr(filter_expr)
-
-    # persist: probes feeds the key collect AND the scoring join (same
-    # double-consumption pattern as _search_native)
-    probes = rank_probes(
-        queries,
-        index.centroids,
-        index.centroid_shards,
-        min(n_probe, MAX_N_PROBE),
-        query_id_col=query_id_col,
-        query_col=query_col,
-    ).persist()
-    probe_keys = probes.select("shard_id", "cluster_id").distinct().collect()
-    pruned = _pruned_scan(
-        spark,
-        index,
-        vectors,
-        sorted({r.shard_id for r in probe_keys}),
-        sorted({r.cluster_id for r in probe_keys}),
-        filter_expr,
+    warn_missing_shards(index)
+    cand = _native_candidates(
+        spark, index, queries, min(n_probe, MAX_N_PROBE), query_id_col,
+        query_col, vectors, filter_expr,
     )
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(query_col).alias("__q")
-    )
-    probe_q = probes.select("query_id", "cluster_id").join(q, "query_id")
-    cand = pruned.join(F.broadcast(probe_q), "cluster_id")
-    return (
-        cand.select(
-            "query_id",
-            F.col("id").alias("neighbor_id"),
-            dist2_expr("__q", "values").alias("dist2"),
-        )
-        .filter(F.col("dist2") <= F.lit(float(radius2)))
-    )
+    return cand.filter(F.col("dist2") <= F.lit(float(radius2)))
 
 
 def calculate_recall(

@@ -41,7 +41,7 @@ import os
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from vector_indexer_spark.functions.kernels import (
@@ -63,9 +63,11 @@ from vector_indexer_spark.operators.index_build import (
     write_meta,
     write_sharded,
 )
+from vector_indexer_spark.operators.knn import knn_exact
 from vector_indexer_spark.operators.search import (
     ALL_QUERIES,
     probed_clusters,
+    rank_winners,
     search_frames,
     search_persisted,
     stream_queries,
@@ -229,8 +231,9 @@ def sq_search(
       reach the final merge, the plan that survives a 100 TB codes
       scan.
     - ``"native"``: reconstruction + fold inside whole-stage codegen,
-      window over the full cross product — bit-reproducible; the
-      correctness oracle's path (a pytest bridges the two).
+      the one native window rank (``search.rank_winners``) over the
+      full cross product — bit-reproducible; the correctness oracle's
+      path (a pytest bridges the two).
 
     Either way only the ``codes`` column is read (column pruning); the
     raw vector table is never touched.
@@ -261,22 +264,10 @@ def _sq_search_native(codes_df, model, queries, k, query_id_col, query_col):
         F.col("id").alias("neighbor_id"),
         reconstruct_expr("codes", model).alias("__r"),
     )
-    # wrong-length codes rows fold to NULL, which would sort FIRST in
-    # the ascending rank — map them to +inf and drop after ranking
-    # (the knn_exact native guard)
-    diffs = recon.crossJoin(F.broadcast(q)).select(
-        "query_id",
-        "neighbor_id",
-        F.coalesce(
-            dist2_expr("__q", "__r"), F.lit(float("inf"))
-        ).alias("adist2"),
+    scored = recon.crossJoin(F.broadcast(q)).select(
+        "query_id", "neighbor_id", dist2_expr("__q", "__r").alias("adist2")
     )
-    w = Window.partitionBy("query_id").orderBy("adist2", "neighbor_id")
-    return (
-        diffs.withColumn("rank", F.row_number().over(w))
-        .filter((F.col("rank") <= k) & (F.col("adist2") != float("inf")))
-        .select("query_id", "rank", "neighbor_id", "adist2")
-    )
+    return rank_winners(scored, k, "adist2")
 
 
 def _sq_decode(codes, dmin, scale, centroid=None) -> np.ndarray:
@@ -433,9 +424,11 @@ def ivfsq_search(
       native fold over ~10⁶ (query, candidate) pairs × d element ops
       is an order of magnitude slower (measured 24 s vs 2 s at
       n=200k, nq=256).
-    - ``"native"``: probe ranking, reconstruction ``c + (dmin +
-      code·scale)`` and the fold all in whole-stage codegen —
-      bit-reproducible; the oracle's path (``ivfsq_search_fixed``).
+    - ``"native"``: probe ranking (exact kNN's native plan over the
+      centroid frame), reconstruction ``c + (dmin + code·scale)`` and
+      the fold all in whole-stage codegen, ranked by
+      ``search.rank_winners`` — bit-reproducible; the oracle's path
+      (``ivfsq_search_fixed``).
     """
     if k <= 0 or n_probe <= 0:
         raise ValueError("k and n_probe must be positive")  # P3
@@ -453,24 +446,18 @@ def ivfsq_search(
         dist2_expr,
     )
 
+    # J3/W1: top-n_probe clusters per query
+    probes = knn_exact(
+        centroids, queries, n_probe, id_col=centroid_id_col,
+        vec_col=centroid_vec_col, query_id_col=query_id_col,
+        query_col=query_col, method="native",
+    ).select("query_id", F.col("neighbor_id").alias("cluster_id"))
     q = queries.select(
         F.col(query_id_col).alias("query_id"), F.col(query_col).alias("__q")
     )
     cents = centroids.select(
         F.col(centroid_id_col).alias("cluster_id"),
         F.col(centroid_vec_col).alias("__cvec"),
-    )
-    # J3/W1: top-n_probe clusters per query
-    pscore = q.crossJoin(F.broadcast(cents)).select(
-        "query_id",
-        "cluster_id",
-        dist2_expr("__q", "__cvec").alias("cdist2"),
-    )
-    pw = Window.partitionBy("query_id").orderBy("cdist2", "cluster_id")
-    probes = (
-        pscore.withColumn("pr", F.row_number().over(pw))
-        .filter(F.col("pr") <= n_probe)
-        .select("query_id", "cluster_id")
     )
     # J4/P6: candidates from probed clusters only
     cand = codes_df.join(F.broadcast(probes), "cluster_id").join(
@@ -481,21 +468,12 @@ def ivfsq_search(
         reconstruct_expr("codes", model),
         lambda c, r: c.cast("double") + r,
     )
-    # NULL-fold guard as in _sq_search_native: corrupt codes rows sort
-    # last and are dropped after ranking
     scored = cand.join(F.broadcast(q), "query_id").select(
         "query_id",
         F.col("id").alias("neighbor_id"),
-        F.coalesce(
-            dist2_expr("__q", recon), F.lit(float("inf"))
-        ).alias("adist2"),
+        dist2_expr("__q", recon).alias("adist2"),
     )
-    w = Window.partitionBy("query_id").orderBy("adist2", "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter((F.col("rank") <= k) & (F.col("adist2") != float("inf")))
-        .select("query_id", "rank", "neighbor_id", "adist2")
-    )
+    return rank_winners(scored, k, "adist2")
 
 
 # ---------------------------------------------------------------------------
