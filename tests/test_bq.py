@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from vector_indexer_spark.operators.bq import (
     BQModel,
+    bq_adc_search,
     bq_encode,
     bq_search,
     bq_search_refined,
@@ -120,6 +121,58 @@ class TestSearch:
         assert [(r["rank"], r.neighbor_id, r.hamming) for r in rows] == [
             (1, 2, 2),
             (2, 1, 4),
+        ]
+
+    @pytest.mark.parametrize("tier", ["bq_adc", "ivfbq_adc", "rabitq"])
+    def test_native_element_at_folds_drop_corrupt_code_rows(self, spark, tier):
+        """The ``element_at`` folds drop a codes row whose length is not
+        the model's word count (an empty row and a two-word row at
+        d = 4) as the ``zip_with`` folds do, instead of raising
+        ``INVALID_ARRAY_INDEX_IN_ELEMENT_AT`` or scoring the first word
+        of a too-long row."""
+        from vector_indexer_spark.operators.ivfbq import ivfbq_search
+        from vector_indexer_spark.operators.rabitq import (
+            RaBitQModel,
+            rabitq_search,
+        )
+
+        rows = [(1, [5 << 28]), (2, [3 << 28]), (3, []), (4, [3 << 28, 0])]
+        q = spark.createDataFrame(
+            [(0, [1.0, -1.0, 1.0, -1.0])], "query_id long, query array<double>"
+        )
+        if tier == "bq_adc":
+            codes = spark.createDataFrame(rows, "id long, codes array<bigint>")
+            got = bq_adc_search(
+                codes, BQModel(thresholds=(0.0,) * 4), q, k=4, method="native"
+            )
+        elif tier == "ivfbq_adc":
+            codes = spark.createDataFrame(
+                [(i, 0, c) for i, c in rows],
+                "id long, cluster_id long, codes array<bigint>",
+            )
+            cents = spark.createDataFrame(
+                [(0, [0.0] * 4)], "centroid_id long, cvec array<double>"
+            )
+            scales = spark.createDataFrame(
+                [(0, 1.0)], "cluster_id long, rho double"
+            )
+            got = ivfbq_search(
+                codes, cents, q, k=4, n_probe=1, scales=scales,
+                method="native",
+            )
+        else:
+            codes = spark.createDataFrame(
+                [(i, c, 1.0, 1.0) for i, c in rows],
+                "id long, codes array<bigint>, norm double, dot_o double",
+            )
+            eye = tuple(
+                tuple(float(i == j) for j in range(4)) for i in range(4)
+            )
+            model = RaBitQModel(centroid=(0.0,) * 4, rotation=eye)
+            got = rabitq_search(codes, model, q, k=4, method="native")
+        assert [(r["rank"], r.neighbor_id) for r in got.collect()] == [
+            (1, 2),
+            (2, 1),
         ]
 
     def test_recall_against_exact(self, spark):

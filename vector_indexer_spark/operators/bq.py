@@ -112,6 +112,31 @@ def pack_bits_expr(vec: Column | str, model: BQModel) -> Column:
     return F.array(*[word(w) for w in range(model.n_words)])
 
 
+def codes_fit(codes: Column, d: int) -> Column:
+    """True where a packed-codes row holds exactly the word count of
+    ``d`` bits. The ``element_at`` folds guard on it, so a too-short or
+    too-long row scores NULL (which ``rank_winners`` drops, as it drops
+    a ``zip_with`` fold's NULL) instead of raising
+    ``INVALID_ARRAY_INDEX_IN_ELEMENT_AT`` under ANSI mode or scoring a
+    truncated row."""
+    return F.size(codes) == F.lit((d + WORD_BITS - 1) // WORD_BITS)
+
+
+def bit_fold(codes: Column, d: int, term) -> Column:
+    """``((0 + term(1, bit_1)) + term(2, bit_2)) + …``: one flat
+    left-fold over the ``d`` packed code bits in dimension order
+    (literal shifts + ``& 1``; packed words are non-negative, so
+    logical and arithmetic shifts agree across engines)."""
+    s = F.lit(0.0)
+    for j in range(1, d + 1):
+        bit = F.shiftrightunsigned(
+            F.element_at(codes, (j - 1) // WORD_BITS + 1),
+            WORD_BITS - ((j - 1) % WORD_BITS + 1),
+        ).bitwiseAND(F.lit(1))
+        s = s + term(j, bit)
+    return s
+
+
 def hamming_expr(a: Column | str, b: Column | str) -> Column:
     """Hamming distance between two packed-code arrays: Σ popcount(xor)
     per word — JVM ``bit_count`` intrinsics, no UDF."""
@@ -288,17 +313,13 @@ def adc_score_expr(codes: Column | str, qvec: Column | str, model: BQModel) -> C
     """
     codes = F.col(codes) if isinstance(codes, str) else codes
     qvec = F.col(qvec) if isinstance(qvec, str) else qvec
-    s = F.lit(0.0)
-    for j in range(1, model.d + 1):
-        wi = (j - 1) // WORD_BITS + 1
-        shift = WORD_BITS - ((j - 1) % WORD_BITS + 1)
-        bit = F.shiftrightunsigned(
-            F.element_at(codes, wi), shift
-        ).bitwiseAND(F.lit(1))
-        s = s + F.element_at(qvec, j).cast("double") * (
-            (bit * 2 - 1).cast("double")
-        )
-    return s
+    s = bit_fold(
+        codes,
+        model.d,
+        lambda j, bit: F.element_at(qvec, j).cast("double")
+        * (bit * 2 - 1).cast("double"),
+    )
+    return F.when(codes_fit(codes, model.d), s)
 
 
 def bq_adc_search(

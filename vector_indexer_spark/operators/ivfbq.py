@@ -50,6 +50,8 @@ from vector_indexer_spark.functions.kernels import topk_per_row
 from vector_indexer_spark.operators.bq import (
     WORD_BITS,
     _unpack_bits,
+    bit_fold,
+    codes_fit,
     hamming_expr,
 )
 from vector_indexer_spark.operators.index_build import (
@@ -123,18 +125,16 @@ def _resid_adc_expr(
     codes = F.col(codes) if isinstance(codes, str) else codes
     qvec = F.col(qvec) if isinstance(qvec, str) else qvec
     cvec = F.col(cvec) if isinstance(cvec, str) else cvec
-    s = F.lit(0.0)
-    for j in range(1, d + 1):
-        wi = (j - 1) // WORD_BITS + 1
-        shift = WORD_BITS - ((j - 1) % WORD_BITS + 1)
-        bit = F.shiftrightunsigned(
-            F.element_at(codes, wi), shift
-        ).bitwiseAND(F.lit(1))
-        s = s + (
+    s = bit_fold(
+        codes,
+        d,
+        lambda j, bit: (
             F.element_at(qvec, j).cast("double")
             - F.element_at(cvec, j).cast("double")
-        ) * ((bit * 2 - 1).cast("double"))
-    return s
+        )
+        * (bit * 2 - 1).cast("double"),
+    )
+    return F.when(codes_fit(codes, d), s)
 
 
 def ivfbq_encode(

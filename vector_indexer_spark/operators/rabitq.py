@@ -52,7 +52,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from vector_indexer_spark.functions.kernels import topk_per_row
-from vector_indexer_spark.operators.bq import WORD_BITS, _unpack_bits
+from vector_indexer_spark.operators.bq import (
+    WORD_BITS,
+    _unpack_bits,
+    bit_fold,
+    codes_fit,
+)
 from vector_indexer_spark.operators.index_build import (
     IvfHandle,
     attach_shards,
@@ -374,19 +379,15 @@ def _score_expr(codes, norm, dot_o, uq, q_norm, sum_u, d: int) -> Column:
     uq = F.col(uq) if isinstance(uq, str) else uq
     q_norm = F.col(q_norm) if isinstance(q_norm, str) else q_norm
     sum_u = F.col(sum_u) if isinstance(sum_u, str) else sum_u
-    s1 = F.lit(0.0)
-    for j in range(1, d + 1):
-        wi = (j - 1) // WORD_BITS + 1
-        shift = WORD_BITS - ((j - 1) % WORD_BITS + 1)
-        bit = F.shiftrightunsigned(
-            F.element_at(codes, wi), shift
-        ).bitwiseAND(F.lit(1))
-        s1 = s1 + F.element_at(uq, j) * bit.cast("double")
+    s1 = bit_fold(
+        codes, d, lambda j, bit: F.element_at(uq, j) * bit.cast("double")
+    )
     scale = float(1.0 / math.sqrt(d))
     est_obar_u = (s1 * F.lit(2.0) - sum_u) * F.lit(scale)
     est_ip = F.when(dot_o > 0.0, est_obar_u / dot_o).otherwise(F.lit(0.0))
-    return (
-        norm * norm + q_norm * q_norm - F.lit(2.0) * norm * q_norm * est_ip
+    return F.when(
+        codes_fit(codes, d),
+        norm * norm + q_norm * q_norm - F.lit(2.0) * norm * q_norm * est_ip,
     )
 
 
