@@ -532,7 +532,8 @@ def _maxsim(ctx: Ctx, prefix: str, n_tok: int, qmod: int):
 
 @section("maxsim", rounds=6, keys=("maxsim400k_brute_16q", "maxsim400k_ann_16q"))
 def maxsim(ctx: Ctx) -> None:
-    nq, idx, brute, ann = _maxsim(ctx, "maxsim", ctx.n(400_000), 6250)
+    n_tok = ctx.n(400_000)
+    nq, idx, brute, ann = _maxsim(ctx, "maxsim", n_tok, n_tok // 64)
     ctx.extras.update(maxsim_nq=nq, maxsim_nlist=idx.nlist)
     if ctx.heavy:
         mb, ma = cached(brute()), cached(ann())

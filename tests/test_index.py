@@ -5,11 +5,14 @@ from __future__ import annotations
 
 import json
 import os
+from functools import partial
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from tests.test_tier_skeleton import _job_count
 from vector_indexer_spark.operators.index_build import (
     build_index,
     check_build_input,
@@ -67,6 +70,121 @@ def test_conservation(spark, index):
     assert v.select("id").distinct().count() == 500
     # dense renumbering (P5): ids 0..nlist-1, all non-empty
     assert {r["cluster_id"] for r in per_cluster} == set(range(index.nlist))
+
+
+def _blob_frame(spark, n, d, n_comp, seed, dup_of=None):
+    """``(id, values)`` rows drawn around ``n_comp`` well-separated
+    centres; ``dup_of`` keeps only that many distinct vectors (exact
+    duplicates, so k-means++ duplicates centroids and some clusters
+    end empty)."""
+    rng = np.random.default_rng(seed)
+    centers = rng.normal(size=(n_comp, d)) * 20.0
+    mat = centers[rng.integers(0, n_comp, n)] + rng.normal(size=(n, d))
+    if dup_of is not None:
+        mat = mat[np.arange(n) % dup_of]
+    return spark.createDataFrame(
+        pd.DataFrame({"id": np.arange(n), "values": list(mat.astype(np.float32))}),
+        "id long, values array<float>",
+    )
+
+
+def _force_distributed(monkeypatch, n):
+    """Put the build's k-means in its distributed regime: a sample cap
+    one row below n."""
+    import vector_indexer_spark.operators.index_build as IB
+
+    monkeypatch.setattr(IB, "kmeans_fit", partial(IB.kmeans_fit, sample_cap=n - 1))
+
+
+BUILD_CASES = {
+    # n, nlist, frame kwargs
+    "blobs": (600, 6, dict(d=8, n_comp=6, seed=21)),
+    "hierarchical": (3000, 128, dict(d=8, n_comp=128, seed=22)),  # J2 at k > 100
+    "duplicates": (40, 8, dict(d=4, n_comp=5, seed=23, dup_of=5)),
+}
+
+
+@pytest.mark.parametrize("regime", ["driver", "distributed"])
+@pytest.mark.parametrize("case", sorted(BUILD_CASES))
+def test_build_regimes_write_only_live_clusters(
+    spark, tmp_path, monkeypatch, case, regime
+):
+    """Both build regimes write every row once, each in a live cluster
+    with its cluster's shard, and leave no cluster empty — also when
+    training leaves raw clusters empty (``duplicates``: nlist 8 over 5
+    distinct vectors) and under the J2 shortlist (``hierarchical``)."""
+    n, nlist, kw = BUILD_CASES[case]
+    df = _blob_frame(spark, n, **kw)
+    if regime == "distributed":
+        _force_distributed(monkeypatch, n)
+    index = build_index(df, str(tmp_path / "ix"), nlist=nlist, seed=7)
+    rows = index.vectors(spark).select("id", "cluster_id", "shard_id").collect()
+    assert index.n_vectors == n == json.load(open(index.meta_path))["n_vectors"]
+    assert sorted(r.id for r in rows) == list(range(n))
+    assert {r.cluster_id for r in rows} == set(range(index.nlist))
+    assert index.nlist <= (5 if case == "duplicates" else nlist)
+    assert all(r.shard_id == index.centroid_shards[r.cluster_id] for r in rows)
+
+
+def test_build_regimes_write_the_same_partition(spark, tmp_path, monkeypatch):
+    """On separated blobs (nlist = blob count) the driver regime and the
+    forced distributed regime put the same rows together, though their
+    k-means++ draws differ (the forced run samples n - 1 rows): the
+    written cluster ids agree up to renumbering."""
+    n, nlist, kw = BUILD_CASES["blobs"]
+    df = _blob_frame(spark, n, **kw)
+    driver = build_index(df, str(tmp_path / "driver"), nlist=nlist, seed=7)
+    _force_distributed(monkeypatch, n)
+    dist = build_index(df, str(tmp_path / "dist"), nlist=nlist, seed=7)
+
+    def labels(index):
+        rows = index.vectors(spark).select("id", "cluster_id").collect()
+        return [c for _, c in sorted((r.id, r.cluster_id) for r in rows)]
+
+    pairs = set(zip(labels(driver), labels(dist)))
+    assert driver.nlist == dist.nlist == nlist == len(pairs)
+
+
+def test_sub_cap_build_runs_no_job_per_iteration(spark, tmp_path, monkeypatch):
+    """Job lock of the driver regime, read through a job group: a
+    sub-cap build runs as many Spark jobs at 6 Lloyd iterations as at
+    1, and neither the build nor an add builds a frame from a Python
+    list (a ``parallelize`` whose read is a Python-worker job)."""
+    import vector_indexer_spark.operators.index_build as IB
+    from pyspark import SparkContext
+
+    rng = np.random.default_rng(31)
+    mat = rng.normal(size=(2000, 16)).astype(np.float32)  # slow to converge
+    df = spark.createDataFrame(
+        pd.DataFrame({"id": np.arange(2000), "values": list(mat)}),
+        "id long, values array<float>",
+    )
+    batch = spark.createDataFrame(
+        pd.DataFrame({"id": np.arange(2000, 2100), "values": list(mat[:100])}),
+        "id long, values array<float>",
+    )
+    fits, lists = [], []
+    fit = IB.kmeans_fit
+    monkeypatch.setattr(
+        IB, "kmeans_fit", lambda *a, **kw: fits.append(fit(*a, **kw)) or fits[-1]
+    )
+    parallelize = SparkContext.parallelize
+    monkeypatch.setattr(
+        SparkContext,
+        "parallelize",
+        lambda self, *a, **kw: lists.append(a) or parallelize(self, *a, **kw),
+    )
+
+    def build(iters):
+        build_index(df, str(tmp_path / f"i{iters}"), nlist=16, max_iters=iters)
+
+    one = _job_count(spark, lambda: build(1))
+    six = _job_count(spark, lambda: build(6))
+    index = load_index(spark, str(tmp_path / "i6"))
+    IB.add_vectors(spark, index, batch)
+    assert [(m.n_iters, m.labels is not None) for m in fits] == [(1, True), (6, True)]
+    assert one == six, (one, six)
+    assert lists == []
 
 
 def test_save_load_roundtrip(spark, index):
@@ -370,11 +488,15 @@ def test_search_arrow_mask_overflow_routes_to_native(
 def test_range_search_full_probe_matches_brute(spark, index, vec_df, queries_df):
     # range search with full probe == brute-force distance filter
     from vector_indexer_spark.operators.search import range_search
+    from vector_indexer_spark.plans.audit import executed_plan
 
     r2 = 1.3
-    got = range_search(
-        spark, index, queries_df, radius2=r2, n_probe=index.nlist
-    ).toPandas()
+    found = range_search(spark, index, queries_df, radius2=r2, n_probe=index.nlist)
+    got = found.toPandas()
+    # the distance fold runs once per pair, not again in the join
+    # condition the radius filter is pushed into
+    final = executed_plan(found).split("== Initial Plan ==")[0]
+    assert final.count("zip_with") == 1
     exact = knn_exact(
         vec_df, queries_df, k=10_000, id_col="id", vec_col="values"
     ).toPandas()

@@ -7,10 +7,13 @@ streams differ across runtimes by design.
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from tests.test_index import _blob_frame
 from vector_indexer_spark.functions.kernels import pairwise_dist2
 from vector_indexer_spark.operators.kmeans import (
     KMeansModel,
@@ -242,3 +245,61 @@ def test_hierarchical_kernel_matches_relational_fixture(spark, embeddings):
         1 for i, r in enumerate(rows) if got[i] != rel[r.vec_id]
     )
     assert mismatches == 0
+
+
+@pytest.mark.parametrize("k", [8, 120])
+def test_driver_and_distributed_lloyd_agree(spark, vec_df, emb_np, k):
+    # the two full-batch regimes run the same Lloyd step: from one init
+    # and one RNG stream, the driver loop (n <= cap) and the Spark loop
+    # (n > cap) end on the same centroids (to float summation order) and
+    # label every row alike; k=120 runs the J2 shortlist path
+    from vector_indexer_spark.operators.kmeans import (
+        _driver_sums,
+        _partial_sums,
+        _train_full,
+    )
+
+    ids, mat = emb_np
+    mat = mat.astype(np.float64)
+    init = kmeans_pp_init(mat, k, np.random.default_rng(3))
+    driver = _train_full(
+        partial(_driver_sums, mat, seed=3), init, mat, 6, 0.0,
+        np.random.default_rng(4),
+    )
+    spark_loop = _train_full(
+        partial(_partial_sums, vec_df, vec_col="values", seed=3), init, mat, 6,
+        0.0, np.random.default_rng(4),
+    )
+    assert driver[1:] == spark_loop[1:] == (6, False)
+    np.testing.assert_allclose(driver[0], spark_loop[0], rtol=1e-9, atol=1e-9)
+    got = assign_clusters(vec_df, spark_loop[0], seed=3).collect()
+    by_id = {r.id: r.cluster_id for r in got}
+    from vector_indexer_spark.operators.kmeans import _assign_payload, _nearest
+
+    expected = _nearest(mat, _assign_payload(driver[0], 3))
+    assert [by_id[i] for i in ids] == expected.tolist()
+
+
+def test_sample_cap_below_n_forces_distributed_regime(spark):
+    # the regime switch is the sample cap: at n <= cap the model carries
+    # the driver's labels, one row below it trains over Spark and
+    # carries none. On separated blobs both regimes find the same
+    # partition (labels equal up to renumbering) although their k-means++
+    # draws differ (the forced run samples n - 1 rows)
+    df = _blob_frame(spark, 600, 8, 6, seed=21)
+    driver = kmeans_fit(df, k=6, seed=5, max_iters=20, sample_cap=600)
+    dist = kmeans_fit(df, k=6, seed=5, max_iters=20, sample_cap=599)
+    assert dist.labels is None
+    assert driver.labels is not None and driver.labels.shape == (600,)
+    got = {
+        r.id: r.cluster_id for r in assign_clusters(df, dist.centroids).collect()
+    }
+    dist_labels = np.array([got[i] for i in range(600)])
+    pairs = set(zip(driver.labels.tolist(), dist_labels.tolist()))
+    assert len(pairs) == 6  # a bijection between the two numberings
+    # and the driver labels are the assign_clusters rule on its centroids
+    own = {
+        r.id: r.cluster_id
+        for r in assign_clusters(df, driver.centroids).collect()
+    }
+    assert [own[i] for i in range(600)] == driver.labels.tolist()

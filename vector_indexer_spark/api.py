@@ -27,7 +27,6 @@ are the row ordinal; missing timestamps default to now
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -40,6 +39,7 @@ from vector_indexer_spark.operators.index_build import (
     IvfIndex,
     add_vectors,
     build_index,
+    driver_frame,
     load_index,
 )
 from vector_indexer_spark.operators.search import (
@@ -122,8 +122,9 @@ class VectorIndex:
             self._index,
             qids,
             xq.astype(np.float64),
-            lambda: self._spark.createDataFrame(
-                pd.DataFrame({"query_id": qids, "query": list(xq)}),
+            lambda: driver_frame(
+                self._spark,
+                {"query_id": qids, "query": list(xq)},
                 "query_id long, query array<float>",
             ),
             k,
@@ -192,16 +193,13 @@ def ingest_records(
         .withColumn("__pid", F.spark_partition_id())
         .persist()
     )
-    counts = sorted(
-        (r["__pid"], r["cnt"])
-        for r in ranged.groupBy("__pid").agg(F.count("*").alias("cnt")).collect()
-    )
-    offsets, acc = [], 0
-    for pid, cnt in counts:
-        offsets.append((pid, acc))
-        acc += cnt
-    odf = df.sparkSession.createDataFrame(
-        offsets, "__pid int, __offset long"
+    pids, sizes = np.array(
+        sorted(ranged.groupBy("__pid").count().collect()), dtype=np.int64
+    ).reshape(-1, 2).T
+    odf = driver_frame(
+        df.sparkSession,
+        {"__pid": pids.astype(np.int32), "__offset": np.cumsum(sizes) - sizes},
+        "__pid int, __offset long",
     )
     w = Window.partitionBy("__pid").orderBy("external_id")
     return (
@@ -212,6 +210,16 @@ def ingest_records(
         )
         .select("id", "external_id", "values", "ts")
     )
+
+
+def _vector_frame(spark: SparkSession, ids: np.ndarray, mat: np.ndarray) -> DataFrame:
+    """``(id, external_id, values, ts)`` rows of a driver matrix: both
+    ids are ``ids``, ``ts`` is now."""
+    return driver_frame(
+        spark,
+        {"id": ids, "external_id": ids, "values": list(mat)},
+        "id long, external_id long, values array<float>",
+    ).withColumn("ts", F.unix_timestamp().cast("long"))
 
 
 def build(
@@ -228,17 +236,7 @@ def build(
     if xb.ndim != 2 or xb.shape[0] == 0:
         raise ValueError("xb must be a non-empty (n, d) matrix")
     n, d = xb.shape
-    df = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "id": np.arange(n, dtype=np.int64),
-                "external_id": np.arange(n, dtype=np.int64),
-                "values": list(xb),
-                "ts": np.zeros(n, dtype=np.int64),
-            }
-        ),
-        "id long, external_id long, values array<float>, ts long",
-    ).withColumn("ts", F.unix_timestamp().cast("long"))
+    df = _vector_frame(spark, np.arange(n, dtype=np.int64), xb)
     idx = build_index(
         df, work_dir, dimension=d, nlist=nlist, seed=seed
     )
@@ -268,18 +266,7 @@ def add(
     ids = np.asarray(ids, dtype=np.int64)
     if ids.shape != (n,):
         raise ValueError("ids must be one id per row of xa")
-    df = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "id": ids,
-                "external_id": ids,
-                "values": list(xa),
-                "ts": np.zeros(n, dtype=np.int64),
-            }
-        ),
-        "id long, external_id long, values array<float>, ts long",
-    ).withColumn("ts", F.unix_timestamp().cast("long"))
-    stats = add_vectors(spark, index._index, df)
+    stats = add_vectors(spark, index._index, _vector_frame(spark, ids, xa))
     return stats["n_vectors"]
 
 

@@ -16,12 +16,13 @@ Spark-first re-expression — *tables, not files*:
   src/ivf_index.rs:269-316) becomes a small ``centroids`` Parquet
   table + a JSON metadata sidecar (S5/S6).
 - empty-list filtering + dense renumbering (P5, src/ivf_index.rs:122-146)
-  is a count join + driver-side relabel of the (tiny) centroid set.
+  is a driver-side relabel of the (tiny) centroid set by cluster counts.
 
-At 100 TB: the only full-data passes are the k-means iterations
-(O(partitions·k·d) shuffle each, see operators.kmeans) and the final
-assigned write, which shuffles once on (shard_id, cluster_id) so each
-partition directory is written by one task.
+Full-data passes, keyed on the k-means sample cap (operators.kmeans):
+at n ≤ cap, the count, the collect that trains on the driver, and one
+pass that assigns and writes; at 100 TB, the k-means iterations
+(O(partitions·k·d) shuffle each), a cached assignment feeding the
+counts, and the write, which shuffles once on ``shard_id``.
 
 Every persisted IVF tier — flat here, IVF-SQ (operators.sq), IVF-BQ
 (operators.ivfbq), IVF-RaBitQ (operators.rabitq) and IVF-PQ
@@ -44,6 +45,7 @@ import shutil
 from dataclasses import dataclass
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -63,6 +65,19 @@ from vector_indexer_spark.operators.kmeans import (
 )
 
 FORMAT_VERSION = 1
+
+
+def driver_frame(spark: SparkSession, columns: dict, schema: str) -> DataFrame:
+    """A small frame from driver columns through Arrow: a local relation,
+    read with no job (a Python-list frame's read is a Python-worker job)."""
+    return spark.createDataFrame(pd.DataFrame(columns), schema)
+
+
+def _centroid_cols(centroids: np.ndarray, vec_col: str) -> dict:
+    """``centroid_id`` and ``vec_col`` columns of a centroid frame; the
+    float32 rows round as Spark casts a double to float."""
+    cents = np.asarray(centroids, dtype=np.float32)
+    return {"centroid_id": np.arange(len(cents)), vec_col: list(cents)}
 
 
 @dataclass
@@ -110,13 +125,8 @@ class IvfHandle:
     def centroids_df(self, spark: SparkSession) -> DataFrame:
         """``(centroid_id, cvec array<float>)`` built from the driver
         matrix — the centroid frame the composable tier stages take."""
-        return spark.createDataFrame(
-            [
-                (int(i), [float(x) for x in self.centroids[i]])
-                for i in range(self.nlist)
-            ],
-            "centroid_id long, cvec array<float>",
-        )
+        cols = _centroid_cols(self.centroids, "cvec")
+        return driver_frame(spark, cols, "centroid_id long, cvec array<float>")
 
     def probe_hierarchy(self) -> tuple[np.ndarray, np.ndarray]:
         """(meta_centroids, meta_labels) over the centroid matrix, for
@@ -237,19 +247,20 @@ def coarse_stage(
     mode: str,
     max_iters: int | None,
 ) -> tuple[DataFrame, DataFrame, IvfHandle]:
-    """The coarse quantizer every tier builds on: train (K1/K2),
-    assign (J1; J2 shortlist above k=100 — the build seed drives the
-    hierarchy so training and final assignment agree), then P5 dense
-    renumber + super-centroid sharding (driver-side: the cluster set
-    is ≈4√n rows).
+    """The coarse quantizer every tier builds on: train (K1/K2), count
+    the clusters, then P5 dense renumber + super-centroid sharding
+    (driver-side: the cluster set is ≈4√n rows).
 
-    Returns ``(assigned, dense, handle)``: ``assigned`` is the cached
-    raw assignment — it is consumed twice (counts collect + the tier's
-    write), so the full-table assignment pass runs once; unpersist it
-    after the write. ``dense`` is every input column plus the dense
-    ``cluster_id`` and its ``shard_id``. ``handle`` carries the eight
-    base fields."""
-    spark = df.sparkSession
+    Returns ``(assigned, dense, handle)``: ``dense`` is every input
+    column plus the dense ``cluster_id`` and its ``shard_id``; unpersist
+    ``assigned`` after the write. At n ≤ the k-means sample cap the
+    counts come from the driver's labels and ``dense`` is ``assigned``,
+    one uncached pass that assigns rows to the dense centroids as
+    :func:`append_rows` does. IVF-SQ and IVF-BQ read it twice, uncached;
+    the assignment is a pure function of each Arrow batch, so both reads
+    agree. Above the cap ``assigned`` is the cached raw assignment
+    (counts + write) joined to the raw→dense map. ``handle`` carries
+    the eight base fields."""
     model = kmeans_fit(
         df,
         nlist or suggest_nlist(n),
@@ -258,22 +269,15 @@ def coarse_stage(
         seed=seed,
         mode=mode,
     )
-    assigned = assign_clusters(
-        df, model.centroids, vec_col=vec_col, out_col="__raw_cluster", seed=seed
-    ).cache()
-    counts = {
-        r["__raw_cluster"]: r["cnt"]
-        for r in assigned.groupBy("__raw_cluster").agg(F.count("*").alias("cnt")).collect()
-    }
+    if model.labels is None:
+        assigned = assign_clusters(
+            df, model.centroids, vec_col=vec_col, out_col="__raw_cluster", seed=seed
+        ).cache()
+        counts = dict(assigned.groupBy("__raw_cluster").count().collect())
+    else:
+        assigned, counts = None, dict(enumerate(np.bincount(model.labels)))
     relabel, centroids, eff_nlist, n_sh, shard_of = dense_relabel_and_shards(
         counts, model.centroids, seed
-    )
-    mapping = spark.createDataFrame(
-        [(int(old), int(new), int(shard_of[new])) for old, new in relabel.items()],
-        "__raw_cluster long, cluster_id long, shard_id long",
-    )
-    dense = assigned.join(F.broadcast(mapping), "__raw_cluster").drop(
-        "__raw_cluster"
     )
     handle = IvfHandle(
         path=path,
@@ -285,16 +289,27 @@ def coarse_stage(
         centroids=centroids,
         centroid_shards=shard_of,
     )
+    if assigned is None:
+        dense = attach_shards(
+            assign_clusters(df, centroids, vec_col=vec_col, seed=seed), handle
+        )
+        return dense, dense, handle
+    cols = {"__raw_cluster": list(relabel), "cluster_id": np.arange(eff_nlist)}
+    mapping = driver_frame(
+        df.sparkSession,
+        {**cols, "shard_id": shard_of},
+        "__raw_cluster long, cluster_id long, shard_id long",
+    )
+    dense = assigned.join(F.broadcast(mapping), "__raw_cluster").drop("__raw_cluster")
     return assigned, dense, handle
 
 
 def attach_shards(df: DataFrame, index: IvfHandle) -> DataFrame:
     """Append each row's ``shard_id`` from its ``cluster_id`` through
     the index's centroid→shard map (an nlist-row broadcast)."""
-    shard_map = df.sparkSession.createDataFrame(
-        [(int(c), int(s)) for c, s in enumerate(index.centroid_shards)],
-        "cluster_id long, shard_id long",
-    )
+    shards = index.centroid_shards
+    cols = {"cluster_id": np.arange(len(shards)), "shard_id": shards}
+    shard_map = driver_frame(df.sparkSession, cols, "cluster_id long, shard_id long")
     return df.join(F.broadcast(shard_map), "cluster_id").select(
         *df.columns, "shard_id"
     )
@@ -333,15 +348,12 @@ def write_centroids(
     The flat and PQ tiers name the vector column ``vector``, the SQ,
     BQ and RaBitQ tiers ``cvec``; only IVF-BQ stores its per-cluster
     ``rho`` scales here."""
-    rows = [
-        (int(i), [float(x) for x in centroids[i]], int(shard_of[i]))
-        for i in range(len(centroids))
-    ]
+    cols = {**_centroid_cols(centroids, vec_col), "shard_id": shard_of}
     schema = f"centroid_id long, {vec_col} array<float>, shard_id long"
     if rhos is not None:
-        rows = [(*r, float(rho)) for r, rho in zip(rows, rhos)]
+        cols["rho"] = np.asarray(rhos, dtype=np.float64)
         schema += ", rho double"
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+    driver_frame(spark, cols, schema).coalesce(1).write.mode(
         "overwrite"
     ).parquet(os.path.join(path, "centroids"))
 
@@ -639,9 +651,8 @@ def delete_vectors(
     layout survives. Returns ``{rows_before, rows_after, n_deleted}``.
     """
     if not isinstance(ids, DataFrame):
-        ids = spark.createDataFrame(
-            [(int(i),) for i in ids], f"{index.id_col} long"
-        )
+        col = index.id_col
+        ids = driver_frame(spark, {col: np.fromiter(ids, np.int64)}, f"{col} long")
     ids = ids.select(F.col(ids.columns[0]).alias(index.id_col))
     src = index.vectors_path
     kept = spark.read.parquet(src).join(
@@ -771,12 +782,8 @@ def add_vectors(
     it matters), route each row to its cluster's shard, and append
     shard-partitioned, cluster-sorted files to the live vector table.
 
-    Assignment reuses :func:`assign_clusters` (J1 exact / J2
-    hierarchical above the same threshold as build, same seed), so an
-    added row lands in exactly the cluster a from-scratch build with
-    these centroids would put it in — search pruning stays correct by
-    construction, which ``ivf_add_search_fixed`` proves against a
-    whole-table SQL oracle.
+    Assignment is :func:`append_rows`' (a sub-cap build's own), which
+    ``ivf_add_search_fixed`` proves against a whole-table SQL oracle.
 
     At scale: the append is one shuffle of the NEW batch only
     (repartition on shard_id); the live table is never read or

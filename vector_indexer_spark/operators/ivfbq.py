@@ -59,6 +59,7 @@ from vector_indexer_spark.operators.index_build import (
     attach_shards,
     check_build_input,
     coarse_stage,
+    driver_frame,
     handle_meta,
     load_layout,
     read_meta,
@@ -452,10 +453,8 @@ class IvfBqIndex(IvfHandle):
     rhos: object  # (nlist,) float64 ndarray — per-cluster ADC scales
 
     def scales_df(self, spark) -> DataFrame:
-        return spark.createDataFrame(
-            [(int(i), float(self.rhos[i])) for i in range(self.nlist)],
-            "cluster_id long, rho double",
-        )
+        cols = {"cluster_id": np.arange(self.nlist), "rho": self.rhos}
+        return driver_frame(spark, cols, "cluster_id long, rho double")
 
 
 def build_ivfbq_index(

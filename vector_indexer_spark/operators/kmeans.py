@@ -11,12 +11,14 @@ k-means++ init K3/K4 src/kmeans.rs:152-310), re-architected for Spark:
   ``np.random.default_rng(seed)`` — reproducible builds, though not
   bit-identical to the reference's Rust ``StdRng`` stream (SURVEY §7
   "what's hard" #1; we match invariants, not RNG streams).
-- **Full-batch mode** (K2 — the distributed default): each iteration
-  is one Spark job — broadcast the (k,d) centroid matrix, assign every
-  row (J1) and emit *per-Arrow-batch partial sums* from
-  ``mapInPandas`` (map-side combine), then reduce the ≤ partitions×k
-  partials to k rows. The shuffle per iteration is O(partitions·k·d)
-  — independent of n — which is what survives a 100 TB table.
+- **Full-batch mode** (K2): when the init sample is the whole table
+  (n ≤ ``sample_cap``) Lloyd's iterations run in NumPy on the driver,
+  with no Spark job. Above the cap each iteration is one Spark job over
+  the cached input — broadcast the (k,d) centroid matrix, assign every
+  row (J1) and emit *per-Arrow-batch partial sums* from ``mapInPandas``
+  (map-side combine), then reduce the ≤ partitions×k partials to k
+  rows. The shuffle per iteration is O(partitions·k·d) — independent
+  of n — which is what survives a 100 TB table.
 - **Mini-batch mode** (K1 — parity behavior): Sculley mini-batch with
   per-cluster accumulated counts and learning rate 1/count
   (src/kmeans.rs:728-787). Batches are drawn on the driver from one
@@ -30,13 +32,14 @@ k-means++ init K3/K4 src/kmeans.rs:152-310), re-architected for Spark:
   points (src/kmeans.rs:312-331).
 
 The driver holds only (k,d) float64 matrices — ~60 MB at k=10k,
-d=1536 — never the data.
+d=1536 — and the ≤cap-row sample, never more of the data.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 from dataclasses import dataclass
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -52,8 +55,8 @@ from vector_indexer_spark.config import (
 )
 from vector_indexer_spark.functions.kernels import (
     assign_nearest,
+    assign_nearest_hierarchical,
     min_dist2,
-    pairwise_dist2,
     stack_arrays,
 )
 
@@ -66,6 +69,7 @@ class KMeansModel:
     n_iters: int
     converged: bool
     inertia: float | None = None
+    labels: np.ndarray | None = None  # (n,) when trained on the driver
 
     @property
     def k(self) -> int:
@@ -126,21 +130,20 @@ def kmeans_pp_init(mat: np.ndarray, k: int, rng: np.random.Generator) -> np.ndar
 
 
 def _collect_sample(
-    df: DataFrame, vec_col: str, cap: int, seed: int
+    df: DataFrame, vec_col: str, cap: int, seed: int, n: int | None = None
 ) -> tuple[np.ndarray, int]:
-    """Seeded sample of ≤cap vectors, collected to the driver as (m,d),
-    plus the row count ``n`` of ``df`` it was drawn from."""
-    n = df.count()
+    """Seeded sample of ≤cap vectors, collected to the driver through
+    Arrow as (m,d), plus the row count ``n`` of ``df`` (counted unless
+    given). At ``n ≤ cap`` it is the whole table, in collect order."""
+    n = df.count() if n is None else n
     if n == 0:
         raise ValueError("cannot fit k-means on an empty DataFrame")
-    if n <= cap:
-        rows = df.select(vec_col).collect()
-    else:
+    col = df.select(vec_col)
+    if n > cap:
         # oversample slightly so the post-limit count is ~cap even with
         # Bernoulli variance, then hard-limit for determinism of size
-        frac = min(1.0, (cap * 1.2) / n)
-        rows = df.select(vec_col).sample(False, frac, seed=seed).limit(cap).collect()
-    return stack_arrays([r[0] for r in rows]), n
+        col = col.sample(False, min(1.0, (cap * 1.2) / n), seed=seed).limit(cap)
+    return stack_arrays(col.toPandas()[vec_col]), n
 
 
 # ---------------------------------------------------------------------------
@@ -149,6 +152,39 @@ def _collect_sample(
 
 
 HIERARCHICAL_K_THRESHOLD = 100  # reference switch point (kmeans.rs:445-459)
+
+
+def _assign_payload(
+    centroids: np.ndarray, seed: int, hierarchical: bool | str = "auto"
+) -> tuple:
+    """``(centroids, meta, meta_labels)`` for :func:`_nearest`; the J2
+    meta shortlist (``"auto"``: k > 100) is seeded so that training,
+    build placement and adds agree."""
+    cents = np.asarray(centroids, dtype=np.float64)
+    if hierarchical == "auto":
+        hierarchical = cents.shape[0] > HIERARCHICAL_K_THRESHOLD
+    if hierarchical:
+        return (cents, *build_centroid_hierarchy(cents, seed))
+    return cents, None, None
+
+
+def _nearest(pts: np.ndarray, payload: tuple) -> np.ndarray:
+    """J1 exact or J2 shortlist assignment (:func:`_assign_payload`)."""
+    cents, meta, meta_labels = payload
+    if meta is None:
+        return assign_nearest(pts, cents)
+    return assign_nearest_hierarchical(pts, cents, meta, meta_labels)
+
+
+def _cluster_sums(
+    pts: np.ndarray, labels: np.ndarray, k: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """One Lloyd step's per-cluster ``(sums (k,d), counts (k,))``."""
+    order = np.argsort(labels, kind="stable")
+    ids, starts = np.unique(labels[order], return_index=True)
+    sums = np.zeros((k, pts.shape[1]))
+    sums[ids] = np.add.reduceat(pts[order], starts, axis=0)
+    return sums, np.bincount(labels, minlength=k)
 
 
 def assign_clusters(
@@ -169,37 +205,18 @@ def assign_clusters(
     point) assignment goes through the two-stage meta-centroid
     shortlist (J2/W3/K7) — O(√k) candidate centroids per point.
     """
-    spark = df.sparkSession
-    cents = np.asarray(centroids, dtype=np.float64)
-    use_hier = (
-        cents.shape[0] > HIERARCHICAL_K_THRESHOLD
-        if hierarchical == "auto"
-        else bool(hierarchical)
+    bc = df.sparkSession.sparkContext.broadcast(
+        _assign_payload(centroids, seed, hierarchical)
     )
-    if use_hier:
-        meta, meta_labels = build_centroid_hierarchy(cents, seed)
-        bc = spark.sparkContext.broadcast((cents, meta, meta_labels))
-    else:
-        bc = spark.sparkContext.broadcast((cents, None, None))
     cols = df.columns
 
     def _assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        c, meta_, labels_ = bc.value
-        from vector_indexer_spark.functions.kernels import (
-            assign_nearest_hierarchical,
-        )
-
+        payload = bc.value
         for pdf in batches:
             if pdf.empty:
                 continue
-            pts = stack_arrays(pdf[vec_col])
             pdf = pdf.copy()
-            if meta_ is not None:
-                pdf[out_col] = assign_nearest_hierarchical(
-                    pts, c, meta_, labels_
-                )
-            else:
-                pdf[out_col] = assign_nearest(pts, c)
+            pdf[out_col] = _nearest(stack_arrays(pdf[vec_col]), payload)
             yield pdf
 
     # build a fresh StructType — StructType.add would mutate the
@@ -217,7 +234,8 @@ def _partial_sums(
     seed: int = 42,
     n_parts: int | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """One full-batch iteration's statistics: per-cluster (sum, count).
+    """One distributed full-batch iteration's statistics: per-cluster
+    (sum, count).
 
     Map-side: each Arrow batch emits ≤k rows of (cluster_id, count,
     vector-sum). Reduce-side: groupBy(cluster_id) folds the partials.
@@ -229,44 +247,19 @@ def _partial_sums(
     switch, src/kmeans.rs:445-459) — per-iteration flops drop from
     O(n·k·d) to O(n·√k·d).
     """
-    spark = df.sparkSession
     k, d = centroids.shape
-    c64 = np.asarray(centroids, dtype=np.float64)
-    if k > HIERARCHICAL_K_THRESHOLD:
-        # same seed as the final assign_clusters call so training and
-        # index placement use identical meta shortlists
-        meta, meta_labels = build_centroid_hierarchy(c64, seed=seed)
-        bc = spark.sparkContext.broadcast((c64, meta, meta_labels))
-    else:
-        bc = spark.sparkContext.broadcast((c64, None, None))
+    bc = df.sparkSession.sparkContext.broadcast(_assign_payload(centroids, seed))
 
     def _partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        c, meta_, mlabels_ = bc.value
-        from vector_indexer_spark.functions.kernels import (
-            assign_nearest_hierarchical,
-        )
-
+        payload = bc.value
         for pdf in batches:
             if pdf.empty:
                 continue
             pts = stack_arrays(pdf[vec_col])
-            if meta_ is not None:
-                labels = assign_nearest_hierarchical(pts, c, meta_, mlabels_)
-            else:
-                labels = assign_nearest(pts, c)
-            uniq = np.unique(labels)
-            sums = np.zeros((len(uniq), c.shape[1]))
-            counts = np.zeros(len(uniq), dtype=np.int64)
-            for j, u in enumerate(uniq):
-                mask = labels == u
-                sums[j] = pts[mask].sum(axis=0)
-                counts[j] = int(mask.sum())
+            sums, counts = _cluster_sums(pts, _nearest(pts, payload), k)
+            live = np.flatnonzero(counts)
             yield pd.DataFrame(
-                {
-                    "cluster_id": uniq,
-                    "cnt": counts,
-                    "vsum": list(sums),
-                }
+                {"cluster_id": live, "cnt": counts[live], "vsum": list(sums[live])}
             )
 
     partials = df.select(vec_col).mapInPandas(
@@ -305,6 +298,12 @@ def _partial_sums(
     return sums, counts
 
 
+def _driver_sums(mat: np.ndarray, centroids: np.ndarray, seed: int):
+    """:func:`_partial_sums` for a table held on the driver."""
+    labels = _nearest(mat, _assign_payload(centroids, seed))
+    return _cluster_sums(mat, labels, centroids.shape[0])
+
+
 def _centroid_delta(old: np.ndarray, new: np.ndarray) -> float:
     """A4 — RMS centroid movement (src/kmeans.rs:333-351)."""
     return float(np.sqrt(np.mean((new - old) ** 2)))
@@ -326,50 +325,59 @@ def kmeans_fit(
     mode: str = "full",
     sample_cap: int = KMEANS_INIT_SAMPLE_CAP,
 ) -> KMeansModel:
-    """Train k centroids on ``df[vec_col]``. Returns the model only;
-    call :func:`assign_clusters` for labels (kept separate so the
-    build pipeline can fuse assignment with the shard write)."""
+    """Train k centroids on ``df[vec_col]``. At n ≤ ``sample_cap`` the
+    fit runs on the driver and ``model.labels`` holds every row's
+    :func:`assign_clusters` label, in collect order; above it None."""
     if k <= 0:
         raise ValueError("k must be positive")
     if mode not in ("full", "minibatch"):
         raise ValueError(f"unknown mode {mode!r}")
 
     rng = np.random.default_rng(seed)
-    # The training loop re-scans the input every iteration — pin it.
+    n = df.count()
+    whole = n <= sample_cap
+    # The distributed loop re-scans the input every iteration — pin it.
     # (On a 100 TB table callers should pre-cache / use DISK_ONLY or
     # accept re-scans; we only cache when Spark says it isn't already.)
     we_cached = False
-    if mode == "full" and df.storageLevel.useMemory is False:
+    if mode == "full" and not whole and df.storageLevel.useMemory is False:
         df = df.cache()
         we_cached = True
     try:
-        sample, n_est = _collect_sample(df, vec_col, sample_cap, seed)
+        sample, _ = _collect_sample(df, vec_col, sample_cap, seed, n)
         if max_iters is None:
-            max_iters = calculate_max_iterations(n_est)
+            max_iters = calculate_max_iterations(n)
         centroids = kmeans_pp_init(sample, k, rng)
 
         if mode == "minibatch":
             centroids, n_iters, converged = _train_minibatch(
-                sample, centroids, n_est, max_iters, tol, rng
+                sample, centroids, n, max_iters, tol, rng
             )
         else:
+            stats = partial(_driver_sums, sample, seed=seed) if whole else partial(
+                _partial_sums, df, vec_col=vec_col, seed=seed,
+                # plan→RDD conversion lists input files: count once
+                n_parts=df.rdd.getNumPartitions(),
+            )
             centroids, n_iters, converged = _train_full(
-                df, vec_col, centroids, sample, max_iters, tol, rng, seed
+                stats, centroids, sample, max_iters, tol, rng
             )
     finally:
         if we_cached:
             df.unpersist()
-    return KMeansModel(centroids=centroids, n_iters=n_iters, converged=converged)
+    labels = _nearest(sample, _assign_payload(centroids, seed)) if whole else None
+    return KMeansModel(
+        centroids=centroids, n_iters=n_iters, converged=converged, labels=labels
+    )
 
 
-def _train_full(df, vec_col, centroids, sample, max_iters, tol, rng, seed=42):
+def _train_full(stats, centroids, sample, max_iters, tol, rng):
+    """K2 — Lloyd's; ``stats(centroids)`` gives per-cluster ``(sums,
+    counts)`` (:func:`_driver_sums` or :func:`_partial_sums`)."""
     converged = False
     it = 0
-    n_parts = df.rdd.getNumPartitions()  # invariant across iterations
     for it in range(1, max_iters + 1):
-        sums, counts = _partial_sums(
-            df, centroids, vec_col, seed=seed, n_parts=n_parts
-        )
+        sums, counts = stats(centroids)
         new = centroids.copy()
         nonzero = counts > 0
         new[nonzero] = sums[nonzero] / counts[nonzero, None]

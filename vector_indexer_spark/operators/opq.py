@@ -45,7 +45,11 @@ from pyspark.sql import functions as F
 
 from vector_indexer_spark.functions.kernels import stack_arrays
 from vector_indexer_spark.ioutil import atomic_write_json
-from vector_indexer_spark.operators.index_build import read_meta, write_meta
+from vector_indexer_spark.operators.index_build import (
+    driver_frame,
+    read_meta,
+    write_meta,
+)
 from vector_indexer_spark.operators.kmeans import KMEANS_INIT_SAMPLE_CAP
 from vector_indexer_spark.operators.pca import pca_train
 from vector_indexer_spark.operators.pq import (
@@ -98,6 +102,15 @@ def eigenvalue_allocation(variances: np.ndarray, m: int) -> np.ndarray:
     return np.concatenate([np.sort(b) for b in buckets]).astype(np.int64)
 
 
+
+def _write_rotation(spark: SparkSession, rotation: np.ndarray, path: str) -> None:
+    """The ``(row_id, basis)`` rotation table, one row per basis row."""
+    cols = {"row_id": np.arange(len(rotation), dtype=np.int32), "basis": list(rotation)}
+    driver_frame(spark, cols, "row_id INT, basis ARRAY<DOUBLE>").coalesce(
+        1
+    ).write.mode("overwrite").parquet(os.path.join(path, "rotation"))
+
+
 @dataclass
 class OPQModel:
     """Learned rotation + trained PQ codebooks (rotated space)."""
@@ -116,15 +129,7 @@ class OPQModel:
 
     def save(self, spark: SparkSession, path: str) -> None:
         os.makedirs(path, exist_ok=True)
-        rows = [
-            (int(i), [float(x) for x in self.rotation[i]])
-            for i in range(self.rotation.shape[0])
-        ]
-        spark.createDataFrame(
-            rows, "row_id INT, basis ARRAY<DOUBLE>"
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(path, "rotation")
-        )
+        _write_rotation(spark, self.rotation, path)
         self.pq.save(spark, os.path.join(path, "pq"))
         atomic_write_json(
             os.path.join(path, "opq_meta.json"),
@@ -342,16 +347,7 @@ def build_ivfopq_index(
         max_iters=max_iters,
     )
     os.makedirs(path, exist_ok=True)
-    spark = df.sparkSession
-    spark.createDataFrame(
-        [
-            (int(i), [float(x) for x in rotation[i]])
-            for i in range(rotation.shape[0])
-        ],
-        "row_id INT, basis ARRAY<DOUBLE>",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(path, "rotation")
-    )
+    _write_rotation(df.sparkSession, rotation, path)
     write_meta(
         path,
         "ivfopq_meta.json",

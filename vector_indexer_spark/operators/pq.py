@@ -59,6 +59,7 @@ from vector_indexer_spark.operators.index_build import (
     attach_shards,
     check_build_input,
     coarse_stage,
+    driver_frame,
     handle_meta,
     load_layout,
     read_meta,
@@ -108,15 +109,14 @@ class PQModel:
     # -- persistence: a tall codeword table + JSON sidecar, the same
     # layout discipline as the IVF index (centroid parquet + meta.json)
     def save(self, spark: SparkSession, path: str) -> None:
-        rows = [
-            (j, c, [float(x) for x in self.codebooks[j, c]])
-            for j in range(self.m)
-            for c in range(self.ksub)
-        ]
-        df = spark.createDataFrame(
-            rows, "subspace INT, code INT, codeword ARRAY<DOUBLE>"
-        )
-        df.coalesce(1).write.mode("overwrite").parquet(
+        m, ksub, dsub = self.codebooks.shape
+        cols = {
+            "subspace": np.repeat(np.arange(m, dtype=np.int32), ksub),
+            "code": np.tile(np.arange(ksub, dtype=np.int32), m),
+            "codeword": list(self.codebooks.reshape(m * ksub, dsub)),
+        }
+        schema = "subspace INT, code INT, codeword ARRAY<DOUBLE>"
+        driver_frame(spark, cols, schema).coalesce(1).write.mode("overwrite").parquet(
             os.path.join(path, "codebooks")
         )
         meta = {

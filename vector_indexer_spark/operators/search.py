@@ -73,6 +73,7 @@ from vector_indexer_spark.operators.index_build import (
     IvfHandle,
     IvfIndex,
     collect_centroids,
+    driver_frame,
 )
 
 # Above this many estimated local-top-k rows, the final merge falls
@@ -344,13 +345,12 @@ def probe_pairs(spark: SparkSession, plan: ProbePlan) -> DataFrame:
     pruned scan against, so it scores exactly the clusters the scan
     read — flat or hierarchical probes alike."""
     n_probe = plan.probe_ids.shape[1]
-    return spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "query_id": np.repeat(plan.qids, n_probe),
-                "cluster_id": plan.probe_ids.reshape(-1).astype(np.int64),
-            }
-        ),
+    return driver_frame(
+        spark,
+        {
+            "query_id": np.repeat(plan.qids, n_probe),
+            "cluster_id": plan.probe_ids.reshape(-1).astype(np.int64),
+        },
         "query_id long, cluster_id long",
     )
 
@@ -1043,6 +1043,9 @@ def range_search(
         spark, index, queries, min(n_probe, MAX_N_PROBE), query_id_col,
         query_col, vectors, filter_expr,
     )
+    # a generator's output is never inlined, so the fold runs once per
+    # pair, not again in the join condition the filter is pushed into
+    cand = cand.withColumn("dist2", F.explode(F.array("dist2")))
     return cand.filter(F.col("dist2") <= F.lit(float(radius2)))
 
 
